@@ -7,34 +7,33 @@ outdegree > 0 (else votes halt), 2) with indegree == 0 votes halt, else
 3) adopts a larger incoming label or votes halt. Combiner: (max, -inf)
 (:149-152). Labels are exact integers — the reference requires **max**
 label (not min) and we match that.
+
+The program is a set of Column expressions that the Pregel runtime
+fuses into each superstep's join projection; no row leaves the JVM.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..pregel import PregelContext, PregelResult, pregel
 
 
-def _cc_program(pdf: pd.DataFrame, ctx: PregelContext) -> pd.DataFrame:
-    label = pdf["state"].to_numpy(copy=True)
-    halt = np.zeros(len(pdf), dtype=bool)
+def _cc_program(ctx: PregelContext) -> dict[str, Column]:
+    label, outdeg = F.col("state"), F.col("outdegree")
+    halt = outdeg == 0
     if ctx.round > 0:
-        incoming = pdf["incoming"].to_numpy()
-        indeg = pdf["indegree"].to_numpy()
-        adopt = (indeg != 0) & (label < incoming)
-        halt |= indeg == 0
-        halt |= (indeg != 0) & ~adopt
-        label = np.where(adopt, incoming, label)
-    outdeg = pdf["outdegree"].to_numpy()
-    pdf["out"] = np.where(outdeg > 0, label, pdf["out"].to_numpy())
-    halt |= outdeg == 0
-    pdf["state"] = label
-    pdf["halt"] = halt
-    return pdf
+        # a vertex with no in-edges never adopts, so ~adopt is its halt vote
+        adopt = (F.col("indegree") != 0) & (label < F.col("incoming"))
+        halt = halt | ~adopt
+        label = F.when(adopt, F.col("incoming")).otherwise(label)
+    return {
+        "state": label,
+        "out": F.when(outdeg > 0, label).otherwise(F.col("out")),
+        "halt": halt,
+    }
 
 
 def connected_components(

@@ -8,41 +8,45 @@ or votes to halt (global). Broadcast: out := score/outdegree when
 outdegree > 0. Message combiner: (add, 0) (pregel_pagerank.hpp:202-203).
 Defaults α=0.15, tolerance=1e-5 (pregel_pagerank.hpp:64-69).
 
-The program body is a vectorized NumPy kernel over Arrow batches — the
-Spark analog of the per-vertex lambda, with no per-row Python.
+The program is a set of Column expressions that the Pregel runtime fuses
+into each superstep's join projection — the Spark analog of the
+per-vertex lambda, with no row leaving the JVM.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..pregel import PregelContext, PregelResult, pregel
 
 
+def _pagerank_step(score: Column, alpha: float, tolerance: float,
+                   local_converge: bool, ctx: PregelContext):
+    """The shared score update: ``(new score, |Δscore| or None, votes)``
+    where ``votes`` sets ``active`` (local) or ``halt`` (global)."""
+    if ctx.round == 0:
+        return F.lit(1.0), None, {}
+    new = F.lit(alpha) + F.lit(1.0 - alpha) * F.col("incoming")
+    resid = F.abs(new - score)
+    converged = resid < tolerance
+    votes = {"active": ~converged} if local_converge else {"halt": converged}
+    return new, resid, votes
+
+
+def _broadcast(score: Column) -> Column:
+    outdeg = F.col("outdegree")
+    return F.when(outdeg > 0, score / outdeg).otherwise(F.col("out"))
+
+
 def make_pagerank_program(alpha: float = 0.15, tolerance: float = 1e-5,
                           local_converge: bool = False):
-    def program(pdf: pd.DataFrame, ctx: PregelContext) -> pd.DataFrame:
-        score = pdf["state"].to_numpy(copy=True)
-        if ctx.round == 0:
-            score[:] = 1.0
-        else:
-            incoming = pdf["incoming"].to_numpy()
-            old = score.copy()
-            score = alpha + (1.0 - alpha) * incoming
-            converged = np.abs(score - old) < tolerance
-            if local_converge:
-                pdf["active"] = ~converged
-            else:
-                pdf["halt"] = converged
-        outdeg = pdf["outdegree"].to_numpy()
-        pdf["out"] = np.where(
-            outdeg > 0, score / np.maximum(outdeg, 1), pdf["out"].to_numpy()
+    def program(ctx: PregelContext) -> dict[str, Column]:
+        score, _, votes = _pagerank_step(
+            F.col("state"), alpha, tolerance, local_converge, ctx
         )
-        pdf["state"] = score
-        return pdf
+        return {"state": score, "out": _broadcast(score), **votes}
 
     return program
 
@@ -53,33 +57,17 @@ def make_pagerank_residual_program(alpha: float = 0.15, tolerance: float = 1e-5,
     ``struct<score:double, residual:double>`` — the reference's
     arbitrary-POD vertex state (interfaces/pregel.hpp:508-663): the
     per-round |Δscore| rides in the state instead of being recomputed
-    outside the loop. Struct fields arrive flattened as
-    ``state__score``/``state__residual`` NumPy columns (see
-    alp_spark.pregel), so the body stays fully vectorized."""
+    outside the loop. Fields are read as ``state.score`` and the new
+    state is returned as one ``F.struct``."""
 
-    def program(pdf: pd.DataFrame, ctx: PregelContext) -> pd.DataFrame:
-        score = pdf["state__score"].to_numpy(copy=True)
-        resid = pdf["state__residual"].to_numpy(copy=True)
-        if ctx.round == 0:
-            score[:] = 1.0
-            resid[:] = np.inf
-        else:
-            incoming = pdf["incoming"].to_numpy()
-            old = score.copy()
-            score = alpha + (1.0 - alpha) * incoming
-            resid = np.abs(score - old)
-            converged = resid < tolerance
-            if local_converge:
-                pdf["active"] = ~converged
-            else:
-                pdf["halt"] = converged
-        outdeg = pdf["outdegree"].to_numpy()
-        pdf["out"] = np.where(
-            outdeg > 0, score / np.maximum(outdeg, 1), pdf["out"].to_numpy()
+    def program(ctx: PregelContext) -> dict[str, Column]:
+        score, resid, votes = _pagerank_step(
+            F.col("state.score"), alpha, tolerance, local_converge, ctx
         )
-        pdf["state__score"] = score
-        pdf["state__residual"] = resid
-        return pdf
+        if resid is None:
+            resid = F.lit(float("inf"))
+        state = F.struct(score.alias("score"), resid.alias("residual"))
+        return {"state": state, "out": _broadcast(score), **votes}
 
     return program
 

@@ -37,8 +37,9 @@ enumerating triangles through the huge dropped set would cost more
 than a fresh pass — the loop falls back to the round-1 full
 enumeration over the (now small) survivor set; both paths are exact.
 
-Scale shape: dropped sets are broadcast (they are small by the
-fallback gate); the adjacency side never moves; state is one
+Scale shape: dropped sets are broadcast up to ``BROADCAST_NNZ_THRESHOLD``
+edges and shuffle-joined above it (the fallback gate bounds them only
+relative to the survivors); the adjacency side never moves; state is one
 (src, dst, sup) frame localCheckpoint'ed per round (plan truncation —
 the un-truncated nested plan OOM'd the driver during analysis by
 round ~9); ONE census action per round.
@@ -52,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, SRC
+from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
 
 
 @dataclass
@@ -148,8 +150,11 @@ def k_truss(
             adj = prev_e.unionAll(
                 prev_e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
             ).select(F.col(SRC).alias("a"), F.col(DST).alias("w"))
+            drop_ab = dropped.select(F.col(SRC).alias("a"), F.col(DST).alias("b"))
+            if n_drop <= BROADCAST_NNZ_THRESHOLD:
+                drop_ab = F.broadcast(drop_ab)
             tri = (
-                F.broadcast(dropped.select(F.col(SRC).alias("a"), F.col(DST).alias("b")))
+                drop_ab
                 .join(adj, on="a")
                 .where(F.col("w") != F.col("b"))
                 .join(

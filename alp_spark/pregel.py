@@ -6,13 +6,15 @@ superstep loop over one state DataFrame; semantics traced from the
 reference ``execute`` (pregel.hpp:650-920):
 
 1. the vertex program runs on ACTIVE vertices only (masked eWiseLambda,
-   pregel.hpp:765-804). Physically: the state frame is split by the
-   ``active`` column, ONLY the active slice goes through the Arrow
-   ``mapInPandas`` program pass, and the inactive slice is unioned back
-   via a pure-Column projection — so the per-superstep Python/Arrow cost
-   is O(active), not O(n). (Late supersteps of CC/label-prop have tiny
-   frontiers; serializing all n rows through Python for them was the
-   round-1 scale bug.)
+   pregel.hpp:765-804). A program is a function ``ctx -> {column:
+   Column}`` that builds Column expressions over the superstep frame
+   (``id, state, out, incoming, active, outdegree, indegree``; struct
+   state fields read as ``F.col("state.<field>")``) and returns new
+   values for any of ``state, out, active, halt``. The runtime applies
+   them under ``F.when`` on the round-entry ``active`` flag in the
+   projection right after the message join, so the program is fused
+   into that join's codegen stage and never leaves the JVM; inactive
+   rows keep their values.
 2. halt check: terminate when every vertex that ran this round voted to
    halt (foldl over the round-entry active set, pregel.hpp:812-814);
 3. the active set only shrinks (sparsification, pregel.hpp:831-833);
@@ -33,21 +35,23 @@ reference ``execute`` (pregel.hpp:650-920):
    the exchange join input shrinks with the frontier. The reference
    applies sparsify AFTER the vxm; in this loop's phase (exchange at
    round entry) that lands between assembling ``incoming`` and running
-   the program. Liveness is tracked in the ``_out_live`` column;
-   ``out_nnz`` (the trigger's cost input) is carried on the driver.
-   Measured (scripts/bench_pregel_sparsify.py, BASELINE.md round 5):
-   the reference's "ALWAYS is slower" result does NOT carry over —
-   here sparsify is one fused predicate, not a workspace compaction,
-   so all strategies sit within ~7% on the CC flood (ALWAYS slightly
-   ahead). Default stays 'none' for reference parity; enabling it is
-   safe and pays on early-decaying frontiers.
+   the program, as one more masked Column in the same projection.
+   Liveness is tracked in the ``_out_live`` column; ``out_nnz`` (the
+   trigger's cost input) is carried on the driver. Measured
+   (scripts/bench_pregel_sparsify.py, BASELINE.md round 5): the
+   reference's "ALWAYS is slower" result does NOT carry over — all
+   strategies sit within ~7% on the CC flood (ALWAYS slightly ahead).
+   Default stays 'none' for reference parity; enabling it is safe and
+   pays on early-decaying frontiers.
 
-Per-superstep Spark cost: one message groupBy (shuffle, map-side partial
-agg absorbs hub in-degree skew), one id-join against the ACTIVE slice,
-one ``mapInPandas`` program pass over O(active) rows, one small stats
-action. State is localCheckpoint'ed every round to truncate lineage and
-parquet-checkpointed with lineage + metrics every ``checkpoint_every``
-rounds (resumable — north rule).
+Per-superstep Spark cost: ONE SQL execution. It runs the message
+groupBy (shuffle; map-side partial agg absorbs hub in-degree skew), the
+state ⋈ messages join with the vertex program fused into its
+projection, and an eager ``localCheckpoint`` that truncates lineage.
+The halt vote, active census and program-row count ride on that same
+action as ``observe`` metrics, so there is no separate stats job. State
+is also parquet-checkpointed with lineage + metrics every
+``checkpoint_every`` rounds (resumable — north rule).
 
 The per-vertex ``PregelState`` fields (pregel.hpp:266-326) map to columns
 ``active, halt, outdegree, indegree, id`` plus context globals
@@ -56,11 +60,11 @@ The per-vertex ``PregelState`` fields (pregel.hpp:266-326) map to columns
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType, _parse_datatype_string
 
@@ -86,27 +90,17 @@ class PregelResult:
     history: list[dict] = field(default_factory=list)
 
 
-VertexProgram = Callable[[pd.DataFrame, PregelContext], pd.DataFrame]
+VertexProgram = Callable[[PregelContext], dict[str, Column]]
 
 _STATE_COLS = ["id", "state", "out", "active", "halt", "outdegree", "indegree"]
+_PROGRAM_OUT = ("state", "out", "active", "halt")
 _SPARSIFY = ("none", "always", "when_reduced", "when_halved")
 
 
-# --- struct-typed state/messages (reference vertex programs take
-# arbitrary POD state, interfaces/pregel.hpp:508-663) ------------------------
-#
-# A struct ``state_type``/``msg_type`` crosses the Arrow boundary
-# FLATTENED into one column per field (``state__<field>``,
-# ``out__<field>``, ``incoming__<field>``) so vertex programs keep
-# operating on NumPy arrays — Arrow struct columns would otherwise
-# surface as per-row python dicts in pandas. The runtime reassembles
-# the struct right after the program pass; everything outside the
-# program (joins, masks, the combiner agg) sees ordinary struct
-# Columns, which Spark compares/aggregates natively (the pair monoids
-# ARGMIN/ARGMAX already fold struct(val, idx)).
-
 def _struct_lit(value, dt: DataType):
-    """Literal Column for a scalar or a struct-typed tuple value."""
+    """Literal Column for a scalar or a struct-typed tuple value
+    (reference vertex programs take arbitrary POD state,
+    interfaces/pregel.hpp:508-663)."""
     if isinstance(dt, StructType):
         vals = value if isinstance(value, (tuple, list)) else (value,) * len(dt)
         return F.struct(
@@ -118,30 +112,20 @@ def _struct_lit(value, dt: DataType):
     return F.lit(value).cast(dt)
 
 
-def _flat_fields(name: str, dt: DataType) -> list[tuple[str, str]]:
-    """(flat column name, type ddl) pairs for one logical column."""
-    if isinstance(dt, StructType):
-        return [
-            (f"{name}__{f.name}", f.dataType.simpleString()) for f in dt.fields
-        ]
-    return [(name, dt.simpleString())]
+def _checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """Eager ``localCheckpoint`` of ``df`` plus the named aggregates over
+    it, observed in the same Spark action."""
+    obs = Observation()
+    df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
+    return df.localCheckpoint(eager=True), obs.get
 
 
-def _flatten(name: str, dt: DataType) -> list:
-    if isinstance(dt, StructType):
-        return [
-            F.col(f"{name}.{f.name}").alias(f"{name}__{f.name}")
-            for f in dt.fields
-        ]
-    return [F.col(name)]
-
-
-def _reassemble(name: str, dt: DataType):
-    if isinstance(dt, StructType):
-        return F.struct(
-            *[F.col(f"{name}__{f.name}").alias(f.name) for f in dt.fields]
-        ).alias(name)
-    return F.col(name)
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``ed frame. Its RDD is not
+    in the cache manager, so ``DataFrame.unpersist`` does not reach it;
+    ``RDD.unpersist`` would log a lineage warning every superstep."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def _degrees(spark: SparkSession, edges: DataFrame, n: int) -> DataFrame:
@@ -188,6 +172,10 @@ def pregel(
     message vector (pregel.hpp:167-242) — 'none' (reference default,
     inactive vertices keep broadcasting their last message) | 'always' |
     'when_reduced' | 'when_halved'.
+
+    ``history`` holds one entry per superstep: the active census after
+    it, the halt vote, the cumulative count of vertices that ran the
+    program, the out-vector nnz and the superstep's wall time.
     """
     if sparsify not in _SPARSIFY:
         raise ValueError(f"sparsify must be one of {_SPARSIFY}")
@@ -199,228 +187,176 @@ def pregel(
     state_dt = _parse_datatype_string(state_type)
     msg_dt = _parse_datatype_string(msg_type)
     msg_id_col = _struct_lit(combiner.identity, msg_dt)
+    ring = alg.Semiring(add=combiner, mul=alg.left_assign, one=True)
+    active, ran = F.col("active"), F.col("_ran")
 
-    flat_state = _flat_fields("state", state_dt)
-    flat_out = _flat_fields("out", msg_dt)
-    flat_incoming = _flat_fields("incoming", msg_dt)
-    schema = ", ".join(
-        ["id long"]
-        + [f"{n_} {t}" for n_, t in flat_state]
-        + [f"{n_} {t}" for n_, t in flat_out]
-        + [
-            "active boolean", "halt boolean", "outdegree long",
-            "indegree long", "_ran boolean",
-        ]
-    )
-
-    if resume_state is not None:
-        state = resume_state.select(*_STATE_COLS)
-        step = resume_round
-    else:
-        deg = _degrees(spark, edges, n)
-        # init_use_index: state := vertex id (set<use_index>,
-        # descriptors.hpp:167 — the Pregel CC label init,
-        # pregel_connected_components.hpp:136)
-        init_col = (
-            F.col(ID).cast(state_type)
-            if init_use_index
-            else _struct_lit(initial_state, state_dt)
-        )
-        state = deg.select(
-            ID,
-            init_col.alias("state"),
-            msg_id_col.alias("out"),
-            F.lit(True).alias("active"),
-            F.lit(False).alias("halt"),
-            "outdegree",
-            "indegree",
-        )
-        step = 0
-    # out-liveness under sparsification; on resume the live set restarts
-    # at the active set (≡ a sparsify applied at resume) for != 'none'
-    live_init = F.lit(True) if sparsify == "none" else F.col("active")
-    state = state.withColumn("_out_live", live_init)
-    state = state.localCheckpoint(eager=True)
-
-    # flattened column order the program receives and must return —
-    # matches ``schema`` above
-    out_cols = (
-        ["id"]
-        + [n_ for n_, _ in flat_state]
-        + [n_ for n_, _ in flat_out]
-        + ["active", "halt", "outdegree", "indegree", "_ran"]
-    )
-    prog_in = (
-        [F.col("id")]
-        + _flatten("state", state_dt)
-        + _flatten("out", msg_dt)
-        + [F.col("active"), F.col("halt"), F.col("outdegree"), F.col("indegree")]
-        + _flatten("incoming", msg_dt)
-        + [F.col("_ran")]
-    )
-
-    # instrument the Arrow program pass: rows actually serialized through
-    # Python per run (test hook for the O(active) contract; task retries
-    # can overcount, which is fine for its purpose)
-    prog_rows_acc = spark.sparkContext.accumulator(0)
-
-    def run_program(ctx: PregelContext):
-        def fn(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    yield pdf.reindex(columns=out_cols)
-                    continue
-                prog_rows_acc.add(len(pdf))
-                # every input row is active by construction; the program
-                # may flip `active`/`halt` and write `state`/`out`
-                out = program(pdf, ctx)
-                yield out[out_cols]
-        return fn
-
-    history: list[dict] = []
-    converged = True
-    out_nnz = n  # nnz of the outgoing-message vector (driver-tracked)
-    # a resumed state can carry inactive rows — the split decision below
-    # needs the real census (one cheap action, resume only)
-    n_active = (
-        state.where("active").count() if resume_state is not None else n
-    )
-    while True:
-        # ---- exchange: incoming[j] = ⊕_{i→j, live(i)} out[i] ---------------
-        # when EVERY vertex is active (halt-vote-only programs never
-        # shrink the set) the split/union machinery is pure overhead —
-        # run the whole frame through the program and skip the
-        # passthrough branch
-        split = n_active < n
-        active_state = state.where("active") if split else state
-        if step == 0 and resume_state is None:
-            cur = active_state.withColumn("incoming", msg_id_col)
+    state = None  # the latest checkpoint
+    try:
+        if resume_state is not None:
+            init = resume_state.select(*_STATE_COLS)
+            step = resume_round
         else:
-            out_vec = (
-                state.where("_out_live") if sparsify != "none" else state
-            ).select(ID, F.col("out").alias(VAL))
-            # all-active rounds: the output mask covers every vertex, so
-            # the edges-vs-active semi-join would be a per-round no-op
-            active_ids = active_state.select(ID) if split else None
-            ring = alg.Semiring(add=combiner, mul=alg.left_assign, one=True)
-            # the out vector has out_nnz entries: broadcast-join when it
-            # fits, shuffle otherwise — the CRS/CCS direction choice.
-            # n_active is already counted on the driver: pass it through
-            # so a small-frontier round broadcasts the out-mask semi-join
-            # too and the edge table is never shuffled (the reference's
-            # counted-size emiim choice, reference/blas2.hpp:1063-1145)
-            msgs = vxm(
-                out_vec, edges, ring, out_mask=active_ids,
-                strategy="auto", frontier_nnz=out_nnz,
-                out_mask_nnz=n_active if split else None,
+            deg = _degrees(spark, edges, n)
+            # init_use_index: state := vertex id (set<use_index>,
+            # descriptors.hpp:167 — the Pregel CC label init,
+            # pregel_connected_components.hpp:136)
+            init_col = (
+                F.col(ID).cast(state_type)
+                if init_use_index
+                else _struct_lit(initial_state, state_dt)
             )
-            # NOTE: no broadcast hint on the msgs side of the state
-            # join — measured (round 4): forcing it regressed the
-            # iterative loop ~10× (the eager per-round broadcast build
-            # defeats the lazily-checkpointed steady state), while AQE
-            # already picks a broadcast join from runtime stats when
-            # profitable. The driver-informed hints live where they pay:
-            # the out-mask semi-join and the frontier join INSIDE vxm
-            # (out_mask_nnz / frontier_nnz above).
-            cur = active_state.join(
-                msgs.select(ID, F.col(VAL).alias("_msg")), on=ID, how="left"
-            ).withColumn(
-                "incoming", F.coalesce(F.col("_msg"), msg_id_col)
-            ).drop("_msg")
+            init = deg.select(
+                ID,
+                init_col.alias("state"),
+                msg_id_col.alias("out"),
+                F.lit(True).alias("active"),
+                F.lit(False).alias("halt"),
+                "outdegree",
+                "indegree",
+            )
+            step = 0
+        # out-liveness under sparsification; on resume the live set
+        # restarts at the active set (≡ a sparsify applied at resume) for
+        # != 'none'. The census is observed on the same action (a resumed
+        # state can carry inactive rows).
+        live_init = F.lit(True) if sparsify == "none" else active
+        state, stats = _checkpoint(
+            init.withColumn("_out_live", live_init),
+            n_active=F.sum(active.cast("long")),
+        )
+        n_active = int(stats["n_active"] or 0)
 
-        # ---- sparsify-out (reference order: right after the vxm, before
-        # the next program pass — pregel.hpp:887-898) -------------------------
-        do_sparsify = sparsify != "none" and (step > 0 or resume_state is not None) and (
-            sparsify == "always"
-            or (sparsify == "when_reduced" and out_nnz > n_active)
-            or (sparsify == "when_halved" and n_active <= out_nnz // 2)
-        )
-        if do_sparsify:
-            # live := active, out := combiner identity on the live set
-            cur = cur.withColumn("out", msg_id_col)
-            out_nnz = n_active
+        history: list[dict] = []
+        converged = True
+        out_nnz = n  # nnz of the outgoing-message vector (driver-tracked)
+        program_rows = 0
+        while True:
+            t0 = time.perf_counter()
+            # ---- exchange: incoming[j] = ⊕_{i→j, live(i)} out[i] -----------
+            # when EVERY vertex is active (halt-vote-only programs never
+            # shrink the set) the output mask is a per-round no-op: skip it
+            split = n_active < n
+            if step == 0 and resume_state is None:
+                cur, incoming = state, msg_id_col
+            else:
+                out_vec = (
+                    state.where("_out_live") if sparsify != "none" else state
+                ).select(ID, F.col("out").alias(VAL))
+                # the out vector has out_nnz entries: broadcast-join when
+                # it fits, shuffle otherwise — the CRS/CCS direction
+                # choice. n_active is already counted on the driver: pass
+                # it through so a small-frontier round broadcasts the
+                # out-mask semi-join too and the edge table is never
+                # shuffled (the reference's counted-size emiim choice,
+                # reference/blas2.hpp:1063-1145)
+                msgs = vxm(
+                    out_vec, edges, ring,
+                    out_mask=state.where("active").select(ID) if split else None,
+                    strategy="auto", frontier_nnz=out_nnz,
+                    out_mask_nnz=n_active if split else None,
+                )
+                # NOTE: no broadcast hint on the msgs side of the state
+                # join — measured (round 4): forcing it regressed the
+                # iterative loop ~10×, while AQE already picks a
+                # broadcast join from runtime stats when profitable. The
+                # driver-informed hints live where they pay: the out-mask
+                # semi-join and the frontier join INSIDE vxm.
+                cur = state.join(
+                    msgs.select(ID, F.col(VAL).alias("_msg")), on=ID, how="left"
+                )
+                incoming = F.coalesce(F.col("_msg"), msg_id_col)
 
-        cur = (
-            cur.withColumn("_ran", F.lit(True))
-            .withColumn("halt", F.lit(False))  # votes reset (pregel.hpp:865-870)
-        )
-        ctx = PregelContext(round=step, num_vertices=n, num_edges=nnz, data=data)
-        programmed = cur.select(*prog_in).mapInPandas(
-            run_program(ctx), schema=schema
-        ).select(
-            ID,
-            _reassemble("state", state_dt),
-            _reassemble("out", msg_dt),
-            "active", "halt", "outdegree", "indegree", "_ran",
-        )
-        # programmed rows are always live: live ⊇ active is invariant
-        # (sparsify sets live := active; active only shrinks)
-        new = programmed.withColumn("_out_live", F.lit(True))
-        if split:
-            # inactive rows never enter Python: pure-Column passthrough.
-            # Their halt vote resets too (grb::clear over ALL votes,
-            # pregel.hpp:866) and, on a sparsify round, they leave the
-            # live out set.
-            passthrough = state.where(~F.col("active")).select(
+            # ---- sparsify-out (reference order: right after the vxm,
+            # before the program — pregel.hpp:887-898) ---------------------
+            do_sparsify = sparsify != "none" and (step > 0 or resume_state is not None) and (
+                sparsify == "always"
+                or (sparsify == "when_reduced" and out_nnz > n_active)
+                or (sparsify == "when_halved" and n_active <= out_nnz // 2)
+            )
+            if do_sparsify:
+                out_nnz = n_active
+            # program inputs: live := active and out := combiner identity
+            # on a sparsify round; halt votes reset (pregel.hpp:865-870)
+            cur = cur.select(
                 ID,
                 "state",
-                "out",
+                (F.when(active, msg_id_col).otherwise(F.col("out"))
+                 if do_sparsify else F.col("out")).alias("out"),
+                incoming.alias("incoming"),
                 "active",
                 F.lit(False).alias("halt"),
                 "outdegree",
                 "indegree",
-                F.lit(False).alias("_ran"),
-                (F.lit(False) if do_sparsify else F.col("_out_live")).alias("_out_live"),
+                active.alias("_ran"),
+                (active if do_sparsify else active | F.col("_out_live")).alias("_out_live"),
             )
-            new = new.unionByName(passthrough)
-        # LAZY checkpoint: the stats action below materializes it, so a
-        # superstep costs ONE job instead of checkpoint-job + stats-job.
-        # The old state must stay cached until that action runs.
-        new = new.localCheckpoint(eager=False)
-        old_state = state
-        state = new
 
-        step += 1
+            ctx = PregelContext(round=step, num_vertices=n, num_edges=nnz, data=data)
+            updates = program(ctx)
+            unknown = set(updates) - set(_PROGRAM_OUT)
+            if unknown:
+                raise ValueError(f"vertex program may only set {_PROGRAM_OUT}, got {sorted(unknown)}")
+            # masked eWiseLambda: only the vertices that entered the round
+            # active run the program; the rest keep their values
+            new = cur.select(
+                ID,
+                *[
+                    F.when(ran, updates[c]).otherwise(F.col(c)).alias(c)
+                    if c in updates else c
+                    for c in _PROGRAM_OUT
+                ],
+                "outdegree", "indegree", "_ran", "_out_live",
+            )
+            # ONE action: checkpoint + halt vote + census + program rows
+            new, stats = _checkpoint(
+                new,
+                all_halt=F.min(F.when(ran, F.col("halt"))),
+                n_active=F.sum(active.cast("long")),
+                ran=F.sum(ran.cast("long")),
+            )
+            _release(state)
+            state = new
+            step += 1
 
-        # ---- one stats action: halt vote + active census (also
-        # materializes the checkpoint) ----------------------------------------
-        stats = state.agg(
-            F.min(F.when(F.col("_ran"), F.col("halt"))).alias("all_halt"),
-            F.sum(F.col("active").cast("long")).alias("n_active"),
-        ).collect()[0]
-        old_state.unpersist()
-        n_active = int(stats["n_active"] or 0)
-        all_halt = bool(stats["all_halt"]) if stats["all_halt"] is not None else False
-        history.append(
-            {
-                "round": step,
-                "active": n_active,
-                "all_halt": all_halt,
-                "program_rows": prog_rows_acc.value,
-                "out_nnz": out_nnz,
-            }
-        )
+            n_active = int(stats["n_active"] or 0)
+            all_halt = bool(stats["all_halt"])
+            program_rows += int(stats["ran"] or 0)
+            history.append(
+                {
+                    "round": step,
+                    "active": n_active,
+                    "all_halt": all_halt,
+                    "program_rows": program_rows,
+                    "out_nnz": out_nnz,
+                    "wall_s": time.perf_counter() - t0,
+                }
+            )
 
-        if checkpointer is not None and step % checkpoint_every == 0:
+            if checkpointer is not None and step % checkpoint_every == 0:
+                checkpointer.save(
+                    state.select(*_STATE_COLS),
+                    superstep=step,
+                    metrics={"active": n_active, "all_halt": all_halt},
+                )
+
+            if all_halt:  # everyone who ran voted to halt (pregel.hpp:816-822)
+                break
+            if n_active == 0:  # all vertices inactive (pregel.hpp:840-847)
+                break
+            if max_rounds > 0 and step > max_rounds:  # (pregel.hpp:850-858)
+                converged = False
+                break
+
+        result = state.select(*_STATE_COLS)
+        if checkpointer is not None:
             checkpointer.save(
-                state.select(*_STATE_COLS),
-                superstep=step,
-                metrics={"active": n_active, "all_halt": all_halt},
+                result, superstep=step, metrics={"rounds": step, "converged": converged},
+                final=True,
             )
-
-        if all_halt:  # everyone who ran voted to halt (pregel.hpp:816-822)
-            break
-        if n_active == 0:  # all vertices inactive (pregel.hpp:840-847)
-            break
-        if max_rounds > 0 and step > max_rounds:  # (pregel.hpp:850-858)
-            converged = False
-            break
-
-    edges.unpersist()  # state is checkpointed — the cache can go
-    result = state.select(*_STATE_COLS)
-    if checkpointer is not None:
-        checkpointer.save(
-            result, superstep=step, metrics={"rounds": step, "converged": converged},
-            final=True,
-        )
+    except BaseException:
+        if state is not None:  # the last checkpoint; nothing is returned
+            _release(state)
+        raise
+    finally:
+        edges.unpersist()
     return PregelResult(state=result, rounds=step, converged=converged, history=history)

@@ -374,6 +374,10 @@ def test_neighborhood_function(spark):
     assert got[1] <= got[2] <= got[3]
 
 
+K7 = [(a, b) for a in range(100, 107) for b in range(100, 107) if a < b]
+CASCADE = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (3, 5), (4, 5)] + K7
+
+
 def test_k_truss_incremental_cascade(spark):
     # triangle chain (0,1,2)(1,2,3)(2,3,4)(3,4,5) hanging next to a K7:
     # k=4 peels the chain over multiple rounds — round 1 drops every
@@ -386,11 +390,22 @@ def test_k_truss_incremental_cascade(spark):
     # a hand-computed fixpoint.
     from alp_spark.algorithms.truss import k_truss
 
-    chain = [(0, 1), (0, 2), (1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (3, 5), (4, 5)]
-    k7 = [(a, b) for a in range(100, 107) for b in range(100, 107) if a < b]
-    und = chain + k7
-    sym = und + [(b, a) for a, b in und]
-    res = k_truss(spark, edges_df(spark, sym), k=4)
+    res = k_truss(spark, edges_df(spark, _sym(CASCADE)), k=4)
     got = sorted((r["src"], r["dst"]) for r in res.edges.collect())
-    assert got == sorted(k7)
+    assert got == sorted(K7)
     assert res.rounds >= 3  # the cascade really took multiple peels
+
+
+def test_k_truss_unbroadcast_dropped_set(spark, monkeypatch):
+    # above BROADCAST_NNZ_THRESHOLD the dropped set is shuffle-joined
+    # instead of broadcast; the peel must not depend on the join shape
+    from alp_spark.algorithms import truss
+
+    def run():
+        res = truss.k_truss(spark, edges_df(spark, _sym(CASCADE)), k=4)
+        return sorted((r["src"], r["dst"]) for r in res.edges.collect()), res.rounds
+
+    want = run()
+    monkeypatch.setattr(truss, "BROADCAST_NNZ_THRESHOLD", 0)
+    assert run() == want
+    assert want[0] == sorted(K7)

@@ -145,3 +145,71 @@ def test_pregel_struct_state_pagerank_residual(spark, local):
     assert (got_resid >= 0).all()
     if not local:
         assert (got_resid < 1e-5).all()
+
+
+def test_history_records_wall_time(spark):
+    n, edges = g2_components()
+    res = connected_components(spark, edges_df(spark, edges), n)
+    assert len(res.history) == res.rounds
+    assert all(h["wall_s"] > 0 for h in res.history)
+
+
+class _FailingCheckpointer:
+    def save(self, *args, **kwargs):
+        raise RuntimeError("checkpoint store unavailable")
+
+
+def test_pregel_releases_persisted_frames(spark):
+    # the cached edge table and every superstep checkpoint are released
+    # on each exit path; only the returned state may stay persisted
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n, edges = g2_components()
+    E = edges_df(spark, edges)
+    for kwargs in ({}, {"max_rounds": 1}):
+        before = persisted()
+        connected_components(spark, E, n, **kwargs)
+        assert persisted() <= before + 1, kwargs
+    before = persisted()
+    with pytest.raises(RuntimeError, match="checkpoint store unavailable"):
+        connected_components(
+            spark, E, n, checkpointer=_FailingCheckpointer(), checkpoint_every=1
+        )
+    assert persisted() <= before
+
+
+def test_outputs_independent_of_shuffle_partitions(spark):
+    # every superstep plan shuffles: labels, scores and round counts must
+    # not depend on how many partitions the shuffles use. Labels are
+    # exact; PageRank message sums are partial-summed per edge partition,
+    # so scores may move by a few ulps (the summation order), no more.
+    from alp_spark.algorithms.pregel_pagerank import pregel_pagerank_residual
+
+    n, edges = g497_powerlaw(n=97)
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+
+    def run_all():
+        E = edges_df(spark, edges)
+        cc = connected_components(spark, E, n)
+        pr = pregel_pagerank(spark, E, n)
+        st = pregel_pagerank_residual(spark, E, n)
+        st_scores = {r["id"]: r["state"]["score"] for r in st.state.collect()}
+        return (
+            (state_arr(cc.state, n, dtype=np.int64), cc.rounds),
+            (state_arr(pr.state, n), pr.rounds),
+            (np.array([st_scores[i] for i in range(n)]), st.rounds),
+        )
+
+    try:
+        spark.conf.set(conf, "2")
+        two = run_all()
+        spark.conf.set(conf, "8")
+        eight = run_all()
+    finally:
+        spark.conf.set(conf, old)
+    np.testing.assert_array_equal(two[0][0], eight[0][0])
+    for (a, _), (b, _) in zip(two[1:], eight[1:]):
+        np.testing.assert_allclose(a, b, rtol=1e-15)
+    assert [r for _, r in two] == [r for _, r in eight]
