@@ -33,7 +33,7 @@ from alp_spark.algorithms.simple_pagerank import simple_pagerank, simple_pageran
 from alp_spark.algorithms.triangles import triangle_count
 from alp_spark.containers import DST, ID, SRC, VAL, set_dense
 from alp_spark.operators.blas1 import e_wise_apply
-from alp_spark.operators.blas2 import vxm
+from alp_spark.operators.blas2 import broadcast_if_fits, vxm
 from alp_spark.pipeline import (
     cosine_dup_pairs,
     cosine_topk,
@@ -517,8 +517,10 @@ def q_hits5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     res = hits(spark, _edges(spark, sf_dir), N_V, iters=HITS_ITERS)
     v = spark.range(N_V).select(F.col("id").alias(ID))
-    a = res.auth.select(ID, F.col(VAL).alias("_a"))
-    h = res.hubs.select(ID, F.col(VAL).alias("_h"))
+    # both score vectors hold ≤ N_V entries: the one gate broadcasts them
+    # instead of sort-merge joining against range(N_V)
+    a = broadcast_if_fits(res.auth.select(ID, F.col(VAL).alias("_a")), N_V)
+    h = broadcast_if_fits(res.hubs.select(ID, F.col(VAL).alias("_h")), N_V)
     return (
         v.join(a, on=ID, how="left")
         .join(h, on=ID, how="left")

@@ -23,7 +23,8 @@ Scale shape: identical to the PageRank/FastSV loop — the edge table is
 hash-partitioned by dst once and persisted, each round is one join +
 one map-side-combined bit_or aggregation (8 bytes/vertex of state, the
 cheapest state vector in the engine), and rounds are FIXED at K (no
-convergence action needed; one lazy checkpoint per round).
+convergence action needed; one lazy :meth:`alp_spark.loop.Loop.lazy`
+checkpoint per round, all filled by one action at the end).
 
 Determinism: the hash is a pure function of the vertex id, bit-OR is
 commutative/associative/idempotent — results are exact-identical
@@ -39,7 +40,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
-from ..plans.partitions import cache_sized, range_partitions
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits
+from ..plans.partitions import range_partitions
 from .mis import PRIO_MOD, PRIO_MULT
 
 #: golden-ratio salt so h(0) ≠ 0 for almost all ids (h == 0 is still
@@ -69,6 +72,28 @@ def fm_estimate_col(sketch: Column) -> Column:
     return fm_lowzero_col(sketch).cast("double") / F.lit(FM_PHI)
 
 
+def _fm_init(spark: SparkSession, n: int) -> DataFrame:
+    """(id, _s): every vertex's one-bit FM sketch."""
+    return spark.range(0, n, 1, range_partitions(spark, n)).select(
+        F.col("id").alias(ID), fm_init_col(F.col("id")).alias("_s")
+    )
+
+
+def _fm_round(s: DataFrame, E: DataFrame, n: int) -> DataFrame:
+    """One bit-OR round: S(v) | OR over out-edges (v,u) of S(u). The
+    n-row sketch side goes through the one broadcast gate."""
+    pull_side = s.select(F.col(ID).alias(DST), F.col("_s").alias("_x"))
+    pulled = (
+        E.join(broadcast_if_fits(pull_side, n), on=DST)
+        .groupBy(SRC)
+        .agg(F.bit_or("_x").alias("_o"))
+        .select(F.col(SRC).alias(ID), "_o")
+    )
+    return s.join(pulled, on=ID, how="left").select(
+        ID, F.col("_s").bitwiseOR(F.coalesce("_o", F.lit(0))).alias("_s")
+    )
+
+
 @dataclass
 class ANFResult:
     sketches: DataFrame  # (id, sketch, est_reach)
@@ -92,47 +117,33 @@ def neighborhood_function(
     lazy plan — no per-round action (the one-job pattern)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    # size-derived cached layout (guide §2; conf-capped, so identical
-    # at scale) — one E scan per hop.
-    E, _ = cache_sized(spark, edges.select(SRC, DST), key=DST)
-
-    s = spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), fm_init_col(F.col("id")).alias("_s")
-    )
-    small = n <= 1_000_000  # static broadcast gate (blas2 threshold)
-    hops = []
-    for h in range(1, rounds + 1):
-        pull_side = s.select(F.col(ID).alias(DST), F.col("_s").alias("_x"))
-        pulled = (
-            E.join(F.broadcast(pull_side) if small else pull_side, on=DST)
-            .groupBy(SRC)
-            .agg(F.bit_or("_x").alias("_o"))
-            .select(F.col(SRC).alias(ID), "_o")
-        )
-        s = (
-            s.join(pulled, on=ID, how="left")
-            .select(
-                ID,
-                F.col("_s").bitwiseOR(F.coalesce("_o", F.lit(0))).alias("_s"),
+    with Loop(spark, "neighborhood_function") as loop:
+        # size-derived cached layout (guide §2; conf-capped, so identical
+        # at scale) — one E scan per hop.
+        E, _ = loop.cache(edges.select(SRC, DST), key=DST)
+        s = _fm_init(spark, n)
+        hops = []
+        for h in range(1, rounds + 1):
+            s = loop.lazy(_fm_round(s, E, n))
+            # sum the EXACT integer 2^R values and divide by φ once: a
+            # float sum is partition-order-sensitive at round(6)
+            # precision, an integer sum is bit-identical in any order and
+            # any engine
+            hops.append(
+                s.agg(F.sum(fm_lowzero_col(F.col("_s"))).alias("_z")).select(
+                    F.lit(h).cast("long").alias("hop"),
+                    F.round(F.col("_z").cast("double") / F.lit(FM_PHI), 6).alias(
+                        "n_pairs"
+                    ),
+                )
             )
-            .localCheckpoint(eager=False)
-        )
-        # sum the EXACT integer 2^R values and divide by φ once: a
-        # float sum is partition-order-sensitive at round(6) precision,
-        # an integer sum is bit-identical in any order and any engine
-        hops.append(
-            s.agg(F.sum(fm_lowzero_col(F.col("_s"))).alias("_z")).select(
-                F.lit(h).cast("long").alias("hop"),
-                F.round(F.col("_z").cast("double") / F.lit(FM_PHI), 6).alias(
-                    "n_pairs"
-                ),
-            )
-        )
-    out = hops[0]
-    for f in hops[1:]:
-        out = out.unionByName(f)
-    out = out.localCheckpoint(eager=True)  # one action for the chain
-    E.unpersist()
+        out = hops[0]
+        for f in hops[1:]:
+            out = out.unionByName(f)
+        # one action for the chain; the per-hop states are released with
+        # the loop
+        out, _ = loop.checkpoint(out, stage="hops")
+        loop.finish(out)
     return out
 
 
@@ -146,38 +157,20 @@ def anf(
     directed edge table. ``est_reach`` includes the vertex itself."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    # same size-derived layout as neighborhood_function above
-    E, _ = cache_sized(spark, edges.select(SRC, DST), key=DST)
-
-    s = spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), fm_init_col(F.col("id")).alias("_s")
-    )
-
-    small = n <= 1_000_000  # static broadcast gate (blas2 threshold)
-    for _ in range(rounds):
-        pull_side = s.select(F.col(ID).alias(DST), F.col("_s").alias("_x"))
-        pulled = (
-            E.join(F.broadcast(pull_side) if small else pull_side, on=DST)
-            .groupBy(SRC)
-            .agg(F.bit_or("_x").alias("_o"))
-            .select(F.col(SRC).alias(ID), "_o")
-        )
-        s = (
-            s.join(pulled, on=ID, how="left")
-            .select(
-                ID,
-                F.col("_s").bitwiseOR(F.coalesce("_o", F.lit(0))).alias("_s"),
-            )
-            # lazy: no per-round action — the caller's single
-            # materialisation runs the whole pinned-round chain as one
-            # job, each checkpoint truncating lineage as it fills
-            .localCheckpoint(eager=False)
-        )
-
-    # ONE action for the whole run (fills every lazy checkpoint), then
-    # the edge cache can go; later reads serve from the final state
-    s.count()
-    E.unpersist()
+    with Loop(spark, "anf") as loop:
+        # same size-derived layout as neighborhood_function above
+        E, _ = loop.cache(edges.select(SRC, DST), key=DST)
+        s = _fm_init(spark, n)
+        for _ in range(rounds):
+            # lazy: no per-round action — the single fill below runs the
+            # whole pinned-round chain as one job, each checkpoint
+            # truncating lineage as it fills
+            s = loop.lazy(_fm_round(s, E, n))
+        # ONE action for the whole run (fills every lazy checkpoint);
+        # the loop then releases E and the intermediate rounds, and later
+        # reads serve from the final state
+        loop.fill(s)
+        loop.finish(s)
     out = s.select(
         ID,
         F.col("_s").alias("sketch"),

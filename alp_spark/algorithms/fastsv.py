@@ -31,27 +31,28 @@ reaches the reduce side; the grandparent extract joins f.f against the
 UNIQUE-keyed parent side, the shape AQE skew-split handles by
 replicating the unique side under a hot key (a giant component's root
 is hot by construction — this is the one intentionally skew-bearing
-join, and it is a lookup, not a pairing). State is localCheckpoint'ed
-per round (lineage truncation); exactly ONE driver action (the change
-census) per round.
+join, and it is a lookup, not a pairing). Each round is one
+:meth:`alp_spark.loop.Loop.step` (one action, change census included).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
-from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
-from ..plans.partitions import cache_sized, range_partitions
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits
+from ..plans.partitions import range_partitions
 
 
 @dataclass
 class FastSVResult:
     labels: DataFrame  # (id, label) — label = min vertex id of component
     rounds: int
+    history: list[dict] = field(default_factory=list)
 
 
 def fastsv_components(
@@ -78,88 +79,77 @@ def fastsv_components(
     ``checkpoint_every`` rounds; a run resumed from any snapshot
     produces identical labels (each round is a deterministic min-fold
     of the previous ``f`` over the same edges)."""
-    # size-derived cached layout (guide §2): the loop re-scans E every
-    # round; partition count follows the measured row count, capped at
-    # the conf parallelism (identical layout at scale).
-    E, _ = cache_sized(spark, sym_edges.select(SRC, DST), key=DST)
+    start = resume_round if resume_state is not None else 0
+    with Loop(spark, "fastsv", checkpointer, checkpoint_every, start=start) as loop:
+        # size-derived cached layout (guide §2): the loop re-scans E
+        # every round; partition count follows the measured row count,
+        # capped at the conf parallelism (identical layout at scale).
+        E, _ = loop.cache(sym_edges.select(SRC, DST), key=DST)
 
-    # f: the parent (Shiloach-Vishkin forest) vector, init f[i] = i
-    if resume_state is not None:
-        f = resume_state.select(ID, "f").localCheckpoint(eager=True)
-    else:
-        base = (
-            vertices.select(F.col(vertices.columns[0]).alias("id"))
-            if vertices is not None
-            else spark.range(0, n, 1, range_partitions(spark, n))
-        )
-        f = (
-            base.select(F.col("id").alias(ID), F.col("id").alias("f"))
-            .localCheckpoint(eager=True)
-        )
-
-    # driver-known vector size gates STATIC broadcast plans for the
-    # per-round f-joins (no AQE both-sides materialization barrier —
-    # the hits5 measurement); f is checkpointed, so the count is free
-    n_vert = f.count()
-    small = n_vert <= BROADCAST_NNZ_THRESHOLD
-
-    def _hint(side: DataFrame) -> DataFrame:
-        return F.broadcast(side) if small else side
-
-    rounds = resume_round
-    while True:
-        rounds += 1
-        # gp[i] = f[f[i]] — parent side is unique-keyed (id), child side
-        # joins on its f value (skewed toward roots; lookup shape)
-        par = f.select(F.col(ID).alias("_p"), F.col("f").alias("_gpv"))
-        gp = f.join(_hint(par), on=F.col("f") == F.col("_p")).select(
-            ID, "f", F.col("_gpv").alias("gp")
-        )
-
-        # mh[u] = min over neighbours v of gp[v] — mxv (min, second):
-        # edges stay in their dst-hash layout; map-side partial min
-        mh = (
-            E.join(
-                _hint(gp.select(F.col(ID).alias(DST), F.col("gp").alias("_g"))),
-                on=DST,
+        # f: the parent (Shiloach-Vishkin forest) vector, init f[i] = i
+        if resume_state is not None:
+            f = resume_state.select(ID, "f")
+        else:
+            base = (
+                vertices.select(F.col(vertices.columns[0]).alias("id"))
+                if vertices is not None
+                else spark.range(0, n, 1, range_partitions(spark, n))
             )
-            .groupBy(F.col(SRC).alias(ID))
-            .agg(F.min("_g").alias("_mh"))
-        )
+            f = base.select(F.col("id").alias(ID), F.col("id").alias("f"))
+        # driver-known vector size gates STATIC broadcast plans for the
+        # per-round f-joins (no AQE both-sides materialization barrier —
+        # the hits5 measurement); it is observed on the checkpoint
+        f, stats = loop.checkpoint(f, n=F.count(F.lit(1)))
+        n_vert = stats["n"]
 
-        # three min-candidate streams, routed additively (unionByName —
-        # the stat-compounding-safe shape) then one grouped min:
-        cand = (
-            # stochastic hooking: mh[u] applied at id = f[u]
-            gp.join(mh, on=ID)
-            .select(F.col("f").alias(ID), F.col("_mh").alias("_c"))
-            # aggressive hooking: mh[u] applied at u
-            .unionByName(mh.select(ID, F.col("_mh").alias("_c")))
-            # shortcutting: gp[u] applied at u
-            .unionByName(gp.select(ID, F.col("gp").alias("_c")))
-            .groupBy(ID)
-            .agg(F.min("_c").alias("_c"))
-        )
-        st = (
-            f.join(cand, on=ID, how="left")
-            .select(
+        while True:
+            # gp[i] = f[f[i]] — parent side is unique-keyed (id), child
+            # side joins on its f value (skewed toward roots; lookup shape)
+            par = f.select(F.col(ID).alias("_p"), F.col("f").alias("_gpv"))
+            gp = f.join(
+                broadcast_if_fits(par, n_vert), on=F.col("f") == F.col("_p")
+            ).select(ID, "f", F.col("_gpv").alias("gp"))
+
+            # mh[u] = min over neighbours v of gp[v] — mxv (min, second):
+            # edges stay in their dst-hash layout; map-side partial min
+            gp_dst = gp.select(F.col(ID).alias(DST), F.col("gp").alias("_g"))
+            mh = (
+                E.join(broadcast_if_fits(gp_dst, n_vert), on=DST)
+                .groupBy(F.col(SRC).alias(ID))
+                .agg(F.min("_g").alias("_mh"))
+            )
+
+            # three min-candidate streams, routed additively (unionByName
+            # — the stat-compounding-safe shape) then one grouped min:
+            cand = (
+                # stochastic hooking: mh[u] applied at id = f[u]
+                gp.join(mh, on=ID)
+                .select(F.col("f").alias(ID), F.col("_mh").alias("_c"))
+                # aggressive hooking: mh[u] applied at u
+                .unionByName(mh.select(ID, F.col("_mh").alias("_c")))
+                # shortcutting: gp[u] applied at u
+                .unionByName(gp.select(ID, F.col("gp").alias("_c")))
+                .groupBy(ID)
+                .agg(F.min("_c").alias("_c"))
+            )
+            nxt = f.join(cand, on=ID, how="left").select(
                 ID,
                 F.col("f").alias("_old"),
                 F.least(F.col("f"), F.coalesce("_c", F.col("f"))).alias("f"),
             )
-            .localCheckpoint(eager=False)
-        )
-        row = st.agg(
-            F.sum((F.col("_old") != F.col("f")).cast("long")).alias("nch")
-        ).collect()[0]
-        f = st.select(ID, "f")
-        nch = int(row["nch"] or 0)
-        if checkpointer is not None and rounds % checkpoint_every == 0:
-            checkpointer.save(f, rounds, metrics={"changed": nch})
-        if nch == 0 or (max_rounds and rounds >= max_rounds):
-            break
+            # ONE action: checkpoint + change census
+            f, stats = loop.step(
+                nxt,
+                replaces=f,
+                changed=F.sum((F.col("_old") != F.col("f")).cast("long")),
+            )
+            nch = int(stats["changed"] or 0)
+            if nch == 0 or (max_rounds and loop.round >= max_rounds):
+                break
 
-    if checkpointer is not None:
-        checkpointer.save(f, rounds, metrics={"changed": 0}, final=True)
-    E.unpersist()
-    return FastSVResult(labels=f.select(ID, F.col("f").alias("label")), rounds=rounds)
+        loop.finish(f, changed=0)
+    return FastSVResult(
+        labels=f.select(ID, F.col("f").alias("label")),
+        rounds=loop.round,
+        history=loop.history,
+    )

@@ -25,7 +25,8 @@ ride into the next SpMV, but materialising the normalised vector keeps
 the per-round output exactly the textbook sequence the unrolled oracle
 mirrors. Vectors stay sparse (vertices with no in/out edges are
 structurally absent = 0); lineage is flattened by a lazy
-localCheckpoint per round, so the 100-TB posture is identical to
+:meth:`alp_spark.loop.Loop.lazy` checkpoint per round (released after
+the one action), so the 100-TB posture is identical to
 ``simple_pagerank``: edge table partitioned once, rounds bounded by the
 pinned iteration budget.
 """
@@ -38,9 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import algebra as alg
-from ..containers import ID, SRC, DST, VAL, vector_schema
+from ..containers import ID, SRC, DST, VAL
+from ..loop import Loop
 from ..operators.blas2 import vxm
-from ..plans.partitions import cache_sized, range_partitions
+from ..plans.partitions import range_partitions
 
 
 @dataclass
@@ -83,32 +85,29 @@ def hits(
     """
     if iters < 1:
         raise ValueError("iters must be >= 1")
-    # size-derived cached layout (guide §2): 2 SpMV scans of E per
-    # round — empty-task overhead compounds, so partitions follow the
-    # measured row count (conf-capped; unchanged at scale).
-    E, _ = cache_sized(spark, edges.select(SRC, DST))
-    h = spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), F.lit(1.0).alias(VAL)
-    )
-    a = None
-    for _ in range(iters):
-        # frontier_nnz=n: the score vectors are ≤ n entries by
-        # construction, so the driver-known size gates a STATIC
-        # broadcast plan — no AQE both-sides materialization barrier
-        # per SpMV (measured 5.2 s → 3.4 s on the 5-round bench run)
-        # authority: a[j] = Σ_{i→j} h[i]  (join src, group dst)
-        a = _normalize(
-            vxm(h, E, alg.PLUS_TIMES, frontier_nnz=n)
-        ).localCheckpoint(eager=False)
-        # hub: h[i] = Σ_{i→j} a[j]  (join dst, group src)
-        h = _normalize(
-            vxm(a, E, alg.PLUS_TIMES, transpose=True, frontier_nnz=n)
-        ).localCheckpoint(eager=False)
-    # ONE action for the whole run: filling h's checkpoint pulls every
-    # lazy checkpoint in the chain (a feeds h), so E can be released
-    # and later reads serve from the materialised state
-    h.count()
-    E.unpersist()
-    if a is None:  # pragma: no cover — guarded by iters >= 1
-        a = spark.createDataFrame([], vector_schema("double"))
+    with Loop(spark, "hits") as loop:
+        # size-derived cached layout (guide §2): 2 SpMV scans of E per
+        # round — empty-task overhead compounds, so partitions follow the
+        # measured row count (conf-capped; unchanged at scale).
+        E, _ = loop.cache(edges.select(SRC, DST))
+        h = spark.range(0, n, 1, range_partitions(spark, n)).select(
+            F.col("id").alias(ID), F.lit(1.0).alias(VAL)
+        )
+        for _ in range(iters):
+            # frontier_nnz=n: the score vectors are ≤ n entries by
+            # construction, so the driver-known size gates a STATIC
+            # broadcast plan — no AQE both-sides materialization barrier
+            # per SpMV (measured 5.2 s → 3.4 s on the 5-round bench run)
+            # authority: a[j] = Σ_{i→j} h[i]  (join src, group dst)
+            a = loop.lazy(_normalize(vxm(h, E, alg.PLUS_TIMES, frontier_nnz=n)))
+            # hub: h[i] = Σ_{i→j} a[j]  (join dst, group src)
+            h = loop.lazy(
+                _normalize(vxm(a, E, alg.PLUS_TIMES, transpose=True, frontier_nnz=n))
+            )
+        # ONE action for the whole run: filling h's checkpoint pulls
+        # every lazy checkpoint in the chain (a feeds h); the loop then
+        # releases E and every intermediate checkpoint, and later reads
+        # serve from the materialised final state
+        loop.fill(h)
+        loop.finish(a, h)
     return HitsResult(auth=a, hubs=h, rounds=iters)

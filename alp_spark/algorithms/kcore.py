@@ -33,13 +33,14 @@ coreness values:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
-from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits
 
 
 @dataclass
@@ -47,6 +48,7 @@ class KCoreResult:
     cores: DataFrame  # (id, core)
     max_k: int
     rounds: int
+    history: list[dict] = field(default_factory=list)
 
 
 def kcore_decomposition(
@@ -54,7 +56,6 @@ def kcore_decomposition(
     sym_edges: DataFrame,
     n: int,
     max_rounds: int = 0,
-    broadcast_threshold: int = BROADCAST_NNZ_THRESHOLD,
     method: str = "hindex",
     checkpointer=None,
     checkpoint_every: int = 10,
@@ -88,69 +89,69 @@ def kcore_decomposition(
         )
     if checkpointer is not None or resume_state is not None:
         raise ValueError("checkpoint/resume is supported by method='hindex'")
-    we_persisted = False
-    if not sym_edges.storageLevel.useMemory:
-        sym_edges = sym_edges.persist()
-        we_persisted = True
+    with Loop(spark, "kcore") as loop:
+        if not sym_edges.storageLevel.useMemory:
+            sym_edges, _ = loop.cache(sym_edges, resize=False)
 
-    deg = sym_edges.groupBy(F.col(SRC).alias(ID)).agg(F.count("*").alias("deg"))
-    state = (
-        spark.range(n)
-        .select(F.col("id").alias(ID))
-        .join(deg, on=ID, how="left")
-        .select(
-            ID,
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            F.lit(0).cast("long").alias("core"),
-            F.lit(True).alias("alive"),
-        )
-        .localCheckpoint(eager=True)
-    )
+        deg = sym_edges.groupBy(F.col(SRC).alias(ID)).agg(F.count("*").alias("deg"))
+        k = 0
 
-    k, rounds = 0, 0
-    while True:
-        rounds += 1
-        peels = F.col("alive") & (F.col("deg") <= k)
-        stats = state.agg(
-            F.sum(peels.cast("long")).alias("n_peel"),
-            F.sum(F.col("alive").cast("long")).alias("n_alive"),
-            F.min(F.when(F.col("alive") & ~peels, F.col("deg"))).alias(
-                "next_deg"
-            ),
-        ).collect()[0]
-        n_alive = int(stats["n_alive"] or 0)
-        n_peel = int(stats["n_peel"] or 0)
-        if n_alive == 0:
-            break
-        if n_peel == 0:
-            # level jump: no alive vertex has deg ≤ k, so the next level
-            # that peels anything is exactly the minimum alive degree —
-            # peel there immediately instead of burning one stats job
-            # per empty level (a deep-coreness hub graph has hundreds).
-            # n_peel is only the broadcast-choice input below; n_alive
-            # upper-bounds it conservatively.
-            k = int(stats["next_deg"])
+        def census(k: int) -> dict:
+            # the next round's peel census, observed on the checkpoint
+            # that produces its state
             peels = F.col("alive") & (F.col("deg") <= k)
-            n_peel = n_alive
-        if max_rounds and rounds > max_rounds:
-            break
+            return dict(
+                n_peel=F.sum(peels.cast("long")),
+                n_alive=F.sum(F.col("alive").cast("long")),
+                next_deg=F.min(F.when(F.col("alive") & ~peels, F.col("deg"))),
+            )
 
-        # push a unit message along every edge out of a peeled vertex.
-        # Frontier size is known (n_peel): broadcast the semi-join only
-        # when it fits (the vxm strategy='auto' cost rule) — the k=0/1
-        # levels of a web graph can peel a large fraction of all
-        # vertices, which must go through the shuffle semi-join instead
-        peel_ids = state.where(peels).select(F.col(ID).alias(SRC))
-        if n_peel <= broadcast_threshold:
-            peel_ids = F.broadcast(peel_ids)
-        dec = (
-            sym_edges.join(peel_ids, on=SRC, how="left_semi")
-            .groupBy(F.col(DST).alias(ID))
-            .agg(F.count("*").alias("_dec"))
-        )
-        state = (
-            state.join(dec, on=ID, how="left")
+        state, stats = loop.step(
+            spark.range(n)
+            .select(F.col("id").alias(ID))
+            .join(deg, on=ID, how="left")
             .select(
+                ID,
+                F.coalesce("deg", F.lit(0)).alias("deg"),
+                F.lit(0).cast("long").alias("core"),
+                F.lit(True).alias("alive"),
+            ),
+            stage="peel",
+            **census(k),
+        )
+        while True:
+            n_alive = int(stats["n_alive"] or 0)
+            n_peel = int(stats["n_peel"] or 0)
+            if n_alive == 0:
+                break
+            if n_peel == 0:
+                # level jump: no alive vertex has deg ≤ k, so the next
+                # level that peels anything is exactly the minimum alive
+                # degree — peel there immediately instead of burning one
+                # stats job per empty level (a deep-coreness hub graph
+                # has hundreds). n_peel is only the broadcast-choice
+                # input below; n_alive upper-bounds it conservatively.
+                k = int(stats["next_deg"])
+                n_peel = n_alive
+            if max_rounds and loop.round > max_rounds:
+                break
+            peels = F.col("alive") & (F.col("deg") <= k)
+
+            # push a unit message along every edge out of a peeled
+            # vertex. Frontier size is known (n_peel): broadcast the
+            # semi-join only when it fits (the vxm strategy='auto' cost
+            # rule) — the k=0/1 levels of a web graph can peel a large
+            # fraction of all vertices, which must go through the shuffle
+            # semi-join instead
+            peel_ids = state.where(peels).select(F.col(ID).alias(SRC))
+            dec = (
+                sym_edges.join(
+                    broadcast_if_fits(peel_ids, n_peel), on=SRC, how="left_semi"
+                )
+                .groupBy(F.col(DST).alias(ID))
+                .agg(F.count("*").alias("_dec"))
+            )
+            nxt = state.join(dec, on=ID, how="left").select(
                 ID,
                 F.when(peels, F.col("deg"))
                 .otherwise(F.col("deg") - F.coalesce("_dec", F.lit(0)))
@@ -158,13 +159,13 @@ def kcore_decomposition(
                 F.when(peels, F.lit(k).cast("long")).otherwise(F.col("core")).alias("core"),
                 (F.col("alive") & ~peels).alias("alive"),
             )
-            # lazy: next round's stats agg materializes it (1 job/round)
-            .localCheckpoint(eager=False)
-        )
+            state, stats = loop.step(nxt, stage="peel", replaces=state, **census(k))
 
-    if we_persisted:
-        sym_edges.unpersist()
-    return KCoreResult(cores=state.select(ID, "core"), max_k=k, rounds=rounds)
+        loop.finish(state)
+    return KCoreResult(
+        cores=state.select(ID, "core"), max_k=k, rounds=loop.round,
+        history=loop.history,
+    )
 
 
 def _kcore_hindex(
@@ -189,99 +190,95 @@ def _kcore_hindex(
     partially aggregates map-side before its shuffle; the h-index
     cumulative window runs over per-vertex degree histograms (≤
     #distinct neighbour h values per vertex — hub-safe, no
-    collect_list); exactly ONE driver action per round."""
+    collect_list); each round is ONE :meth:`alp_spark.loop.Loop.step`
+    action with the change census observed on the checkpoint."""
     from pyspark.sql import Window
 
-    from ..plans.partitions import cache_sized, range_partitions
+    from ..plans.partitions import range_partitions
 
-    # size-derived cached layout (guide §2; conf-capped — identical at
-    # scale); the count doubles as the frontier-mode gate input below
-    sym_edges, m_sym = cache_sized(spark, sym_edges, key=SRC)
+    start = resume_round if resume_state is not None else 0
+    with Loop(spark, "kcore", checkpointer, checkpoint_every, start=start) as loop:
+        # size-derived cached layout (guide §2; conf-capped — identical
+        # at scale); the count doubles as the frontier-mode gate input
+        sym_edges, m_sym = loop.cache(sym_edges, key=SRC)
 
-    if resume_state is not None:
-        h = resume_state.select(ID, "h").localCheckpoint(eager=True)
-    else:
-        deg = sym_edges.groupBy(F.col(SRC).alias(ID)).agg(
-            F.count("*").alias("h")
-        )
-        h = (
-            spark.range(0, n, 1, range_partitions(spark, n))
-            .select(F.col("id").alias(ID))
-            .join(deg, on=ID, how="left")
-            .select(ID, F.coalesce("h", F.lit(0)).alias("h"))
-            .localCheckpoint(eager=True)
-        )
+        if resume_state is not None:
+            h = resume_state.select(ID, "h")
+        else:
+            deg = sym_edges.groupBy(F.col(SRC).alias(ID)).agg(
+                F.count("*").alias("h")
+            )
+            h = (
+                spark.range(0, n, 1, range_partitions(spark, n))
+                .select(F.col("id").alias(ID))
+                .join(deg, on=ID, how="left")
+                .select(ID, F.coalesce("h", F.lit(0)).alias("h"))
+            )
+        h, _ = loop.checkpoint(h)
 
-    # frontier mode: h(v) can change in round r only if a neighbour's h
-    # changed in round r-1, so once the change census falls below this,
-    # recompute only N(changed) — both semi-joins broadcast, the edge
-    # table never moves, and late-round cost tracks the frontier rather
-    # than the full edge count (the long tail of the fixpoint is many
-    # rounds × few changes). Fixed 50k, measured on the 158.6M-edge
-    # Zipf graph (BASELINE.md r5): full engine 817 s, 50k threshold
-    # 629 s; an adaptive n/8 (=500k) threshold REGRESSED to 746 s —
-    # when the census is still a sizeable fraction of n, N(changed)
-    # covers nearly the whole graph, so the two semi-joins prune
-    # nothing and just add broadcast + filter cost. Switch late: the
-    # frontier pays only when the frontier is genuinely small.
-    #
-    # Also gated on edge count: below ~20M symmetric edges a full round
-    # is already near the Spark job floor, and the frontier's extra
-    # jobs (targets distinct + two broadcast builds) cost MORE than
-    # they save — measured at graphscale 100k/4.7M edges: 29 s full vs
-    # 39 s frontier; at 1M/47M edges frontier wins (116 → 100 s) and at
-    # 158.6M edges it wins 817 → 629 s.
-    frontier_threshold = 50_000
-    frontier_enabled = m_sym >= frontier_min_edges
-    changed_prev = None  # None = recompute everything (also on resume)
-    nch = None
+        # frontier mode: h(v) can change in round r only if a neighbour's
+        # h changed in round r-1, so once the change census falls below
+        # this, recompute only N(changed) — both semi-joins broadcast,
+        # the edge table never moves, and late-round cost tracks the
+        # frontier rather than the full edge count (the long tail of the
+        # fixpoint is many rounds × few changes). Fixed 50k, measured on
+        # the 158.6M-edge Zipf graph (BASELINE.md r5): full engine 817 s,
+        # 50k threshold 629 s; an adaptive n/8 (=500k) threshold
+        # REGRESSED to 746 s — when the census is still a sizeable
+        # fraction of n, N(changed) covers nearly the whole graph, so the
+        # two semi-joins prune nothing and just add broadcast + filter
+        # cost. Switch late: the frontier pays only when the frontier is
+        # genuinely small.
+        #
+        # Also gated on edge count: below ~20M symmetric edges a full
+        # round is already near the Spark job floor, and the frontier's
+        # extra jobs (targets distinct + two broadcast builds) cost MORE
+        # than they save — measured at graphscale 100k/4.7M edges: 29 s
+        # full vs 39 s frontier; at 1M/47M edges frontier wins
+        # (116 → 100 s) and at 158.6M edges it wins 817 → 629 s.
+        frontier_threshold = 50_000
+        frontier_enabled = m_sym >= frontier_min_edges
+        # the first round (also on resume) recomputes everything
+        nch = None
 
-    rounds = resume_round
-    while True:
-        rounds += 1
-        if (
-            frontier_enabled
-            and changed_prev is not None
-            and nch is not None
-            and nch <= frontier_threshold
-        ):
-            targets = (
-                sym_edges.join(
-                    F.broadcast(changed_prev.select(F.col(ID).alias(SRC))),
-                    on=SRC,
+        while True:
+            if frontier_enabled and nch is not None and nch <= frontier_threshold:
+                changed_prev = h.where(F.col("_old") != F.col("h")).select(ID)
+                targets = (
+                    sym_edges.join(
+                        F.broadcast(changed_prev.select(F.col(ID).alias(SRC))),
+                        on=SRC,
+                        how="left_semi",
+                    )
+                    .select(F.col(DST).alias(ID))
+                    .distinct()
+                )
+                ef = sym_edges.join(
+                    F.broadcast(targets.select(F.col(ID).alias(DST))),
+                    on=DST,
                     how="left_semi",
                 )
-                .select(F.col(DST).alias(ID))
-                .distinct()
+            else:
+                ef = sym_edges
+            hs = h.select(F.col(ID).alias(SRC), F.col("h").alias("_hs"))
+            hist = (
+                ef.join(hs, on=SRC)
+                .groupBy(F.col(DST).alias(ID), F.col("_hs").alias("_c"))
+                .agg(F.count("*").alias("_m"))
             )
-            ef = sym_edges.join(
-                F.broadcast(targets.select(F.col(ID).alias(DST))),
-                on=DST,
-                how="left_semi",
+            w = (
+                Window.partitionBy(ID)
+                .orderBy(F.desc("_c"))
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
             )
-        else:
-            ef = sym_edges
-        hs = h.select(F.col(ID).alias(SRC), F.col("h").alias("_hs"))
-        hist = (
-            ef.join(hs, on=SRC)
-            .groupBy(F.col(DST).alias(ID), F.col("_hs").alias("_c"))
-            .agg(F.count("*").alias("_m"))
-        )
-        w = (
-            Window.partitionBy(ID)
-            .orderBy(F.desc("_c"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        # h-index over grouped values: max over distinct c of
-        # min(c, #neighbours with h >= c)
-        cand = (
-            hist.withColumn("_cum", F.sum("_m").over(w))
-            .groupBy(ID)
-            .agg(F.max(F.least(F.col("_c"), F.col("_cum"))).alias("_hnew"))
-        )
-        st = (
-            h.join(cand, on=ID, how="left")
-            .select(
+            # h-index over grouped values: max over distinct c of
+            # min(c, #neighbours with h >= c)
+            cand = (
+                hist.withColumn("_cum", F.sum("_m").over(w))
+                .groupBy(ID)
+                .agg(F.max(F.least(F.col("_c"), F.col("_cum"))).alias("_hnew"))
+            )
+            nxt = h.join(cand, on=ID, how="left").select(
                 ID,
                 F.col("h").alias("_old"),
                 # null _hnew = not recomputed this round (frontier mode)
@@ -294,31 +291,24 @@ def _kcore_hindex(
                 .otherwise(F.col("h"))
                 .alias("h"),
             )
-            .localCheckpoint(eager=False)
-        )
-        row = st.agg(
-            F.sum((F.col("_old") != F.col("h")).cast("long")).alias("nch"),
-            F.max("h").alias("mx"),
-        ).collect()[0]
-        h = st.select(ID, "h")
-        nch = int(row["nch"] or 0)
-        changed_prev = st.where(F.col("_old") != F.col("h")).select(ID)
-        if checkpointer is not None and rounds % checkpoint_every == 0:
-            checkpointer.save(
-                h, rounds, metrics={"changed": nch, "max_h": int(row["mx"] or 0)}
+            # ONE action: checkpoint + change census + max h; _old stays
+            # in the frame for the next round's frontier
+            h, stats = loop.step(
+                nxt,
+                stage="hindex",
+                replaces=h,
+                changed=F.sum((F.col("_old") != F.col("h")).cast("long")),
+                max_h=F.max("h"),
             )
-        if nch == 0 or (max_rounds and rounds >= max_rounds):
-            break
+            nch = int(stats["changed"] or 0)
+            if nch == 0 or (max_rounds and loop.round >= max_rounds):
+                break
 
-    if checkpointer is not None:
-        checkpointer.save(
-            h, rounds,
-            metrics={"changed": nch, "max_h": int(row["mx"] or 0)},
-            final=True,
-        )
-    sym_edges.unpersist()
+        max_h = int(stats["max_h"] or 0)
+        loop.finish(h, changed=nch, max_h=max_h)
     return KCoreResult(
         cores=h.select(ID, F.col("h").alias("core")),
-        max_k=int(row["mx"] or 0),
-        rounds=rounds,
+        max_k=max_h,
+        rounds=loop.round,
+        history=loop.history,
     )

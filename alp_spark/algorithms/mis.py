@@ -21,20 +21,21 @@ smaller priority in its neighbourhood minimum).
 Scale shape: the symmetric edge table is hash-partitioned by dst once
 and persisted (the FastSV layout); each round shuffles only the
 undecided frontier — whose size HALVES in expectation every round (half
-the EDGES die per Luby round) — and the state vector is
-localCheckpoint'ed lazily with exactly ONE driver action (the undecided
-census) per round.
+the EDGES die per Luby round) — and each round is one
+:meth:`alp_spark.loop.Loop.step` (one action, undecided census included).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
-from ..plans.partitions import cache_sized, range_partitions
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits
+from ..plans.partitions import range_partitions
 
 #: Knuth multiplicative hash constant; odd → bijective mod 2^32.
 PRIO_MULT = 2654435761
@@ -54,6 +55,7 @@ def priority_col(id_col: Column) -> Column:
 class MISResult:
     members: DataFrame  # (id,) — the maximal independent set
     rounds: int
+    history: list[dict] = field(default_factory=list)
 
 
 def maximal_independent_set(
@@ -70,75 +72,76 @@ def maximal_independent_set(
     independent (no edge inside), maximal (every outside vertex has a
     member neighbour), and identical across partitionings/cluster
     sizes because priorities are a pure function of the id."""
-    # size-derived layout (guide §2): the loop re-scans E and st every
-    # round, so empty-task overhead compounds per round; partition
-    # counts follow the measured row counts, capped at the conf value
-    # (identical layout to before at scale).
-    E, _ = cache_sized(spark, sym_edges.select(SRC, DST), key=DST)
+    with Loop(spark, "mis") as loop:
+        # size-derived layout (guide §2): the loop re-scans E and st
+        # every round, so empty-task overhead compounds per round;
+        # partition counts follow the measured row counts, capped at the
+        # conf value (identical layout to before at scale).
+        E, _ = loop.cache(sym_edges.select(SRC, DST), key=DST)
 
-    st = spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID),
-        priority_col(F.col("id")).alias("_p"),
-        F.lit(UNDECIDED).alias("_st"),
-    ).localCheckpoint(eager=True)
-
-    # driver-known state size gates STATIC broadcast plans for the
-    # per-round joins against the ≤ n-row state slices (no AQE
-    # both-sides materialization barrier — the hits5 measurement)
-    from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
-
-    small = n <= BROADCAST_NNZ_THRESHOLD
-
-    def _hint(side: DataFrame) -> DataFrame:
-        return F.broadcast(side) if small else side
-
-    rounds = 0
-    while True:
-        und = st.where(F.col("_st") == UNDECIDED)
-        # min undecided-neighbour priority per undecided vertex:
-        # (min, second) mxv masked to the undecided set on both sides
-        mn = (
-            E.join(
-                _hint(und.select(F.col(ID).alias(DST), F.col("_p").alias("_np"))),
-                on=DST,
-            )
-            .join(_hint(und.select(F.col(ID).alias(SRC))), on=SRC, how="left_semi")
-            .groupBy(SRC)
-            .agg(F.min("_np").alias("_mn"))
-            .select(F.col(SRC).alias(ID), "_mn")
-        )
-        winners = (
-            und.join(mn, on=ID, how="left")
-            .where(F.col("_mn").isNull() | (F.col("_p") < F.col("_mn")))
-            .select(ID)
-        )
-        nbrs = (
-            E.join(
-                _hint(winners.select(F.col(ID).alias(SRC))), on=SRC, how="left_semi"
-            )
-            .select(F.col(DST).alias(ID))
-            .distinct()
-        )
-        nxt = (
-            st.join(winners.select(ID, F.lit(True).alias("_w")), on=ID, how="left")
-            .join(nbrs.select(ID, F.lit(True).alias("_nb")), on=ID, how="left")
-            .select(
-                ID,
-                "_p",
-                F.when(F.col("_st") != UNDECIDED, F.col("_st"))
-                .when(F.col("_w"), F.lit(IN_MIS))
-                .when(F.col("_nb"), F.lit(OUT))
-                .otherwise(F.lit(UNDECIDED))
-                .alias("_st"),
+        st, _ = loop.checkpoint(
+            spark.range(0, n, 1, range_partitions(spark, n)).select(
+                F.col("id").alias(ID),
+                priority_col(F.col("id")).alias("_p"),
+                F.lit(UNDECIDED).alias("_st"),
             )
         )
-        # lazy: the census below materializes the checkpoint — one job
-        nxt = nxt.localCheckpoint(eager=False)
-        remaining = nxt.where(F.col("_st") == UNDECIDED).count()
-        st = nxt
-        rounds += 1
-        if remaining == 0 or (max_rounds and rounds >= max_rounds):
-            break
 
-    E.unpersist()
-    return MISResult(members=st.where(F.col("_st") == IN_MIS).select(ID), rounds=rounds)
+        # the driver-known state size n gates STATIC broadcast plans for
+        # the per-round joins against the ≤ n-row state slices (no AQE
+        # both-sides materialization barrier — the hits5 measurement)
+        def hint(side: DataFrame) -> DataFrame:
+            return broadcast_if_fits(side, n)
+
+        while True:
+            und = st.where(F.col("_st") == UNDECIDED)
+            # min undecided-neighbour priority per undecided vertex:
+            # (min, second) mxv masked to the undecided set on both sides
+            mn = (
+                E.join(
+                    hint(und.select(F.col(ID).alias(DST), F.col("_p").alias("_np"))),
+                    on=DST,
+                )
+                .join(hint(und.select(F.col(ID).alias(SRC))), on=SRC, how="left_semi")
+                .groupBy(SRC)
+                .agg(F.min("_np").alias("_mn"))
+                .select(F.col(SRC).alias(ID), "_mn")
+            )
+            winners = (
+                und.join(mn, on=ID, how="left")
+                .where(F.col("_mn").isNull() | (F.col("_p") < F.col("_mn")))
+                .select(ID)
+            )
+            nbrs = (
+                E.join(
+                    hint(winners.select(F.col(ID).alias(SRC))), on=SRC, how="left_semi"
+                )
+                .select(F.col(DST).alias(ID))
+                .distinct()
+            )
+            nxt = (
+                st.join(winners.select(ID, F.lit(True).alias("_w")), on=ID, how="left")
+                .join(nbrs.select(ID, F.lit(True).alias("_nb")), on=ID, how="left")
+                .select(
+                    ID,
+                    "_p",
+                    F.when(F.col("_st") != UNDECIDED, F.col("_st"))
+                    .when(F.col("_w"), F.lit(IN_MIS))
+                    .when(F.col("_nb"), F.lit(OUT))
+                    .otherwise(F.lit(UNDECIDED))
+                    .alias("_st"),
+                )
+            )
+            # ONE action: checkpoint + undecided census
+            st, stats = loop.step(
+                nxt, replaces=st, undecided=F.sum((F.col("_st") == UNDECIDED).cast("long"))
+            )
+            if not stats["undecided"] or (max_rounds and loop.round >= max_rounds):
+                break
+
+        loop.finish(st)
+    return MISResult(
+        members=st.where(F.col("_st") == IN_MIS).select(ID),
+        rounds=loop.round,
+        history=loop.history,
+    )

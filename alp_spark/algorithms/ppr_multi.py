@@ -33,7 +33,8 @@ from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..containers import DST, ID, SRC, VAL, set_dense
-from ..operators.blas2 import vxm
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits, vxm
 
 
 @dataclass
@@ -56,72 +57,64 @@ def ppr_multi(
     if not 0 < alpha < 1 or rounds < 1:
         raise ValueError("alpha must be in (0,1), rounds >= 1")
 
-    # size-derived cached layout (guide §2; conf-capped — identical at
-    # scale); the row-sum prelude broadcasts the dense ones vector
-    from ..plans.partitions import cache_sized
-
-    E, _ = cache_sized(spark, edges.select(SRC, DST), key=DST)
-
-    ones = set_dense(spark, n, 1.0)
-    inv = (
-        vxm(ones, E, alg.PLUS_FIRST, transpose=True, frontier_nnz=n)
-        .select(ID, (F.lit(alpha) / F.col(VAL)).alias("_inv"))
-        .persist()
-    )
-    inv.count()
-
-    seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
-    base = (
-        seeds_df.crossJoin(spark.range(n).select(F.col("id").alias(ID)))
-        .persist()
-    )
-    base.count()
-
     is_seed = F.when(F.col(ID) == F.col("seed"), F.lit(1.0)).otherwise(
         F.lit(0.0)
     )
-    state = base.select("seed", ID, is_seed.alias(VAL))
-    for _ in range(rounds):
-        # per-seed dangling mass — an S-row frame, broadcast in-plan
-        dang = (
-            state.join(inv.select(ID), on=ID, how="left_anti")
-            .groupBy("seed")
-            .agg(F.sum(VAL).alias("_dm"))
+    with Loop(spark, "ppr_multi") as loop:
+        # size-derived cached layout (guide §2; conf-capped — identical
+        # at scale); the row-sum prelude broadcasts the dense ones vector
+        E, _ = loop.cache(edges.select(SRC, DST), key=DST)
+        ones = set_dense(spark, n, 1.0)
+        inv, _ = loop.cache(
+            vxm(ones, E, alg.PLUS_FIRST, transpose=True, frontier_nnz=n)
+            .select(ID, (F.lit(alpha) / F.col(VAL)).alias("_inv")),
+            resize=False,
         )
-        scaled = state.join(inv, on=ID).select(
-            "seed",
-            F.col(ID).alias(SRC),
-            (F.col(VAL) * F.col("_inv")).alias("_x"),
-        )
-        if len(seeds) * n <= 1_000_000:  # blas2 broadcast threshold
-            scaled = F.broadcast(scaled)
-        contrib = (
-            scaled.join(E, on=SRC)
-            .groupBy("seed", DST)
-            .agg(F.sum("_x").alias("_c"))
-            .select("seed", F.col(DST).alias(ID), "_c")
-        )
-        state = (
-            base.join(contrib, on=["seed", ID], how="left")
-            .join(F.broadcast(dang), on="seed", how="left")
-            .select(
-                "seed",
-                ID,
-                (
-                    F.coalesce("_c", F.lit(0.0))
-                    + (
-                        F.lit(alpha) * F.coalesce("_dm", F.lit(0.0))
-                        + F.lit(1.0 - alpha)
-                    )
-                    * is_seed
-                ).alias(VAL),
-            )
-            .localCheckpoint(eager=False)
+        seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
+        base, _ = loop.cache(
+            seeds_df.crossJoin(spark.range(n).select(F.col("id").alias(ID))),
+            resize=False,
         )
 
-    # ONE action fills the whole lazy chain, then caches can go
-    state.count()
-    E.unpersist()
-    inv.unpersist()
-    base.unpersist()
+        state = base.select("seed", ID, is_seed.alias(VAL))
+        for _ in range(rounds):
+            # per-seed dangling mass — an S-row frame, broadcast in-plan
+            dang = (
+                state.join(inv.select(ID), on=ID, how="left_anti")
+                .groupBy("seed")
+                .agg(F.sum(VAL).alias("_dm"))
+            )
+            scaled = state.join(inv, on=ID).select(
+                "seed",
+                F.col(ID).alias(SRC),
+                (F.col(VAL) * F.col("_inv")).alias("_x"),
+            )
+            contrib = (
+                broadcast_if_fits(scaled, len(seeds) * n)
+                .join(E, on=SRC)
+                .groupBy("seed", DST)
+                .agg(F.sum("_x").alias("_c"))
+                .select("seed", F.col(DST).alias(ID), "_c")
+            )
+            state = loop.lazy(
+                base.join(contrib, on=["seed", ID], how="left")
+                .join(F.broadcast(dang), on="seed", how="left")
+                .select(
+                    "seed",
+                    ID,
+                    (
+                        F.coalesce("_c", F.lit(0.0))
+                        + (
+                            F.lit(alpha) * F.coalesce("_dm", F.lit(0.0))
+                            + F.lit(1.0 - alpha)
+                        )
+                        * is_seed
+                    ).alias(VAL),
+                )
+            )
+
+        # ONE action fills the whole lazy chain; the loop then releases
+        # the caches and the intermediate rounds
+        loop.fill(state)
+        loop.finish(state)
     return PPRMultiResult(ranks=state, rounds=rounds)

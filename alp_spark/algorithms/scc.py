@@ -30,19 +30,20 @@ inside the active set is zero, each a singleton SCC) runs first each
 outer round and absorbs exactly those chains.
 
 Scale shape: per inner round one join + one map-side-combined min
-aggregation (the FastSV currency); ONE census action per inner round;
-state localCheckpoint'ed; the active edge set is re-filtered (two
-semi-joins) and re-persisted once per outer round.
+aggregation (the FastSV currency), one :meth:`alp_spark.loop.Loop.step`
+(one action, census included); the active edge set is re-filtered (two
+semi-joins) and swapped in after every trim and harvest.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
+from ..loop import Loop
 
 
 @dataclass
@@ -50,17 +51,19 @@ class SCCResult:
     labels: DataFrame  # (id, scc) — scc = min vertex id of the component
     outer_rounds: int
     inner_rounds: int
+    history: list[dict] = field(default_factory=list)  # one per inner round
 
 
 def _min_flood(
-    active: DataFrame, E: DataFrame, forward: bool
+    active: DataFrame, E: DataFrame, forward: bool, loop: Loop
 ) -> tuple[DataFrame, int]:
-    """Min-label flood over the active vertex set: returns (id, f) with
-    f = min id that reaches v (forward=True) or that v reaches
-    (forward=False). ``active`` is (id,); E is already restricted."""
+    """Min-label flood over the active vertex set: returns ((id, _f, …),
+    rounds) with _f = min id that reaches v (forward=True) or that v
+    reaches (forward=False). ``active`` is (id,); E is already
+    restricted. Each round is one step of ``loop``."""
+    start = loop.round
     a, b = (SRC, DST) if forward else (DST, SRC)
-    f = active.select(ID, F.col(ID).alias("_f")).localCheckpoint(eager=True)
-    rounds = 0
+    f, _ = loop.checkpoint(active.select(ID, F.col(ID).alias("_f")), stage="color")
     while True:
         pushed = (
             E.join(f.select(F.col(ID).alias(a), F.col("_f").alias("_in")), on=a)
@@ -93,13 +96,13 @@ def _min_flood(
                     | (F.coalesce("_g", F.col("_f")) < F.col("_f"))
                 ).alias("_chg"),
             )
-            .localCheckpoint(eager=False)
         )
-        changed = nxt.where(F.col("_chg")).count()
-        f = nxt.select(ID, "_f")
-        rounds += 1
-        if changed == 0:
-            return f, rounds
+        f, stats = loop.step(
+            nxt, stage="color", replaces=f,
+            changed=F.sum(F.col("_chg").cast("long")),
+        )
+        if not stats["changed"]:
+            return f, loop.round - start
 
 
 def reach_set(
@@ -111,28 +114,29 @@ def reach_set(
     """Fixpoint reachability from a seed set (frontier BFS): returns
     (id,) of every vertex reachable FROM the seeds along edge direction
     (``forward=True``) or that REACHES the seeds (``forward=False``),
-    seeds included. One census action per BFS level; each level
-    expands only the new frontier (classic delta optimisation — the
-    SSSP delta-frontier argument with the boolean (or, and) ring)."""
+    seeds included. One loop step per BFS level; each level expands
+    only the new frontier (classic delta optimisation — the SSSP
+    delta-frontier argument with the boolean (or, and) ring)."""
     a, b = (SRC, DST) if forward else (DST, SRC)
-    from ..plans.partitions import cache_sized
-
-    E, _ = cache_sized(spark, edges.select(SRC, DST), key=a)
-    r = seeds.select(ID).distinct().localCheckpoint(eager=True)
-    frontier = r
-    while True:
-        step = (
-            E.join(frontier.select(F.col(ID).alias(a)), on=a)
-            .select(F.col(b).alias(ID))
-            .distinct()
-            .join(r, on=ID, how="left_anti")
-            .localCheckpoint(eager=False)
-        )
-        if step.count() == 0:
-            break
-        r = r.unionByName(step).localCheckpoint(eager=True)
-        frontier = step
-    E.unpersist()
+    with Loop(spark, "reach_set") as loop:
+        E, _ = loop.cache(edges.select(SRC, DST), key=a)
+        r, _ = loop.checkpoint(seeds.select(ID).distinct())
+        frontier = None  # the last level; None = the seeds themselves
+        while True:
+            src = r if frontier is None else frontier
+            level, stats = loop.step(
+                E.join(src.select(F.col(ID).alias(a)), on=a)
+                .select(F.col(b).alias(ID))
+                .distinct()
+                .join(r, on=ID, how="left_anti"),
+                replaces=frontier,
+                grew=F.count(F.lit(1)),
+            )
+            if not stats["grew"]:
+                break
+            r, _ = loop.checkpoint(r.unionByName(level), stage="union", replaces=r)
+            frontier = level
+        loop.finish(r)
     return r
 
 
@@ -145,8 +149,7 @@ def bowtie_classes(
     vertex ``core`` (the largest SCC; ties broken by smallest label),
     ``in`` (reaches the core), ``out`` (reachable from the core), or
     ``other`` (tendrils, tubes, disconnected). Returns (id, cls)."""
-    labels = strongly_connected_components(spark, edges, n).labels
-    labels = labels.localCheckpoint(eager=True)
+    labels = strongly_connected_components(spark, edges, n).labels  # checkpointed
     core_lbl = (
         labels.groupBy("scc")
         .agg(F.count("*").alias("_sz"))
@@ -185,98 +188,101 @@ def strongly_connected_components(
     table (no self-loops required; parallel edges tolerated). Labels
     are the component's minimum vertex id. Isolated vertices and all
     other singleton SCCs get their own id."""
-    assigned_parts: list[DataFrame] = []
-    active = spark.range(n).select(F.col("id").alias(ID)).localCheckpoint(
-        eager=True
+
+    def without(E: DataFrame, gone: DataFrame) -> DataFrame:
+        return E.join(
+            gone.select(F.col(ID).alias(SRC)), on=SRC, how="left_anti"
+        ).join(gone.select(F.col(ID).alias(DST)), on=DST, how="left_anti")
+
+    count = F.count(F.lit(1))
+    parts: list[DataFrame] = []  # (id, scc) per assigned batch
+    with Loop(spark, "scc") as loop:
+        Eact, _ = loop.cache(edges.select(SRC, DST), key=DST)
+        active, stats = loop.checkpoint(
+            spark.range(n).select(F.col("id").alias(ID)), stage="active", n=count
+        )
+
+        outer = 0
+        while stats["n"] and not (max_outer and outer >= max_outer):
+            outer += 1
+
+            # trim: peel vertices with zero in- or out-degree inside the
+            # active set — each is a singleton SCC; repeat to absorb chains
+            while True:
+                srcs = Eact.select(F.col(SRC).alias(ID)).distinct()
+                dsts = Eact.select(F.col(DST).alias(ID)).distinct()
+                trivial, tstats = loop.step(
+                    active.join(srcs, on=ID, how="left_anti")
+                    .unionByName(active.join(dsts, on=ID, how="left_anti"))
+                    .distinct(),
+                    stage="trim",
+                    trivial=count,
+                )
+                if not tstats["trivial"]:
+                    loop.release(trivial)
+                    break
+                parts.append(trivial.select(ID, F.col(ID).alias("scc")))
+                active, stats = loop.checkpoint(
+                    active.join(trivial, on=ID, how="left_anti"),
+                    stage="active", replaces=active, n=count,
+                )
+                Eact = loop.swap(Eact, without(Eact, trivial))
+            if not stats["n"]:
+                continue
+
+            # color: forward min flood
+            f, _ = _min_flood(active, Eact, forward=True, loop=loop)
+
+            # harvest: backward reach from each color root within the color
+            reached, _ = loop.checkpoint(
+                f.where(F.col(ID) == F.col("_f")).select(ID, "_f"), stage="reached"
+            )
+            level = None
+            while True:
+                # v active joins if some out-edge (v,u) lands in `reached`
+                # with matching color
+                nxt = (
+                    Eact.join(
+                        reached.select(F.col(ID).alias(DST), F.col("_f").alias("_rf")),
+                        on=DST,
+                    )
+                    .join(
+                        f.select(F.col(ID).alias(SRC), F.col("_f").alias("_vf")),
+                        on=SRC,
+                    )
+                    .where(F.col("_rf") == F.col("_vf"))
+                    .select(F.col(SRC).alias(ID), F.col("_vf").alias("_f"))
+                    .distinct()
+                    .join(reached.select(ID), on=ID, how="left_anti")
+                )
+                level, hstats = loop.step(
+                    nxt, stage="harvest", replaces=level, grew=count
+                )
+                if not hstats["grew"]:
+                    break
+                reached, _ = loop.checkpoint(
+                    reached.unionByName(level), stage="reached", replaces=reached
+                )
+            loop.release(f, level)
+
+            parts.append(reached.select(ID, F.col("_f").alias("scc")))
+            active, stats = loop.checkpoint(
+                active.join(reached.select(ID), on=ID, how="left_anti"),
+                stage="active", replaces=active, n=count,
+            )
+            Eact = loop.swap(Eact, without(Eact, reached))
+
+        if not parts:  # n == 0
+            labels = spark.range(0).select(ID, F.col(ID).alias("scc"))
+        else:
+            # one frame for the result: the assigned batches are
+            # released with the loop
+            union = parts[0]
+            for p in parts[1:]:
+                union = union.unionByName(p)
+            labels, _ = loop.checkpoint(union, stage="labels")
+            loop.finish(labels)
+    return SCCResult(
+        labels=labels, outer_rounds=outer, inner_rounds=loop.round,
+        history=loop.history,
     )
-    from ..plans.partitions import cache_sized
-
-    Eact, _ = cache_sized(spark, edges.select(SRC, DST), key=DST)
-
-    outer = 0
-    inner = 0
-    while True:
-        n_active = active.count()
-        if n_active == 0 or (max_outer and outer >= max_outer):
-            break
-        outer += 1
-
-        # trim: peel vertices with zero in- or out-degree inside the
-        # active set — each is a singleton SCC; repeat to absorb chains
-        while True:
-            srcs = Eact.select(F.col(SRC).alias(ID)).distinct()
-            dsts = Eact.select(F.col(DST).alias(ID)).distinct()
-            trivial = active.join(srcs, on=ID, how="left_anti").unionByName(
-                active.join(dsts, on=ID, how="left_anti")
-            ).distinct().localCheckpoint(eager=True)
-            inner += 1
-            if trivial.count() == 0:
-                break
-            assigned_parts.append(trivial.select(ID, F.col(ID).alias("scc")))
-            active = active.join(trivial, on=ID, how="left_anti").localCheckpoint(
-                eager=True
-            )
-            nE = (
-                Eact.join(trivial.select(F.col(ID).alias(SRC)), on=SRC, how="left_anti")
-                .join(trivial.select(F.col(ID).alias(DST)), on=DST, how="left_anti")
-                .persist()
-            )
-            nE.count()
-            Eact.unpersist()
-            Eact = nE
-        if active.count() == 0:
-            continue
-
-        # color: forward min flood
-        f, r1 = _min_flood(active, Eact, forward=True)
-        f = f.localCheckpoint(eager=True)
-        inner += r1
-
-        # harvest: backward reach from each color root within the color
-        roots = f.where(F.col(ID) == F.col("_f")).select(ID, "_f")
-        reached = roots.localCheckpoint(eager=True)
-        while True:
-            # v active joins if some out-edge (v,u) lands in `reached`
-            # with matching color
-            step = (
-                Eact.join(
-                    reached.select(F.col(ID).alias(DST), F.col("_f").alias("_rf")),
-                    on=DST,
-                )
-                .join(
-                    f.select(F.col(ID).alias(SRC), F.col("_f").alias("_vf")),
-                    on=SRC,
-                )
-                .where(F.col("_rf") == F.col("_vf"))
-                .select(F.col(SRC).alias(ID), F.col("_vf").alias("_f"))
-                .distinct()
-                .join(reached.select(ID), on=ID, how="left_anti")
-                .localCheckpoint(eager=False)
-            )
-            grew = step.count()
-            inner += 1
-            if grew == 0:
-                break
-            reached = reached.unionByName(step).localCheckpoint(eager=True)
-
-        assigned_parts.append(reached.select(ID, F.col("_f").alias("scc")))
-        active = active.join(reached.select(ID), on=ID, how="left_anti").localCheckpoint(
-            eager=True
-        )
-        nE = (
-            Eact.join(reached.select(F.col(ID).alias(SRC)), on=SRC, how="left_anti")
-            .join(reached.select(F.col(ID).alias(DST)), on=DST, how="left_anti")
-            .persist()
-        )
-        nE.count()
-        Eact.unpersist()
-        Eact = nE
-
-    Eact.unpersist()
-    if not assigned_parts:  # n == 0
-        out = spark.range(0).select(ID, F.col(ID).alias("scc"))
-    else:
-        out = assigned_parts[0]
-        for p in assigned_parts[1:]:
-            out = out.unionByName(p)
-    return SCCResult(labels=out, outer_rounds=outer, inner_rounds=inner)

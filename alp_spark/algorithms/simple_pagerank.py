@@ -18,12 +18,10 @@ driver-side loop over DataFrame jobs:
     stop when residual ≤ conv or iter == max
 
 Scale design: the only per-iteration shuffles are the vxm groupBy(dst)
-(map-side partial aggregation absorbs hub in-degree skew) and one id-join;
-residual AND the *next* iteration's dangling mass are computed in a single
-action over one joined frame, so each iteration costs exactly one job
-after the pipeline warms. ``pr`` is localCheckpoint'ed every iteration to
-truncate lineage (resumable parquet checkpoints are layered on by
-:mod:`alp_spark.checkpoint` when a checkpointer is passed).
+(map-side partial aggregation absorbs hub in-degree skew) and one id-join.
+Each iteration is one :meth:`alp_spark.loop.Loop.step`: one action that
+checkpoints ``pr`` and observes the residual AND the *next* iteration's
+dangling mass (the initial mass rides on the initial checkpoint).
 """
 
 from __future__ import annotations
@@ -35,16 +33,16 @@ from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..containers import ID, VAL, set_dense
+from ..loop import Loop
 from ..operators import vxm
-from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
+from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD, broadcast_if_fits
 
 #: 'auto' broadcasts the dense rank vector up to this n. 16x the sparse
 #: frontier threshold (blas2.BROADCAST_NNZ_THRESHOLD) ≈ 256 MB of
 #: (id, val) pairs per executor as a broadcast hash table — sized for
-#: >= 4 GB executors; pass a smaller ``dense_broadcast_nnz`` (or
-#: strategy='shuffle') on memory-constrained clusters. The win it buys:
-#: the persisted dst-partitioned edge table is never re-shuffled, so
-#: each iteration runs with ZERO Exchange.
+#: >= 4 GB executors; pass strategy='shuffle' on memory-constrained
+#: clusters. The win it buys: the persisted dst-partitioned edge table
+#: is never re-shuffled, so each iteration runs with ZERO Exchange.
 DENSE_BROADCAST_NNZ = 16 * BROADCAST_NNZ_THRESHOLD
 
 
@@ -54,6 +52,7 @@ class PageRankResult:
     iterations: int
     residual: float
     residuals: list[float] = field(default_factory=list)
+    history: list[dict] = field(default_factory=list)
 
 
 def simple_pagerank(
@@ -68,7 +67,6 @@ def simple_pagerank(
     initial: DataFrame | None = None,
     start_iteration: int = 0,
     strategy: str = "auto",
-    dense_broadcast_nnz: int = DENSE_BROADCAST_NNZ,
     teleport: DataFrame | None = None,
 ) -> PageRankResult:
     """Run PageRank to convergence; defaults mirror the reference
@@ -84,9 +82,9 @@ def simple_pagerank(
 
     ``strategy``: vxm join strategy per iteration. 'auto' broadcasts the
     (always dense) rank vector when it fits executor memory
-    (n ≤ ``dense_broadcast_nnz``, see :data:`DENSE_BROADCAST_NNZ` for
-    the memory math), so the edge table — persisted here once — is
-    never re-shuffled; larger graphs fall back to the shuffle hash join.
+    (n ≤ :data:`DENSE_BROADCAST_NNZ`, see there for the memory math), so
+    the edge table — persisted here once — is never re-shuffled; larger
+    graphs fall back to the shuffle hash join.
     The analog of the reference's CRS/CCS loop-size strategy choice
     (reference/blas2.hpp:1104-1145).
     """
@@ -94,133 +92,113 @@ def simple_pagerank(
         raise ValueError("alpha must be in (0,1), max_iter > 0")  # ILLEGAL checks
 
     if strategy == "auto":
-        strategy = "broadcast" if n <= dense_broadcast_nnz else "shuffle"
-    we_persisted = False
-    if not edges.storageLevel.useMemory:
-        # pre-partition by dst ONCE (broadcast strategy): the broadcast
-        # hash join preserves this partitioning, so every iteration's
-        # groupBy(dst) runs exchange-free. The partition count is
-        # size-derived (guide §2), capped at the conf parallelism — at
-        # scale this is exactly the old conf-sized layout.
-        from ..plans.partitions import cache_sized
+        strategy = "broadcast" if n <= DENSE_BROADCAST_NNZ else "shuffle"
+    with Loop(
+        spark, "simple_pagerank", checkpointer, checkpoint_every,
+        start=start_iteration,
+    ) as loop:
+        if not edges.storageLevel.useMemory:
+            # pre-partition by dst ONCE (broadcast strategy): the
+            # broadcast hash join preserves this partitioning, so every
+            # iteration's groupBy(dst) runs exchange-free. The partition
+            # count is size-derived (guide §2), capped at the conf
+            # parallelism — at scale this is exactly the old conf-sized
+            # layout.
+            edges, _ = loop.cache(
+                edges, key="dst" if strategy == "broadcast" else None
+            )
 
-        edges, _ = cache_sized(
-            spark, edges, key="dst" if strategy == "broadcast" else None
+        # --- prelude: inverted scaled out-degrees ---------------------------
+        # A pattern matrix normalizes by out-degree (count); a weighted
+        # matrix (VAL column present) normalizes by out-WEIGHT — the per-
+        # iteration vxm below already multiplies by the matrix value, so
+        # switching only this prelude ring yields exact weighted PageRank
+        # (rank flows ∝ w/Σ_out w). Reference PageRank is pattern-only
+        # (simple_pagerank.hpp:210-222); the weighted path serves coarsened
+        # graphs (e.g. host-level rollups carrying link multiplicities).
+        row_ring = alg.PLUS_TIMES if VAL in edges.columns else alg.PLUS_FIRST
+        ones = set_dense(spark, n, 1.0)
+        # the prelude row-sum uses the same strategy gate as the loop: the
+        # dense ones vector broadcasts when n fits, so the cached edge
+        # table is never shuffled for the degree pass either
+        inv, _ = loop.cache(
+            vxm(ones, edges, row_ring, transpose=True, strategy=strategy)
+            .select(F.col(ID), (F.lit(alpha) / F.col(VAL)).alias("inv")),
+            resize=False,
         )
-        we_persisted = True
-
-    # --- prelude: inverted scaled out-degrees -------------------------------
-    # A pattern matrix normalizes by out-degree (count); a weighted
-    # matrix (VAL column present) normalizes by out-WEIGHT — the per-
-    # iteration vxm below already multiplies by the matrix value, so
-    # switching only this prelude ring yields exact weighted PageRank
-    # (rank flows ∝ w/Σ_out w). Reference PageRank is pattern-only
-    # (simple_pagerank.hpp:210-222); the weighted path serves coarsened
-    # graphs (e.g. host-level rollups carrying link multiplicities).
-    row_ring = alg.PLUS_TIMES if VAL in edges.columns else alg.PLUS_FIRST
-    ones = set_dense(spark, n, 1.0)
-    # the prelude row-sum uses the same strategy gate as the loop: the
-    # dense ones vector broadcasts when n fits, so the cached edge
-    # table is never shuffled for the degree pass either
-    inv = (
-        vxm(ones, edges, row_ring, transpose=True, strategy=strategy)
-        .select(F.col(ID), (F.lit(alpha) / F.col(VAL)).alias("inv"))
-        .persist()
-    )
-    inv.count()
-    inv_small = None
-    if n <= BROADCAST_NNZ_THRESHOLD:
-        inv_small = F.broadcast(inv)
-
-    tele = None
-    if teleport is not None:
-        # densify to all n rows (non-seed vertices still RECEIVE link
-        # mass, so the iterate must stay dense) and pin the plan
-        tele = (
-            set_dense(spark, n, 0.0)
-            .join(teleport.select(ID, F.col(VAL).alias("_t")), on=ID, how="left")
-            .select(ID, F.coalesce(F.col("_t"), F.lit(0.0)).alias("_tele"))
-            .persist()
+        has_out = broadcast_if_fits(
+            inv.select(ID, F.lit(True).alias("_has_out")), n
         )
-        tele.count()
 
-    if initial is not None:
-        pr = initial
-    elif tele is not None:
-        pr = tele.select(ID, F.col("_tele").alias(VAL))  # pr0 = v
-    else:
-        pr = set_dense(spark, n, 1.0 / n)
-    pr = pr.localCheckpoint(eager=True)
+        tele = None
+        if teleport is not None:
+            # densify to all n rows (non-seed vertices still RECEIVE link
+            # mass, so the iterate must stay dense) and pin the plan
+            tele, _ = loop.cache(
+                set_dense(spark, n, 0.0)
+                .join(teleport.select(ID, F.col(VAL).alias("_t")), on=ID, how="left")
+                .select(ID, F.coalesce(F.col("_t"), F.lit(0.0)).alias("_tele")),
+                resize=False,
+            )
 
-    # initial dangling mass: Σ pr over ids absent from inv
-    dangling = (
-        pr.join(inv, on=ID, how="left_anti").agg(F.sum(VAL).alias("d")).collect()[0]["d"]
-        or 0.0
-    )
-
-    iters = start_iteration
-    residual = float("inf")
-    residuals: list[float] = []
-    while True:
-        if tele is None:
-            add = F.lit((alpha * dangling + 1.0 - alpha) / n)
+        if initial is not None:
+            pr = initial
+        elif tele is not None:
+            pr = tele.select(ID, F.col("_tele").alias(VAL))  # pr0 = v
         else:
-            # personalized: the same scalar mass lands ∝ teleport value
-            add = F.lit(alpha * dangling + 1.0 - alpha) * F.col("_tele")
-
-        # scaled = pr ⊗ inv (intersection); new = scaled·L (sparse);
-        # next = coalesce(new, 0) + teleport share, carried with the old
-        # value for the fused agg
-        scaled = (
-            pr.join(inv_small if inv_small is not None else inv, on=ID, how="inner")
-            .select(F.col(ID), (F.col(VAL) * F.col("inv")).alias(VAL))
+            pr = set_dense(spark, n, 1.0 / n)
+        # dangling mass: Σ pr over ids absent from inv
+        dangling_col = F.sum(F.when(F.col("_has_out").isNull(), F.col(VAL)))
+        pr, stats = loop.checkpoint(
+            pr.join(has_out, on=ID, how="left"), dangling=dangling_col
         )
-        new = vxm(scaled, edges, alg.PLUS_TIMES, strategy=strategy)
-        base = pr.alias("p").join(new.alias("m"), on=ID, how="left")
-        if tele is not None:
-            base = base.join(tele, on=ID)
-        nxt = (
-            base
-            .join(inv.select(ID, F.lit(True).alias("_has_out")), on=ID, how="left")
-            .select(
+
+        residual = float("inf")
+        while True:
+            dangling = float(stats["dangling"] or 0.0)
+            if tele is None:
+                add = F.lit((alpha * dangling + 1.0 - alpha) / n)
+            else:
+                # personalized: the same scalar mass lands ∝ teleport value
+                add = F.lit(alpha * dangling + 1.0 - alpha) * F.col("_tele")
+
+            # scaled = pr ⊗ inv (intersection); new = scaled·L (sparse);
+            # next = coalesce(new, 0) + teleport share, carried with the
+            # old value for the residual
+            scaled = (
+                pr.join(broadcast_if_fits(inv, n), on=ID, how="inner")
+                .select(F.col(ID), (F.col(VAL) * F.col("inv")).alias(VAL))
+            )
+            new = vxm(scaled, edges, alg.PLUS_TIMES, strategy=strategy)
+            base = pr.select(ID, VAL).alias("p").join(new.alias("m"), on=ID, how="left")
+            if tele is not None:
+                base = base.join(tele, on=ID)
+            nxt = base.join(has_out, on=ID, how="left").select(
                 F.col(ID),
                 (F.coalesce(F.col(f"m.{VAL}"), F.lit(0.0)) + add).alias(VAL),
                 F.col(f"p.{VAL}").alias("_old"),
                 F.col("_has_out"),
             )
-        )
-        # lazy: the fused agg below materializes the checkpoint — one
-        # job per iteration (old pr stays cached until then)
-        nxt = nxt.localCheckpoint(eager=False)
+            # ONE action: checkpoint + L1 residual + next iteration's
+            # dangling mass
+            pr, stats = loop.step(
+                nxt,
+                replaces=pr,
+                residual=F.sum(F.abs(F.col(VAL) - F.col("_old"))),
+                dangling=dangling_col,
+            )
+            residual = float(stats["residual"])
+            if (conv != 0.0 and residual <= conv) or loop.round >= max_iter:
+                break
 
-        # ONE action: L1 residual + next iteration's dangling mass
-        row = nxt.agg(
-            F.sum(F.abs(F.col(VAL) - F.col("_old"))).alias("residual"),
-            F.sum(F.when(F.col("_has_out").isNull(), F.col(VAL))).alias("dangling"),
-        ).collect()[0]
-        residual = float(row["residual"])
-        dangling = float(row["dangling"] or 0.0)
-        residuals.append(residual)
-
-        old = pr
-        pr = nxt.select(ID, VAL)
-        old.unpersist()
-        iters += 1
-
-        if checkpointer is not None and iters % checkpoint_every == 0:
-            checkpointer.save(pr, superstep=iters, metrics={"residual": residual})
-
-        if (conv != 0.0 and residual <= conv) or iters >= max_iter:
-            break
-
-    inv.unpersist()
-    if tele is not None:
-        tele.unpersist()
-    if we_persisted:
-        edges.unpersist()
-    if checkpointer is not None:
-        checkpointer.save(pr, superstep=iters, metrics={"residual": residual}, final=True)
-    return PageRankResult(ranks=pr, iterations=iters, residual=residual, residuals=residuals)
+        loop.finish(pr, residual=residual)
+    return PageRankResult(
+        ranks=pr.select(ID, VAL),
+        iterations=loop.round,
+        residual=residual,
+        residuals=[h["residual"] for h in loop.history],
+        history=loop.history,
+    )
 
 
 def simple_pagerank_csr(

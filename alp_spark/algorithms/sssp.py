@@ -24,19 +24,20 @@ census feeds ``mxv(frontier_nnz=...)`` so a small frontier broadcasts
 radius (≤ n−1 on any graph without negative cycles).
 
 Scale: each round is one shuffle agg (map-side MIN combine) over the
-changed frontier's out-edges plus one O(frontier) census action;
-lazy localCheckpoint keeps lineage flat.
+changed frontier's out-edges, one :meth:`alp_spark.loop.Loop.step` (one
+action, changed census included).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..containers import DST, ID, SRC, VAL, vector_schema
+from ..loop import Loop
 from ..operators import mxv
 
 
@@ -45,6 +46,7 @@ class SsspResult:
     dists: DataFrame  # (id, val) — reachable vertices only (sparse)
     rounds: int
     converged: bool
+    history: list[dict] = field(default_factory=list)
 
 
 def sssp(
@@ -64,39 +66,44 @@ def sssp(
         # pattern matrix: every edge costs the ring one (0.0) — mirrors
         # mpv3's pattern-ring convention
         A = A.withColumn(VAL, F.lit(0.0))
-    B = A.select(SRC, DST, F.col(VAL).cast("double")).persist()
+    with Loop(spark, "sssp") as loop:
+        B, _ = loop.cache(A.select(SRC, DST, F.col(VAL).cast("double")), resize=False)
 
-    x = spark.createDataFrame([(source, 0.0)], vector_schema("double"))
-    changed = x
-    nch = 1
-    inf = F.lit(float("inf"))
-    limit = max_rounds if max_rounds is not None else max(n - 1, 1)
-    rounds, converged = 0, False
-    while rounds < limit:
-        relax = mxv(
-            B, changed, alg.MIN_PLUS, transpose=True, frontier_nnz=nch
-        )
-        rounds += 1
-        merged = (
-            x.select(ID, F.col(VAL).alias("_old"))
-            .join(relax.select(ID, F.col(VAL).alias("_new")), on=ID, how="full")
-            .select(
-                ID,
-                F.least(
-                    F.coalesce("_old", inf), F.coalesce("_new", inf)
-                ).alias(VAL),
-                (
-                    F.col("_old").isNull()
-                    | (F.coalesce("_new", inf) < F.col("_old"))
-                ).alias("_ch"),
+        x = spark.createDataFrame([(source, 0.0)], vector_schema("double"))
+        changed = x
+        nch = 1
+        inf = F.lit(float("inf"))
+        limit = max_rounds if max_rounds is not None else max(n - 1, 1)
+        converged = False
+        while loop.round < limit:
+            relax = mxv(
+                B, changed, alg.MIN_PLUS, transpose=True, frontier_nnz=nch
             )
-            .localCheckpoint(eager=False)
-        )
-        nch = merged.where("_ch").count()
-        changed = merged.where("_ch").select(ID, VAL)
-        x = merged.select(ID, VAL)
-        if nch == 0:
-            converged = True
-            break
-    B.unpersist()
-    return SsspResult(dists=x, rounds=rounds, converged=converged)
+            merged = (
+                x.select(ID, F.col(VAL).alias("_old"))
+                .join(relax.select(ID, F.col(VAL).alias("_new")), on=ID, how="full")
+                .select(
+                    ID,
+                    F.least(
+                        F.coalesce("_old", inf), F.coalesce("_new", inf)
+                    ).alias(VAL),
+                    (
+                        F.col("_old").isNull()
+                        | (F.coalesce("_new", inf) < F.col("_old"))
+                    ).alias("_ch"),
+                )
+            )
+            # ONE action: checkpoint + changed census
+            x, stats = loop.step(
+                merged, replaces=x, changed=F.sum(F.col("_ch").cast("long"))
+            )
+            nch = int(stats["changed"] or 0)
+            changed = x.where("_ch").select(ID, VAL)
+            if nch == 0:
+                converged = True
+                break
+        loop.finish(x)
+    return SsspResult(
+        dists=x.select(ID, VAL), rounds=loop.round, converged=converged,
+        history=loop.history,
+    )

@@ -37,29 +37,32 @@ enumerating triangles through the huge dropped set would cost more
 than a fresh pass — the loop falls back to the round-1 full
 enumeration over the (now small) survivor set; both paths are exact.
 
-Scale shape: dropped sets are broadcast up to ``BROADCAST_NNZ_THRESHOLD``
-edges and shuffle-joined above it (the fallback gate bounds them only
-relative to the survivors); the adjacency side never moves; state is one
-(src, dst, sup) frame localCheckpoint'ed per round (plan truncation —
-the un-truncated nested plan OOM'd the driver during analysis by
-round ~9); ONE census action per round.
+Scale shape: dropped sets go through the one broadcast gate
+(``blas2.broadcast_if_fits``): broadcast up to its absolute bound and
+shuffle-joined above it (the fallback gate bounds them only relative to
+the survivors); the adjacency side never moves; state is one
+(src, dst, sup) frame checkpointed per round (plan truncation — the
+un-truncated nested plan OOM'd the driver during analysis by round ~9)
+by one :meth:`alp_spark.loop.Loop.step` (one action, drop census included).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, SRC
-from ..operators.blas2 import BROADCAST_NNZ_THRESHOLD
+from ..loop import Loop
+from ..operators.blas2 import broadcast_if_fits
 
 
 @dataclass
 class TrussResult:
     edges: DataFrame  # (src, dst) src < dst — the k-truss edge set
     rounds: int
+    history: list[dict] = field(default_factory=list)
 
 
 def _full_support(E: DataFrame) -> DataFrame:
@@ -114,83 +117,79 @@ def k_truss(
     if k < 3:
         raise ValueError("k must be >= 3 (k=3 keeps every triangle edge)")
     need = k - 2
-    # canonical undirected edge list (one row per edge)
-    E = (
-        sym_edges.select(SRC, DST)
-        .where(F.col(SRC) < F.col(DST))
-        .distinct()
-        .persist()
-    )
-    E.count()
 
-    # round 1: full support pass; edges without a support row are
-    # triangle-free — dropped implicitly, with zero effect on others
-    cur = _full_support(E).localCheckpoint(eager=False)
-    counts = cur.agg(
-        F.sum((F.col("_sup") < need).cast("long")).alias("nd"),
-        F.count("*").alias("nc"),
-    ).collect()[0]
-    n_drop, n_cur = int(counts["nd"] or 0), int(counts["nc"] or 0)
-    E.unpersist()
-    rounds = 1
+    def census() -> dict:
+        return dict(
+            dropped=F.sum((F.col("_sup") < need).cast("long")),
+            edges=F.count(F.lit(1)),
+        )
 
-    while n_drop > 0 and not (max_rounds and rounds >= max_rounds):
-        surv = cur.where(F.col("_sup") >= need)
-        dropped = cur.where(F.col("_sup") < need).select(SRC, DST)
+    with Loop(spark, "k_truss") as loop:
+        # canonical undirected edge list (one row per edge)
+        E, _ = loop.cache(
+            sym_edges.select(SRC, DST).where(F.col(SRC) < F.col(DST)).distinct(),
+            resize=False,
+        )
 
-        if n_drop * 4 > n_cur - n_drop:
-            # dropping most of what remains: a fresh pass over the small
-            # survivor set beats enumerating triangles through the drop
-            nxt = _full_support(surv.select(SRC, DST))
-        else:
-            # triangles of the previous set through ≥1 dropped edge:
-            # dropped (a,b) ⋈ adjacency (a,w) ⋈ canonical (b,w)-edge
-            # semi-join, then canonical-triple dedup
-            prev_e = cur.select(SRC, DST)  # survivors ∪ dropped
-            adj = prev_e.unionAll(
-                prev_e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-            ).select(F.col(SRC).alias("a"), F.col(DST).alias("w"))
-            drop_ab = dropped.select(F.col(SRC).alias("a"), F.col(DST).alias("b"))
-            if n_drop <= BROADCAST_NNZ_THRESHOLD:
-                drop_ab = F.broadcast(drop_ab)
-            tri = (
-                drop_ab
-                .join(adj, on="a")
-                .where(F.col("w") != F.col("b"))
-                .join(
-                    prev_e,
-                    on=(
-                        (F.least("b", "w") == F.col(SRC))
-                        & (F.greatest("b", "w") == F.col(DST))
-                    ),
-                    how="left_semi",
+        # round 1: full support pass; edges without a support row are
+        # triangle-free — dropped implicitly, with zero effect on others
+        cur, counts = loop.step(_full_support(E), **census())
+        loop.release(E)
+
+        while True:
+            n_drop, n_cur = int(counts["dropped"] or 0), int(counts["edges"] or 0)
+            if n_drop == 0 or (max_rounds and loop.round >= max_rounds):
+                break
+            surv = cur.where(F.col("_sup") >= need)
+            dropped = cur.where(F.col("_sup") < need).select(SRC, DST)
+
+            if n_drop * 4 > n_cur - n_drop:
+                # dropping most of what remains: a fresh pass over the
+                # small survivor set beats enumerating triangles through
+                # the drop
+                nxt = _full_support(surv.select(SRC, DST))
+            else:
+                # triangles of the previous set through ≥1 dropped edge:
+                # dropped (a,b) ⋈ adjacency (a,w) ⋈ canonical (b,w)-edge
+                # semi-join, then canonical-triple dedup
+                prev_e = cur.select(SRC, DST)  # survivors ∪ dropped
+                adj = prev_e.unionAll(
+                    prev_e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
+                ).select(F.col(SRC).alias("a"), F.col(DST).alias("w"))
+                drop_ab = dropped.select(F.col(SRC).alias("a"), F.col(DST).alias("b"))
+                tri = (
+                    broadcast_if_fits(drop_ab, n_drop)
+                    .join(adj, on="a")
+                    .where(F.col("w") != F.col("b"))
+                    .join(
+                        prev_e,
+                        on=(
+                            (F.least("b", "w") == F.col(SRC))
+                            & (F.greatest("b", "w") == F.col(DST))
+                        ),
+                        how="left_semi",
+                    )
+                    .select(
+                        F.least("a", "b", "w").alias("i"),
+                        F.expr("array_sort(array(a, b, w))[1]").alias("j"),
+                        F.greatest("a", "b", "w").alias("k"),
+                    )
+                    .distinct()
                 )
-                .select(
-                    F.least("a", "b", "w").alias("i"),
-                    F.expr("array_sort(array(a, b, w))[1]").alias("j"),
-                    F.greatest("a", "b", "w").alias("k"),
+                dec = None
+                for x, y in (("i", "j"), ("i", "k"), ("j", "k")):
+                    part = tri.select(F.col(x).alias(SRC), F.col(y).alias(DST))
+                    dec = part if dec is None else dec.unionAll(part)
+                dec = dec.groupBy(SRC, DST).agg(F.count("*").alias("_dec"))
+                nxt = surv.join(dec, on=[SRC, DST], how="left").select(
+                    SRC,
+                    DST,
+                    (F.col("_sup") - F.coalesce("_dec", F.lit(0))).alias("_sup"),
                 )
-                .distinct()
-            )
-            dec = None
-            for x, y in (("i", "j"), ("i", "k"), ("j", "k")):
-                part = tri.select(F.col(x).alias(SRC), F.col(y).alias(DST))
-                dec = part if dec is None else dec.unionAll(part)
-            dec = dec.groupBy(SRC, DST).agg(F.count("*").alias("_dec"))
-            nxt = surv.join(dec, on=[SRC, DST], how="left").select(
-                SRC,
-                DST,
-                (F.col("_sup") - F.coalesce("_dec", F.lit(0))).alias("_sup"),
-            )
 
-        nxt = nxt.localCheckpoint(eager=False)
-        counts = nxt.agg(
-            F.sum((F.col("_sup") < need).cast("long")).alias("nd"),
-            F.count("*").alias("nc"),
-        ).collect()[0]
-        n_drop, n_cur = int(counts["nd"] or 0), int(counts["nc"] or 0)
-        cur = nxt
-        rounds += 1
+            # ONE action: checkpoint + drop census
+            cur, counts = loop.step(nxt, replaces=cur, **census())
 
+        loop.finish(cur)
     edges = cur.where(F.col("_sup") >= need).select(SRC, DST)
-    return TrussResult(edges=edges, rounds=rounds)
+    return TrussResult(edges=edges, rounds=loop.round, history=loop.history)

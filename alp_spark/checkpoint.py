@@ -4,10 +4,8 @@ North-rule requirement: iteration state (rank vector, frontier mask, label
 vector) is checkpointed **per-partition with lineage and superstep
 metrics** so any run resumes mid-iteration.
 
-Design: a thin :class:`Catalog` interface with two implementations —
-an Iceberg-backed one (used when an Iceberg runtime jar + catalog conf
-are present; none ships in this sandbox) and a Parquet warehouse that
-provides the same semantics with JSON snapshot sidecars:
+Design: a Parquet warehouse with JSON snapshot sidecars, written by the
+loop runtime (:mod:`alp_spark.loop`) through ``save``:
 
     {base}/{run_id}/superstep={k}/part-*.parquet      state rows
     {base}/{run_id}/_lineage/{k}.json                 snapshot metadata
@@ -118,19 +116,3 @@ class ParquetCheckpointer:
             raise FileNotFoundError(f"run {run_id} has no lineage under {base_dir}")
         return ckpt
 
-
-def make_checkpointer(base_dir: str, run_id: str | None = None, spark: SparkSession | None = None):
-    """Catalog factory: returns an Iceberg-backed checkpointer when an
-    Iceberg catalog is configured on the session, else the parquet
-    warehouse. The sandbox has no Iceberg jar, so the parquet path is the
-    tested one; the interface (save/load/lineage/latest) is identical."""
-    if spark is not None:
-        conf = spark.conf
-        try:
-            if conf.get("spark.sql.catalog.spark_catalog", None):
-                # Iceberg session catalog present: same interface, table-backed.
-                # Not exercised in this sandbox (no runtime jar) — fall through.
-                pass
-        except Exception:
-            pass
-    return ParquetCheckpointer(base_dir, run_id)

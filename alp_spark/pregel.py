@@ -44,13 +44,16 @@ reference ``execute`` (pregel.hpp:650-920):
    Default stays 'none' for reference parity; enabling it is safe and
    pays on early-decaying frontiers.
 
-Per-superstep Spark cost: ONE SQL execution. It runs the message
-groupBy (shuffle; map-side partial agg absorbs hub in-degree skew), the
-state ⋈ messages join with the vertex program fused into its
-projection, and an eager ``localCheckpoint`` that truncates lineage.
-The halt vote, active census and program-row count ride on that same
-action as ``observe`` metrics, so there is no separate stats job. State
-is also parquet-checkpointed with lineage + metrics every
+Per-superstep Spark cost: ONE SQL execution — one
+:meth:`alp_spark.loop.Loop.step`, the runtime every census loop shares.
+It runs the message groupBy (shuffle; map-side partial agg absorbs hub
+in-degree skew), the state ⋈ messages join with the vertex program fused
+into its projection, and an eager ``localCheckpoint`` that truncates
+lineage. The halt vote, active census and program-row count ride on that
+same action as ``observe`` metrics, so there is no separate stats job.
+The loop runtime also releases the previous superstep's checkpoint,
+labels every job ``pregel:<stage>:<superstep>``, records ``history`` and
+parquet-checkpoints the state with lineage + metrics every
 ``checkpoint_every`` rounds (resumable — north rule).
 
 The per-vertex ``PregelState`` fields (pregel.hpp:266-326) map to columns
@@ -60,18 +63,18 @@ The per-vertex ``PregelState`` fields (pregel.hpp:266-326) map to columns
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, StructType, _parse_datatype_string
 
 from . import algebra as alg
 from .containers import DST, ID, SRC, VAL
+from .loop import Loop
 from .operators import vxm
-from .plans.partitions import cache_sized, range_partitions
+from .plans.partitions import range_partitions
 
 
 @dataclass
@@ -110,22 +113,6 @@ def _struct_lit(value, dt: DataType):
             ]
         )
     return F.lit(value).cast(dt)
-
-
-def _checkpoint(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
-    """Eager ``localCheckpoint`` of ``df`` plus the named aggregates over
-    it, observed in the same Spark action."""
-    obs = Observation()
-    df = df.observe(obs, *[c.alias(k) for k, c in aggs.items()])
-    return df.localCheckpoint(eager=True), obs.get
-
-
-def _release(df: DataFrame) -> None:
-    """Drop the blocks of a ``localCheckpoint``ed frame. Its RDD is not
-    in the cache manager, so ``DataFrame.unpersist`` does not reach it;
-    ``RDD.unpersist`` would log a lineage warning every superstep."""
-    rdd = df._jdf.queryExecution().analyzed().rdd()
-    rdd.context().unpersistRDD(rdd.id(), False)
 
 
 def _degrees(spark: SparkSession, edges: DataFrame, n: int) -> DataFrame:
@@ -179,22 +166,24 @@ def pregel(
     """
     if sparsify not in _SPARSIFY:
         raise ValueError(f"sparsify must be one of {_SPARSIFY}")
-    # the superstep loop scans the edge table every round: cache it ONCE
-    # in a size-derived layout (guide §2/§5 — it was re-derived from its
-    # source plan per round before) and reuse the count it needed anyway
-    edges, counted = cache_sized(spark, edges, key=SRC)
-    nnz = num_edges if num_edges is not None else counted
     state_dt = _parse_datatype_string(state_type)
     msg_dt = _parse_datatype_string(msg_type)
     msg_id_col = _struct_lit(combiner.identity, msg_dt)
     ring = alg.Semiring(add=combiner, mul=alg.left_assign, one=True)
     active, ran = F.col("active"), F.col("_ran")
 
-    state = None  # the latest checkpoint
-    try:
-        if resume_state is not None:
+    resumed = resume_state is not None
+    with Loop(
+        spark, "pregel", checkpointer, checkpoint_every,
+        start=resume_round if resumed else 0,
+    ) as loop:
+        # the superstep loop scans the edge table every round: cache it
+        # ONCE in a size-derived layout (guide §2/§5) and reuse the count
+        # it needed anyway
+        edges, counted = loop.cache(edges, key=SRC)
+        nnz = num_edges if num_edges is not None else counted
+        if resumed:
             init = resume_state.select(*_STATE_COLS)
-            step = resume_round
         else:
             deg = _degrees(spark, edges, n)
             # init_use_index: state := vertex id (set<use_index>,
@@ -214,29 +203,27 @@ def pregel(
                 "outdegree",
                 "indegree",
             )
-            step = 0
         # out-liveness under sparsification; on resume the live set
         # restarts at the active set (≡ a sparsify applied at resume) for
         # != 'none'. The census is observed on the same action (a resumed
         # state can carry inactive rows).
         live_init = F.lit(True) if sparsify == "none" else active
-        state, stats = _checkpoint(
+        state, stats = loop.checkpoint(
             init.withColumn("_out_live", live_init),
-            n_active=F.sum(active.cast("long")),
+            active=F.sum(active.cast("long")),
         )
-        n_active = int(stats["n_active"] or 0)
+        n_active = int(stats["active"] or 0)
 
-        history: list[dict] = []
         converged = True
         out_nnz = n  # nnz of the outgoing-message vector (driver-tracked)
         program_rows = 0
         while True:
-            t0 = time.perf_counter()
             # ---- exchange: incoming[j] = ⊕_{i→j, live(i)} out[i] -----------
             # when EVERY vertex is active (halt-vote-only programs never
             # shrink the set) the output mask is a per-round no-op: skip it
             split = n_active < n
-            if step == 0 and resume_state is None:
+            exchange = resumed or loop.round > 0
+            if not exchange:
                 cur, incoming = state, msg_id_col
             else:
                 out_vec = (
@@ -268,7 +255,7 @@ def pregel(
 
             # ---- sparsify-out (reference order: right after the vxm,
             # before the program — pregel.hpp:887-898) ---------------------
-            do_sparsify = sparsify != "none" and (step > 0 or resume_state is not None) and (
+            do_sparsify = sparsify != "none" and exchange and (
                 sparsify == "always"
                 or (sparsify == "when_reduced" and out_nnz > n_active)
                 or (sparsify == "when_halved" and n_active <= out_nnz // 2)
@@ -291,7 +278,9 @@ def pregel(
                 (active if do_sparsify else active | F.col("_out_live")).alias("_out_live"),
             )
 
-            ctx = PregelContext(round=step, num_vertices=n, num_edges=nnz, data=data)
+            ctx = PregelContext(
+                round=loop.round, num_vertices=n, num_edges=nnz, data=data
+            )
             updates = program(ctx)
             unknown = set(updates) - set(_PROGRAM_OUT)
             if unknown:
@@ -308,55 +297,28 @@ def pregel(
                 "outdegree", "indegree", "_ran", "_out_live",
             )
             # ONE action: checkpoint + halt vote + census + program rows
-            new, stats = _checkpoint(
+            state, stats = loop.step(
                 new,
+                replaces=state,
+                active=F.sum(active.cast("long")),
                 all_halt=F.min(F.when(ran, F.col("halt"))),
-                n_active=F.sum(active.cast("long")),
                 ran=F.sum(ran.cast("long")),
             )
-            _release(state)
-            state = new
-            step += 1
-
-            n_active = int(stats["n_active"] or 0)
+            n_active = int(stats["active"] or 0)
             all_halt = bool(stats["all_halt"])
             program_rows += int(stats["ran"] or 0)
-            history.append(
-                {
-                    "round": step,
-                    "active": n_active,
-                    "all_halt": all_halt,
-                    "program_rows": program_rows,
-                    "out_nnz": out_nnz,
-                    "wall_s": time.perf_counter() - t0,
-                }
-            )
-
-            if checkpointer is not None and step % checkpoint_every == 0:
-                checkpointer.save(
-                    state.select(*_STATE_COLS),
-                    superstep=step,
-                    metrics={"active": n_active, "all_halt": all_halt},
-                )
+            loop.history[-1].update(program_rows=program_rows, out_nnz=out_nnz)
 
             if all_halt:  # everyone who ran voted to halt (pregel.hpp:816-822)
                 break
             if n_active == 0:  # all vertices inactive (pregel.hpp:840-847)
                 break
-            if max_rounds > 0 and step > max_rounds:  # (pregel.hpp:850-858)
+            if max_rounds > 0 and loop.round > max_rounds:  # (pregel.hpp:850-858)
                 converged = False
                 break
 
-        result = state.select(*_STATE_COLS)
-        if checkpointer is not None:
-            checkpointer.save(
-                result, superstep=step, metrics={"rounds": step, "converged": converged},
-                final=True,
-            )
-    except BaseException:
-        if state is not None:  # the last checkpoint; nothing is returned
-            _release(state)
-        raise
-    finally:
-        edges.unpersist()
-    return PregelResult(state=result, rounds=step, converged=converged, history=history)
+        loop.finish(state, rounds=loop.round, converged=converged)
+    return PregelResult(
+        state=state.select(*_STATE_COLS), rounds=loop.round,
+        converged=converged, history=loop.history,
+    )

@@ -93,19 +93,19 @@ def test_kcore_two_components(spark):
     assert [got[i] for i in range(n)] == list(want)
 
 
-def test_kcore_shuffle_frontier_path(spark):
-    # broadcast_threshold=0 forces every peel round onto the shuffle
+def test_kcore_shuffle_frontier_path(spark, monkeypatch):
+    # a zero broadcast gate forces every peel round onto the shuffle
     # left_semi join (the >threshold web-scale branch); results must be
     # identical to the broadcast path
     from alp_spark.algorithms.kcore import kcore_decomposition
+    from alp_spark.operators import blas2
 
     from .fixtures import g2_components
 
     n, edges = g2_components()
     E = edges_df(spark, edges)
-    res = kcore_decomposition(
-        spark, E, n, broadcast_threshold=0, method="peel"
-    )
+    monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
+    res = kcore_decomposition(spark, E, n, method="peel")
     got = {r["id"]: r["core"] for r in res.cores.collect()}
     from .oracles import kcore as kcore_oracle
     want = kcore_oracle(n, edges)

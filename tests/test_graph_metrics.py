@@ -397,15 +397,17 @@ def test_k_truss_incremental_cascade(spark):
 
 
 def test_k_truss_unbroadcast_dropped_set(spark, monkeypatch):
-    # above BROADCAST_NNZ_THRESHOLD the dropped set is shuffle-joined
-    # instead of broadcast; the peel must not depend on the join shape
+    # above the broadcast gate's threshold the dropped set is
+    # shuffle-joined instead of broadcast; the peel must not depend on
+    # the join shape
     from alp_spark.algorithms import truss
+    from alp_spark.operators import blas2
 
     def run():
         res = truss.k_truss(spark, edges_df(spark, _sym(CASCADE)), k=4)
         return sorted((r["src"], r["dst"]) for r in res.edges.collect()), res.rounds
 
     want = run()
-    monkeypatch.setattr(truss, "BROADCAST_NNZ_THRESHOLD", 0)
+    monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
     assert run() == want
     assert want[0] == sorted(K7)

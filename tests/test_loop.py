@@ -1,0 +1,286 @@
+"""The loop runtime (alp_spark/loop.py) across every operator that runs
+on it: no leaked persisted frames on any exit path, outputs independent
+of the shuffle partition count, a per-round ``history`` and the
+``alp.phase`` job label."""
+
+from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
+
+import numpy as np
+import pytest
+
+from alp_spark.loop import PHASE
+
+from .fixtures import edges_df, g497_powerlaw, g_seeded_labels, vec_df
+
+N = 60
+
+
+def _graph():
+    """A preferential-attachment DAG plus a back edge out of every third
+    vertex, so SCC has real cycles to color and harvest."""
+    _, dag = g497_powerlaw(n=N)
+    return sorted(set(dag) | {(d, s) for s, d in dag if s % 3 == 0})
+
+
+DIRECTED = _graph()
+SYMMETRIC = sorted(set(DIRECTED) | {(d, s) for s, d in DIRECTED})
+# binary fractions: every path sum is exact, whatever the summation order
+WEIGHTED = [(s, d, ((7 * s + 3 * d) % 10 + 1) / 4.0) for s, d in DIRECTED]
+
+
+def _cc(spark, **kw):
+    from alp_spark.algorithms import connected_components
+
+    return connected_components(spark, edges_df(spark, SYMMETRIC), N, **kw)
+
+
+def _pagerank(spark, **kw):
+    from alp_spark.algorithms import simple_pagerank
+
+    return simple_pagerank(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _fastsv(spark, **kw):
+    from alp_spark.algorithms.fastsv import fastsv_components
+
+    return fastsv_components(spark, edges_df(spark, SYMMETRIC), N, **kw)
+
+
+def _kcore(method):
+    def run(spark, **kw):
+        from alp_spark.algorithms.kcore import kcore_decomposition
+
+        E = edges_df(spark, SYMMETRIC)
+        return kcore_decomposition(spark, E, N, method=method, **kw)
+
+    return run
+
+
+def _mis(spark, **kw):
+    from alp_spark.algorithms.mis import maximal_independent_set
+
+    return maximal_independent_set(spark, edges_df(spark, SYMMETRIC), N, **kw)
+
+
+def _sssp(spark, **kw):
+    from alp_spark.algorithms.sssp import sssp
+
+    return sssp(spark, edges_df(spark, WEIGHTED, val=True), N, source=N - 1, **kw)
+
+
+def _label_prop(spark, **kw):
+    from alp_spark.algorithms.label_propagation import label_propagation
+
+    n, wedges, seeds = g_seeded_labels()
+    y = vec_df(spark, [(i, seeds.get(i, 0.0)) for i in range(n)])
+    return label_propagation(spark, edges_df(spark, wedges, val=True), y, n, 4, **kw)
+
+
+def _truss(spark, **kw):
+    from alp_spark.algorithms.truss import k_truss
+
+    return k_truss(spark, edges_df(spark, SYMMETRIC), k=4, **kw)
+
+
+def _scc(spark, **kw):
+    from alp_spark.algorithms.scc import strongly_connected_components
+
+    return strongly_connected_components(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _reach(spark):
+    from alp_spark.algorithms.scc import reach_set
+
+    seeds = vec_df(spark, [(N - 1, 1.0)])
+    return reach_set(spark, edges_df(spark, DIRECTED), seeds, forward=True)
+
+
+def _hits(spark, **kw):
+    from alp_spark.algorithms.hits import hits
+
+    return hits(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _anf(spark, **kw):
+    from alp_spark.algorithms.anf import anf
+
+    return anf(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _nf(spark, **kw):
+    from alp_spark.algorithms.anf import neighborhood_function
+
+    return neighborhood_function(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _ppr(spark, **kw):
+    from alp_spark.algorithms.ppr_multi import ppr_multi
+
+    return ppr_multi(spark, edges_df(spark, DIRECTED), N, [0, 7, N - 1], **kw)
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _scores(df, col="val", key=("id",)):
+    rows = _rows(df, *key, col)
+    return np.array([r[-1] for r in rows])
+
+
+@dataclass
+class Op:
+    run: Callable
+    k: int  # checkpointed frames the returned result still reads
+    exact: Callable  # result -> integer outputs and round counts
+    scores: Callable | None = None  # result -> float scores
+    bound: str | None = None  # the option that caps its rounds
+    rounds: Callable | None = None  # census loops: result -> rounds
+    label: str | None = None  # the alp.phase op name seen by a checkpointer
+
+
+OPS = {
+    "pregel_cc": Op(
+        _cc, 1, lambda r: (_rows(r.state, "id", "state"), r.rounds),
+        bound="max_rounds", rounds=lambda r: r.rounds, label="pregel",
+    ),
+    "simple_pagerank": Op(
+        _pagerank, 1, lambda r: r.iterations, lambda r: _scores(r.ranks),
+        bound="max_iter", rounds=lambda r: r.iterations, label="simple_pagerank",
+    ),
+    "fastsv": Op(
+        _fastsv, 1, lambda r: (_rows(r.labels, "id", "label"), r.rounds),
+        bound="max_rounds", rounds=lambda r: r.rounds, label="fastsv",
+    ),
+    "kcore_hindex": Op(
+        _kcore("hindex"), 1, lambda r: (_rows(r.cores, "id", "core"), r.rounds, r.max_k),
+        bound="max_rounds", rounds=lambda r: r.rounds, label="kcore",
+    ),
+    "kcore_peel": Op(
+        _kcore("peel"), 1, lambda r: (_rows(r.cores, "id", "core"), r.rounds, r.max_k),
+        bound="max_rounds", rounds=lambda r: r.rounds,
+    ),
+    "mis": Op(
+        _mis, 1, lambda r: (_rows(r.members, "id"), r.rounds),
+        bound="max_rounds", rounds=lambda r: r.rounds,
+    ),
+    "sssp": Op(
+        _sssp, 1, lambda r: (_rows(r.dists, "id", "val"), r.rounds, r.converged),
+        bound="max_rounds", rounds=lambda r: r.rounds,
+    ),
+    "label_propagation": Op(
+        _label_prop, 1, lambda r: (_rows(r.labels, "id", "val"), r.iterations),
+        bound="max_iterations", rounds=lambda r: r.iterations,
+    ),
+    "k_truss": Op(
+        _truss, 1, lambda r: (_rows(r.edges, "src", "dst"), r.rounds),
+        bound="max_rounds", rounds=lambda r: r.rounds,
+    ),
+    "scc": Op(
+        _scc, 1,
+        lambda r: (_rows(r.labels, "id", "scc"), r.outer_rounds, r.inner_rounds),
+        bound="max_outer", rounds=lambda r: r.inner_rounds,
+    ),
+    "reach_set": Op(_reach, 1, lambda r: _rows(r, "id")),
+    "hits": Op(
+        _hits, 2, lambda r: r.rounds,
+        lambda r: np.concatenate([_scores(r.auth), _scores(r.hubs)]), bound="iters",
+    ),
+    "anf": Op(
+        _anf, 1, lambda r: _rows(r.sketches, "id", "sketch", "est_reach"), bound="rounds",
+    ),
+    "neighborhood_function": Op(
+        _nf, 1, lambda r: _rows(r, "hop", "n_pairs"), bound="rounds",
+    ),
+    "ppr_multi": Op(
+        _ppr, 1, lambda r: r.rounds, lambda r: _scores(r.ranks, key=("seed", "id")),
+        bound="rounds",
+    ),
+}
+CENSUS = [name for name, op in OPS.items() if op.rounds is not None]
+CHECKPOINTING = [name for name, op in OPS.items() if op.label is not None]
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+class _FailingCheckpointer:
+    def save(self, *args, **kwargs):
+        raise RuntimeError("checkpoint store unavailable")
+
+
+class _LabelRecorder:
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        self.labels = []
+
+    def save(self, *args, **kwargs):
+        self.labels.append(self.sc.getLocalProperty(PHASE))
+
+
+@pytest.mark.parametrize("name", list(OPS))
+def test_loop_releases_persisted_frames(spark, name):
+    # the cached invariants and every checkpoint are released on each
+    # exit path; only the k frames the result reads may stay persisted
+    op = OPS[name]
+    runs = [{}] + ([{op.bound: 1}] if op.bound else [])
+    for kwargs in runs:
+        before = _persisted(spark)
+        op.run(spark, **kwargs)
+        assert _persisted(spark) <= before + op.k, kwargs
+    if name in CHECKPOINTING:
+        before = _persisted(spark)
+        with pytest.raises(RuntimeError, match="checkpoint store unavailable"):
+            op.run(spark, checkpointer=_FailingCheckpointer(), checkpoint_every=1)
+        assert _persisted(spark) <= before
+
+
+@pytest.mark.parametrize("name", list(OPS))
+def test_outputs_independent_of_shuffle_partition_count(spark, name):
+    # every loop reshapes its actions around the runtime; integer outputs
+    # and round counts must not depend on the shuffle partition count,
+    # float scores only up to the summation order of partial sums
+    op = OPS[name]
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+
+    def run():
+        res = op.run(spark)
+        return op.exact(res), None if op.scores is None else op.scores(res)
+
+    try:
+        spark.conf.set(conf, "2")
+        two = run()
+        spark.conf.set(conf, "8")
+        eight = run()
+    finally:
+        spark.conf.set(conf, old)
+    assert two[0] == eight[0]
+    if op.scores is not None:
+        np.testing.assert_allclose(two[1], eight[1], rtol=1e-15)
+
+
+@pytest.mark.parametrize("name", CENSUS)
+def test_history_has_one_entry_per_round(spark, name):
+    op = OPS[name]
+    res = op.run(spark)
+    assert len(res.history) == op.rounds(res)
+    assert [h["round"] for h in res.history] == list(range(1, op.rounds(res) + 1))
+    assert all(h["wall_s"] > 0 for h in res.history)
+    assert spark.sparkContext.getLocalProperty(PHASE) is None
+
+
+@pytest.mark.parametrize("name", CHECKPOINTING)
+def test_checkpoint_saves_run_under_the_operator_label(spark, name):
+    op = OPS[name]
+    rec = _LabelRecorder(spark)
+    res = op.run(spark, checkpointer=rec, checkpoint_every=1)
+    # one save per round plus the final snapshot
+    assert len(rec.labels) == op.rounds(res) + 1
+    assert rec.labels[0] == f"{op.label}:save:1"
+    assert rec.labels[-1] == f"{op.label}:save:{op.rounds(res)}"
+    assert spark.sparkContext.getLocalProperty(PHASE) is None

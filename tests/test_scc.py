@@ -103,12 +103,14 @@ def test_min_flood_shortcutting_compresses_long_cycles(spark):
     from pyspark.sql import functions as F
 
     from alp_spark.algorithms.scc import _min_flood
+    from alp_spark.loop import Loop
 
     n = 48
     edges = [(i, (i + 1) % n) for i in range(n)]
     E = edges_df(spark, edges)
     active = spark.range(n).select(F.col("id"))
-    f, rounds = _min_flood(active, E, forward=True)
-    got = {r["id"]: r["_f"] for r in f.collect()}
+    with Loop(spark, "scc") as loop:
+        f, rounds = _min_flood(active, E, forward=True, loop=loop)
+        got = {r["id"]: r["_f"] for r in f.collect()}
     assert got == {v: 0 for v in range(n)}
     assert rounds <= 12, f"shortcutting should beat O(n) rounds, got {rounds}"
