@@ -218,7 +218,8 @@ def _kcore_hindex(
 
         # frontier mode: h(v) can change in round r only if a neighbour's
         # h changed in round r-1, so once the change census falls below
-        # this, recompute only N(changed) — both semi-joins broadcast,
+        # this, recompute only N(changed) — both semi-joins broadcast
+        # while the gate admits them (N(changed) is bounded only by n),
         # the edge table never moves, and late-round cost tracks the
         # frontier rather than the full edge count (the long tail of the
         # fixpoint is many rounds × few changes). Fixed 50k, measured on
@@ -246,7 +247,9 @@ def _kcore_hindex(
                 changed_prev = h.where(F.col("_old") != F.col("h")).select(ID)
                 targets = (
                     sym_edges.join(
-                        F.broadcast(changed_prev.select(F.col(ID).alias(SRC))),
+                        broadcast_if_fits(
+                            changed_prev.select(F.col(ID).alias(SRC)), nch
+                        ),
                         on=SRC,
                         how="left_semi",
                     )
@@ -254,7 +257,8 @@ def _kcore_hindex(
                     .distinct()
                 )
                 ef = sym_edges.join(
-                    F.broadcast(targets.select(F.col(ID).alias(DST))),
+                    # distinct ids: n bounds |N(changed)|
+                    broadcast_if_fits(targets.select(F.col(ID).alias(DST)), n),
                     on=DST,
                     how="left_semi",
                 )

@@ -98,7 +98,7 @@ def ppr_multi(
             )
             state = loop.lazy(
                 base.join(contrib, on=["seed", ID], how="left")
-                .join(F.broadcast(dang), on="seed", how="left")
+                .join(broadcast_if_fits(dang, len(seeds)), on="seed", how="left")
                 .select(
                     "seed",
                     ID,

@@ -211,9 +211,6 @@ def simple_pagerank_csr(
     n_partitions: int | None = None,
     checkpointer=None,
     checkpoint_every: int = 5,
-    max_driver_n: int = 1_000_000_000,
-    engine: str = "auto",
-    seg_transport: str = "files",
 ) -> PageRankResult:
     """Same semantics as :func:`simple_pagerank`, executed over one-time
     packed CSR edge blocks (north-star physical form; see
@@ -226,16 +223,10 @@ def simple_pagerank_csr(
     The rank-vector hand-off picks its transport automatically (local →
     file, cluster → TorrentBroadcast; csr_blocks.spmv_dense).
 
-    ``engine``: 'driver' keeps the O(n) vector algebra on the driver
-    (fastest at small n — no per-superstep shuffle); 'segments' runs it
-    executor-side over per-range segment files with O(P) driver traffic
-    (:mod:`alp_spark.plans.csr_segloop`); 'auto' switches to 'segments'
-    above ``max_driver_n`` (default 10^9 ≈ 8 GB of f64 on the driver) —
-    the loop-size strategy switch of reference/blas2.hpp:1104, now with
-    no driver ceiling at all on the far side. ``seg_transport`` picks
-    the segments engine's exchange: 'files' (cache_dir; shared storage
-    on clusters) or 'shuffle' (shared-nothing keyed shuffle — stock
-    multi-executor clusters, csr_segloop module docstring).
+    The dense rank vector lives on the driver (8n bytes of float64). A
+    graph whose vector does not fit the driver runs
+    :func:`simple_pagerank`: the Loop-based DataFrame engine handles any
+    n with ``strategy='shuffle'`` and resumes from its checkpoints.
     """
     import numpy as np
 
@@ -243,62 +234,38 @@ def simple_pagerank_csr(
 
     if not 0 < alpha < 1 or max_iter <= 0:
         raise ValueError("alpha must be in (0,1), max_iter > 0")
-    if engine not in ("auto", "driver", "segments"):
-        raise ValueError("engine must be auto|driver|segments")
-    if engine == "segments" or (engine == "auto" and n > max_driver_n):
-        from ..plans.csr_segloop import pagerank_csr_segments
-
-        csr = build_csr_blocks(spark, edges, n, n_partitions=n_partitions)
-        try:
-            seg = pagerank_csr_segments(
-                spark, csr, edges, alpha=alpha, conv=conv, max_iter=max_iter,
-                checkpointer=checkpointer, checkpoint_every=checkpoint_every,
-                transport=seg_transport,
-            )
-            ranks = seg.ranks.localCheckpoint(eager=True)  # outlives the files
-        finally:
-            csr.unpersist()
-        if checkpointer is not None:
-            checkpointer.save(
-                ranks, superstep=seg.iterations,
-                metrics={"residual": seg.residual}, final=True,
-            )
-        return PageRankResult(
-            ranks=ranks, iterations=seg.iterations,
-            residual=seg.residual, residuals=seg.residuals,
-        )
 
     csr = build_csr_blocks(spark, edges, n, n_partitions=n_partitions)
+    try:
+        # out-degrees (row sums of the pattern matrix) in one aggregation
+        deg_pdf = (
+            edges.groupBy(F.col("src").alias(ID))
+            .agg(F.count("*").alias("deg"))
+            .toPandas()
+        )
+        outdeg = np.zeros(n, dtype=np.float64)
+        if len(deg_pdf):
+            outdeg[deg_pdf[ID].to_numpy(dtype=np.int64)] = deg_pdf["deg"].to_numpy()
+        dangling_mask = outdeg == 0.0
+        inv = np.where(dangling_mask, 0.0, alpha / np.where(dangling_mask, 1.0, outdeg))
 
-    # out-degrees (row sums of the pattern matrix) in one aggregation
-    deg_pdf = (
-        edges.groupBy(F.col("src").alias(ID))
-        .agg(F.count("*").alias("deg"))
-        .toPandas()
-    )
-    outdeg = np.zeros(n, dtype=np.float64)
-    if len(deg_pdf):
-        outdeg[deg_pdf[ID].to_numpy(dtype=np.int64)] = deg_pdf["deg"].to_numpy()
-    dangling_mask = outdeg == 0.0
-    inv = np.where(dangling_mask, 0.0, alpha / np.where(dangling_mask, 1.0, outdeg))
+        pr = np.full(n, 1.0 / n, dtype=np.float64)
+        iters, residual, residuals = 0, float("inf"), []
+        while True:
+            dangling = float(pr[dangling_mask].sum())
+            d = (alpha * dangling + 1.0 - alpha) / n
+            nxt = spmv_dense(spark, csr, pr * inv) + d
+            residual = float(np.abs(nxt - pr).sum())
+            residuals.append(residual)
+            pr = nxt
+            iters += 1
+            if checkpointer is not None and iters % checkpoint_every == 0:
+                _save_np_ranks(spark, checkpointer, pr, iters, residual)
+            if (conv != 0.0 and residual <= conv) or iters >= max_iter:
+                break
+    finally:
+        csr.unpersist()
 
-    pr = np.full(n, 1.0 / n, dtype=np.float64)
-    iters, residual, residuals = 0, float("inf"), []
-    while True:
-        dangling = float(pr[dangling_mask].sum())
-        d = (alpha * dangling + 1.0 - alpha) / n
-        y = spmv_dense(spark, csr, pr * inv, combine="plus")
-        nxt = y + d
-        residual = float(np.abs(nxt - pr).sum())
-        residuals.append(residual)
-        pr = nxt
-        iters += 1
-        if checkpointer is not None and iters % checkpoint_every == 0:
-            _save_np_ranks(spark, checkpointer, pr, iters, residual)
-        if (conv != 0.0 and residual <= conv) or iters >= max_iter:
-            break
-
-    csr.unpersist()
     ranks = spark.createDataFrame(
         _np_ranks_pdf(pr), schema=f"{ID} long, {VAL} double"
     )

@@ -13,42 +13,40 @@ Physical layout (chosen by measurement; see BASELINE.md):
 - blocks are **dst-range partitioned**: block ``pid = dst // width`` owns
   the contiguous output range ``[lo, lo+width)``, so each block emits ONE
   dense local segment and block results need no keyed combine — the
-  driver ⊕-combines ~P binary blobs instead of collecting n keyed rows.
+  driver sums ~P binary blobs instead of collecting n keyed rows.
   This is ALP's CRS row-major gather kernel (reference/blas2.hpp:295)
   with "row" = dst.
-- within a block, edges are **sorted by src at build time** (layout
-  'src', the plus-ring default): the per-superstep kernel is one
-  *ascending* gather ``x[src]`` — sequential, bandwidth-bound, so it
-  scales with cores instead of saturating memory latency like a random
-  gather — plus one ``np.bincount`` scatter into the ≤1MB L2-resident
-  block segment. Layout 'dst' (sorted by dst + ``reduceat``) serves the
-  min/max/or rings, which have no weighted-bincount equivalent. No
-  per-superstep sort/unique/Python row loop (input_hint: vectorized
-  only).
-- oversized blocks are **split into ≤``target_edges`` sub-chunks** at
-  build time (hub in-degree ranges produce heavy blocks; the split is
-  the build-time analog of dst-salting, SURVEY.md §4 #12); sub-chunk
-  segments ⊕-combine on the driver, exact for commutative ⊕.
-- block arrays are **materialised as .npy files and cached inside the
-  long-lived Python worker processes** (module-global dict, loaded on
-  first touch): shipping the packed edges through Arrow or re-faulting
-  an mmap costs ~4B+ per edge per superstep (both measured slower here),
-  while the process cache makes every superstep after a worker's first
-  touch operate on already-resident pages. Workers are reused
-  (``spark.python.worker.reuse`` default); a scheduling miss just
-  reloads that chunk's file once. The frontier vector ``x`` is re-read
-  per superstep from a driver-written .npy (one sequential 8n-byte read
-  per worker); on a real multi-executor cluster pass
-  ``x_transport='broadcast'`` to use TorrentBroadcast and put
-  ``cache_dir`` on executor-local or shared storage.
+- within a block, edges are **sorted by src at build time**: the
+  per-superstep kernel is one *ascending* gather ``x[src]`` —
+  sequential, bandwidth-bound, so it scales with cores instead of
+  saturating memory latency like a random gather — plus one
+  ``np.bincount`` scatter into the ≤1MB L2-resident block segment
+  (plus-times only: the PageRank ring). No per-superstep
+  sort/unique/Python row loop.
+- oversized blocks are **split into ≤:data:`DEFAULT_TARGET_EDGES`
+  sub-chunks** at build time (hub in-degree ranges produce heavy
+  blocks; the split is the build-time analog of dst-salting, SURVEY.md
+  §4 #12); sub-chunk segments sum on the driver.
+- block arrays are **materialised as .npy files in a temp dir and
+  cached inside the long-lived Python worker processes** (module-global
+  dict, loaded on first touch): shipping the packed edges through Arrow
+  or re-faulting an mmap costs ~4B+ per edge per superstep (both
+  measured slower here), while the process cache makes every superstep
+  after a worker's first touch operate on already-resident pages.
+  Workers are reused (``spark.python.worker.reuse`` default); a
+  scheduling miss just reloads that chunk's file once. The frontier
+  vector ``x`` is re-read per superstep from a driver-written .npy (one
+  sequential 8n-byte read per worker) in local mode, and rides
+  TorrentBroadcast on a multi-executor cluster (``spmv_dense``'s
+  ``x_transport``). There the chunk files need storage every executor
+  sees: point ``TMPDIR`` at it.
 
-Scale contract: the frontier vector is dense (float64: n=10^9 ⇒ 8 GB —
-fits a big executor; beyond that the shuffle vxm path of
-:mod:`alp_spark.operators.blas2` takes over; the cost switch mirrors
-reference/blas2.hpp:1104-1145). Edges are written once and only ever
-page-faulted in, which is what makes supersteps/hour scale with
-executors: each superstep is an embarrassingly parallel map over cached
-chunks + one ~P-row collect.
+Scale contract: the rank vector is dense on the driver (float64:
+n=10^9 ⇒ 8 GB). A graph whose dense vector does not fit the driver runs
+:func:`alp_spark.algorithms.simple_pagerank.simple_pagerank`, the
+DataFrame engine (any n, shuffle strategy, resumable). Edges are written
+once and only ever page-faulted in: each superstep is an embarrassingly
+parallel map over cached chunks + one ~P-row collect.
 """
 
 from __future__ import annotations
@@ -76,17 +74,13 @@ DEFAULT_TARGET_EDGES = 2_000_000
 
 @dataclass
 class CsrBlocks:
-    """One-time packed edge chunks (on local disk, mmap'd) + metadata."""
+    """One-time packed edge chunks (.npy files in ``tmp_dir``) + metadata."""
 
     meta: pd.DataFrame  # (pid, chunk, lo, width, n_rows, path) — tiny
     n: int
     n_partitions: int
     n_edges: int
-    src_dtype: str  # 'int32' | 'int64'
-    cache_dir: str
-    layout: str = "src"  # 'src' (bincount, plus) | 'dst' (reduceat, any ⊕)
-    target_edges: int = DEFAULT_TARGET_EDGES  # build-time chunk split size
-    _owns_dir: bool = field(default=False, repr=False)
+    tmp_dir: str  # owned: removed by unpersist()
     _meta_df: object = field(default=None, repr=False)
 
     def meta_frame(self, spark: SparkSession) -> DataFrame:
@@ -101,10 +95,13 @@ class CsrBlocks:
         return self._meta_df
 
     def unpersist(self) -> None:
-        """Delete the packed block files."""
-        self._meta_df = None
-        if self._owns_dir:
-            shutil.rmtree(self.cache_dir, ignore_errors=True)
+        """Release the metadata checkpoint and delete the block files."""
+        if self._meta_df is not None:
+            from ..loop import _release  # loop imports this package
+
+            _release(self._meta_df)
+            self._meta_df = None
+        shutil.rmtree(self.tmp_dir, ignore_errors=True)
 
 
 def build_csr_blocks(
@@ -112,21 +109,20 @@ def build_csr_blocks(
     edges: DataFrame,
     n: int,
     n_partitions: int | None = None,
-    target_edges: int = DEFAULT_TARGET_EDGES,
-    cache_dir: str | None = None,
-    layout: str = "src",
 ) -> CsrBlocks:
-    """Pack ``(src, dst)`` into dst-range-partitioned sorted chunk files.
+    """Pack ``(src, dst)`` into dst-range-partitioned, src-sorted chunk
+    files in a fresh temp dir.
 
     One shuffle (repartition by range id) + one ``applyInPandas`` pack
     writing ``.npy`` files, then a tiny metadata collect — amortised over
     every subsequent superstep. Pattern matrices only (the link graph);
     weighted SpMV stays on the shuffle path.
     """
-    # output ranges are sized so one range holds ≈ target_edges edges:
-    # segments stay L1/L2-resident for the bincount scatter, sub-chunk
-    # duplication (hub ranges) stays rare, and the per-superstep collect
-    # volume stays ≈ n*8 bytes regardless of how many chunks exist
+    # output ranges are sized so one range holds ≈ DEFAULT_TARGET_EDGES
+    # edges: segments stay L1/L2-resident for the bincount scatter,
+    # sub-chunk duplication (hub ranges) stays rare, and the
+    # per-superstep collect volume stays ≈ n*8 bytes regardless of how
+    # many chunks exist
     m = edges.count()
     # default parallelism is size-derived (guide §2): small graphs get
     # few, larger chunks (per-task overhead dominates below ~250k edges
@@ -134,13 +130,10 @@ def build_csr_blocks(
     P = n_partitions or max(
         1, min(spark.sparkContext.defaultParallelism, -(-m // 250_000))
     )
-    n_pids = max(P, -(-m // target_edges))
+    n_pids = max(P, -(-m // DEFAULT_TARGET_EDGES))
     width = -(-n // n_pids)  # ceil
     src_dtype = "int32" if n < 2**31 else "int64"
-    owns = cache_dir is None
-    if owns:
-        cache_dir = tempfile.mkdtemp(prefix="alp_csr_")
-    os.makedirs(cache_dir, exist_ok=True)
+    tmp_dir = tempfile.mkdtemp(prefix="alp_csr_")
     build_id = uuid.uuid4().hex[:8]
 
     e = edges.select(SRC, DST).withColumn(
@@ -148,7 +141,7 @@ def build_csr_blocks(
     )
 
     def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        os.makedirs(cache_dir, exist_ok=True)  # executor-local on clusters
+        os.makedirs(tmp_dir, exist_ok=True)  # executor-local on clusters
         pid = int(key[0])
         lo = pid * width
         src = pdf[SRC].to_numpy(dtype=np.int64)
@@ -162,24 +155,15 @@ def build_csr_blocks(
                 f"[{src.min()}, {src.max()}]"
             )
         # ONE sort, at build time (never per superstep)
-        order = np.argsort(src if layout == "src" else dst, kind="stable")
+        order = np.argsort(src, kind="stable")
         src = src[order].astype(src_dtype)
-        dst = dst[order]
+        dstoff = (dst[order] - lo).astype(np.int32)
         rows = []
-        for ci, c0 in enumerate(range(0, len(dst), target_edges)):
-            c1 = min(c0 + target_edges, len(dst))
-            base = os.path.join(cache_dir, f"{build_id}_{pid}_{ci}")
+        for ci, c0 in enumerate(range(0, len(src), DEFAULT_TARGET_EDGES)):
+            c1 = min(c0 + DEFAULT_TARGET_EDGES, len(src))
+            base = os.path.join(tmp_dir, f"{build_id}_{pid}_{ci}")
             np.save(base + ".src.npy", src[c0:c1])
-            if layout == "src":
-                np.save(
-                    base + ".dstoff.npy", (dst[c0:c1] - lo).astype(np.int32)
-                )
-            else:
-                d = dst[c0:c1]
-                bounds = np.flatnonzero(np.diff(d)) + 1
-                starts = np.concatenate(([0], bounds)).astype(np.int32)
-                np.save(base + ".starts.npy", starts)
-                np.save(base + ".uids.npy", (d[starts] - lo).astype(np.int32))
+            np.save(base + ".dstoff.npy", dstoff[c0:c1])
             rows.append(
                 {
                     "pid": pid,
@@ -192,32 +176,21 @@ def build_csr_blocks(
             )
         return pd.DataFrame(rows)
 
-    meta = (
-        e.repartition(n_pids, "pid")
-        .groupBy("pid")
-        .applyInPandas(pack, schema=_META_SCHEMA)
-        .toPandas()
-    )
+    try:
+        meta = (
+            e.repartition(n_pids, "pid")
+            .groupBy("pid")
+            .applyInPandas(pack, schema=_META_SCHEMA)
+            .toPandas()
+        )
+    except BaseException:
+        shutil.rmtree(tmp_dir, ignore_errors=True)
+        raise
     n_edges = int(meta["n_rows"].sum()) if len(meta) else 0
     return CsrBlocks(
-        meta=meta,
-        n=n,
-        n_partitions=P,
-        n_edges=n_edges,
-        src_dtype=src_dtype,
-        cache_dir=cache_dir,
-        layout=layout,
-        target_edges=target_edges,
-        _owns_dir=owns,
+        meta=meta, n=n, n_partitions=P, n_edges=n_edges, tmp_dir=tmp_dir
     )
 
-
-_REDUCE = {
-    "plus": (np.add, 0.0),
-    "min": (np.minimum, np.inf),
-    "max": (np.maximum, -np.inf),
-    "or": (np.maximum, 0.0),  # bools as 0/1 doubles
-}
 
 #: per-worker-process chunk cache: path -> array tuple; lives in the
 #: reused pyspark daemon workers so chunk pages are faulted in once per
@@ -254,21 +227,11 @@ def _contrib_buf(m: int) -> np.ndarray:
     return buf[:m]
 
 
-def _load_chunk(path: str, layout: str):
+def _load_chunk(path: str):
     global _cache_bytes
     arrs = _CHUNK_CACHE.get(path)
     if arrs is None:
-        if layout == "src":
-            arrs = (
-                np.load(path + ".src.npy"),
-                np.load(path + ".dstoff.npy"),
-            )
-        else:
-            arrs = (
-                np.load(path + ".src.npy"),
-                np.load(path + ".starts.npy"),
-                np.load(path + ".uids.npy"),
-            )
+        arrs = (np.load(path + ".src.npy"), np.load(path + ".dstoff.npy"))
         _cache_bytes += sum(a.nbytes for a in arrs)
         while _cache_bytes > _CACHE_MAX_BYTES and _CHUNK_CACHE:
             old = _CHUNK_CACHE.pop(next(iter(_CHUNK_CACHE)))  # FIFO
@@ -281,32 +244,23 @@ def spmv_dense(
     spark: SparkSession,
     csr: CsrBlocks,
     x: np.ndarray,
-    combine: str = "plus",
     x_transport: str = "auto",
 ) -> np.ndarray:
-    """y[j] = ⊕_{i→j} x[i] over the packed chunks; returns a dense numpy
-    vector on the driver (⊕-identity where no in-edges).
+    """y[j] = Σ_{i→j} x[i] over the packed chunks; returns a dense numpy
+    vector on the driver (0 where no in-edges).
 
-    ``combine``: 'plus' | 'min' | 'max' | 'or' ('plus' needs layout
-    'src', the rest layout 'dst'). ``x_transport``: 'file' re-reads a
-    driver-written .npy per worker (fastest; needs driver-shared
-    storage, i.e. local mode); 'broadcast' uses TorrentBroadcast
-    (multi-executor clusters, log-scaled fan-out); 'auto' picks by
-    master URL (local* → file, else broadcast).
+    ``x_transport``: 'file' re-reads a driver-written .npy per worker
+    (fastest; needs driver-shared storage, i.e. local mode); 'broadcast'
+    uses TorrentBroadcast (multi-executor clusters, log-scaled fan-out);
+    'auto' picks by master URL (local* → file, else broadcast).
 
     Per superstep: one x hand-off, one round-robin map over the chunk
     metadata rows (each task computes from its process-cached chunk
-    arrays), one ~P-row binary collect, one driver-side segment ⊕.
+    arrays), one ~P-row binary collect, one driver-side segment sum.
     """
-    ufunc, ident = _REDUCE[combine]
-    n, layout = csr.n, csr.layout
-    if layout == "src" and combine != "plus":
-        raise ValueError(
-            "layout 'src' (bincount) only supports the plus ring; "
-            "build with layout='dst' for min/max/or"
-        )
-    if len(csr.meta) == 0:  # empty matrix → identity vector
-        return np.full(n, ident)
+    n = csr.n
+    if len(csr.meta) == 0:  # empty matrix → zero vector
+        return np.zeros(n)
 
     if x_transport == "auto":
         x_transport = (
@@ -315,7 +269,7 @@ def spmv_dense(
     bx = None
     x_path = None
     if x_transport == "file":
-        x_path = os.path.join(csr.cache_dir, f"x_{uuid.uuid4().hex[:8]}.npy")
+        x_path = os.path.join(csr.tmp_dir, f"x_{uuid.uuid4().hex[:8]}.npy")
         np.save(x_path, np.ascontiguousarray(x, dtype=np.float64))
     else:
         bx = spark.sparkContext.broadcast(x)
@@ -325,36 +279,26 @@ def spmv_dense(
         for pdf in batches:
             out = {"lo": [], "width": [], "seg": []}
             for row in pdf.itertuples(index=False):
-                if layout == "src":
-                    src, dstoff = _load_chunk(row.path, layout)
-                    # ascending src → streaming read, into a reused buffer
-                    contrib = np.take(xv, src, out=_contrib_buf(len(src)), mode="clip")
-                    # L2-resident scatter: width*8B accumulator
-                    seg = np.bincount(
-                        dstoff, weights=contrib, minlength=row.width
-                    )
-                else:
-                    src, starts, uids = _load_chunk(row.path, layout)
-                    contrib = np.take(xv, src, out=_contrib_buf(len(src)), mode="clip")
-                    vals = ufunc.reduceat(contrib, starts)
-                    seg = np.full(row.width, ident)
-                    seg[uids] = vals  # uids unique within a sorted chunk
+                src, dstoff = _load_chunk(row.path)
+                # ascending src → streaming read, into a reused buffer
+                contrib = np.take(xv, src, out=_contrib_buf(len(src)), mode="clip")
+                # L2-resident scatter: width*8B accumulator
+                seg = np.bincount(dstoff, weights=contrib, minlength=row.width)
                 out["lo"].append(row.lo)
                 out["width"].append(row.width)
                 out["seg"].append(seg.tobytes())
             yield pd.DataFrame(out)
 
-    # round-robin chunk distribution: ≤target_edges per chunk, so tasks
-    # balance regardless of hub-range weight (no hash-collision
+    # round-robin chunk distribution: ≤DEFAULT_TARGET_EDGES per chunk, so
+    # tasks balance regardless of hub-range weight (no hash-collision
     # stragglers); the frame is cached on the CsrBlocks (built once)
     meta_df = csr.meta_frame(spark)
     rows = meta_df.mapInPandas(kernel, schema="lo long, width int, seg binary")
-    y = np.full(n, ident)
+    y = np.zeros(n)
     for r in rows.collect():  # ~P rows of width*8 bytes — Σ ≈ n*8 bytes
         lo, w = r["lo"], r["width"]
-        seg = np.frombuffer(r["seg"], dtype=np.float64)
-        # sub-chunks of one range ⊕-combine here (exact: ⊕ commutative)
-        y[lo : lo + w] = ufunc(y[lo : lo + w], seg)
+        # sub-chunks of one range sum here
+        y[lo : lo + w] += np.frombuffer(r["seg"], dtype=np.float64)
     if bx is not None:
         bx.destroy()
     if x_path is not None:

@@ -98,7 +98,7 @@ def main() -> None:
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument(
         "--path",
-        choices=["csr", "segments", "segments_shuffle", "shuffle", "broadcast"],
+        choices=["csr", "shuffle", "broadcast"],
         default="csr",
     )
     ap.add_argument("--iters", type=int, default=5)
@@ -149,26 +149,7 @@ def main() -> None:
             x = spmv_dense(spark, csr, x) * 0.85 + 0.15 / n
             laps.append(time.monotonic() - t0)
         wall = sum(laps)
-    elif args.path in ("segments", "segments_shuffle"):
-        # executor-resident superstep loop (plans/csr_segloop): O(P)
-        # driver traffic per superstep — the no-driver-ceiling engine.
-        # segments_shuffle = the shared-nothing transport (keyed-shuffle
-        # allgather; no shared filesystem)
-        from alp_spark.plans.csr_blocks import build_csr_blocks
-        from alp_spark.plans.csr_segloop import pagerank_csr_segments
-
-        t0 = time.monotonic()
-        csr = build_csr_blocks(spark, edges, n, n_partitions=args.cores * 2)
-        m = csr.n_edges
-        build_sec = time.monotonic() - t0
-        t0 = time.monotonic()
-        seg = pagerank_csr_segments(
-            spark, csr, edges, conv=0.0, max_iter=iters,
-            transport="shuffle" if args.path == "segments_shuffle" else "files",
-        )
-        wall = time.monotonic() - t0
-        laps = [wall / iters] * iters
-        assert seg.iterations == iters
+        csr.unpersist()
     else:
         from alp_spark.algorithms.simple_pagerank import simple_pagerank
 

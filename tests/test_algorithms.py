@@ -317,13 +317,14 @@ def test_kcore_resume_equals_uninterrupted(spark, tmp_path):
     assert all("changed" in r["metrics"] for r in ck2.lineage())
 
 
-def test_kcore_frontier_path_exact(spark):
+def test_kcore_frontier_path_exact(spark, monkeypatch):
     # frontier_min_edges=0 forces frontier mode from the first eligible
     # round; coreness must match the default (full-round) engine and
-    # the oracle exactly
+    # the oracle exactly, with its semi-joins broadcast or not
     import random
 
     from alp_spark.algorithms.kcore import kcore_decomposition
+    from alp_spark.operators import blas2
 
     rng = random.Random(23)
     n = 70
@@ -341,3 +342,8 @@ def test_kcore_frontier_path_exact(spark):
     from .oracles import kcore as kcore_oracle
     want = kcore_oracle(n, sym)
     assert [got[i] for i in range(n)] == list(want)
+    # a zero gate leaves both frontier semi-joins unbroadcast
+    monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
+    sh = kcore_decomposition(spark, E, n, frontier_min_edges=0)
+    assert {r["id"]: r["core"] for r in sh.cores.collect()} == got
+    assert sh.rounds == fr.rounds

@@ -263,9 +263,10 @@ def test_random_walks_stop_at_sinks(spark):
 # batched multi-source PPR
 # --------------------------------------------------------------------------
 
-def test_ppr_multi_matches_single_source(spark):
+def test_ppr_multi_matches_single_source(spark, monkeypatch):
     from alp_spark.algorithms.ppr_multi import ppr_multi
     from alp_spark.containers import vector_schema
+    from alp_spark.operators import blas2
 
     edges = [(0, 1), (1, 2), (2, 0), (0, 3), (3, 4)]  # 4 dangling
     n, rounds, seeds = 5, 3, [0, 2, 4]
@@ -287,6 +288,12 @@ def test_ppr_multi_matches_single_source(spark):
         want = {r["id"]: r["val"] for r in single.ranks.collect()}
         for v in range(n):
             assert got[(s, v)] == want[v], (s, v)
+    # a zero gate leaves every join unbroadcast (dang included)
+    monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
+    shuffled = ppr_multi(spark, edges_df(spark, edges), n, seeds, rounds=rounds)
+    assert {
+        (r["seed"], r["id"]): r["val"] for r in shuffled.ranks.collect()
+    } == got
 
 
 def test_ppr_multi_rejects_bad_args(spark):

@@ -43,6 +43,12 @@ def _pagerank(spark, **kw):
     return simple_pagerank(spark, edges_df(spark, DIRECTED), N, **kw)
 
 
+def _pagerank_csr(spark, **kw):
+    from alp_spark.algorithms import simple_pagerank_csr
+
+    return simple_pagerank_csr(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
 def _fastsv(spark, **kw):
     from alp_spark.algorithms.fastsv import fastsv_components
 
@@ -150,6 +156,12 @@ OPS = {
     "simple_pagerank": Op(
         _pagerank, 1, lambda r: r.iterations, lambda r: _scores(r.ranks),
         bound="max_iter", rounds=lambda r: r.iterations, label="simple_pagerank",
+    ),
+    # a driver numpy loop, not on Loop: held to the same release and
+    # partition-count checks
+    "simple_pagerank_csr": Op(
+        _pagerank_csr, 0, lambda r: r.iterations, lambda r: _scores(r.ranks),
+        bound="max_iter",
     ),
     "fastsv": Op(
         _fastsv, 1, lambda r: (_rows(r.labels, "id", "label"), r.rounds),

@@ -7,6 +7,10 @@ PageRank must match the reference-semantics oracle at 1e-10.
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
+
 import numpy as np
 import pytest
 
@@ -80,24 +84,9 @@ def test_csr_spmv_plus_matches_numpy(spark):
     assert csr.n_edges == len(edges)
     rng = np.random.default_rng(SEED)
     x = rng.random(n)
-    y = spmv_dense(spark, csr, x, combine="plus")
+    y = spmv_dense(spark, csr, x)
     A = oracles.adjacency(n, edges)
     np.testing.assert_allclose(y, x @ A, rtol=1e-12)
-    csr.unpersist()
-
-
-@pytest.mark.parametrize("combine,red", [("min", np.min), ("max", np.max)])
-def test_csr_spmv_minmax(spark, combine, red):
-    n, edges = g10_line_hub()
-    E = edges_df(spark, edges)
-    csr = build_csr_blocks(spark, E, n, n_partitions=2, layout="dst")
-    rng = np.random.default_rng(SEED + 1)
-    x = rng.random(n)
-    y = spmv_dense(spark, csr, x, combine=combine)
-    expect = np.full(n, np.inf if combine == "min" else -np.inf)
-    for s, d in edges:
-        expect[d] = red([expect[d], x[s]])
-    np.testing.assert_allclose(y, expect)
     csr.unpersist()
 
 
@@ -114,11 +103,14 @@ def test_csr_pagerank_matches_dataframe_path(spark, hub_graph):
     from alp_spark.algorithms.simple_pagerank import simple_pagerank
 
     n, edges, E = hub_graph
-    a = simple_pagerank(spark, E, n, conv=0.0, max_iter=3)
-    b = simple_pagerank_csr(spark, E, n, conv=0.0, max_iter=3)
-    va, vb = _vec(a.ranks), _vec(b.ranks)
-    for i in range(n):
-        assert va.get(i, 0.0) == pytest.approx(vb[i], abs=1e-12)
+    vb = _vec(simple_pagerank_csr(spark, E, n, conv=0.0, max_iter=3).ranks)
+    # both DataFrame strategies: broadcast (the default at this n) and
+    # shuffle, the one that runs graphs too large for the CSR driver vector
+    for strategy in ("broadcast", "shuffle"):
+        a = simple_pagerank(spark, E, n, conv=0.0, max_iter=3, strategy=strategy)
+        va = _vec(a.ranks)
+        for i in range(n):
+            assert va.get(i, 0.0) == pytest.approx(vb[i], abs=1e-12), strategy
 
 
 def test_csr_spmv_broadcast_transport(spark):
@@ -129,38 +121,42 @@ def test_csr_spmv_broadcast_transport(spark):
     csr = build_csr_blocks(spark, E, n, n_partitions=3)
     rng = np.random.default_rng(SEED)
     x = rng.random(n)
-    y_file = spmv_dense(spark, csr, x, combine="plus", x_transport="file")
-    y_bcast = spmv_dense(spark, csr, x, combine="plus", x_transport="broadcast")
+    y_file = spmv_dense(spark, csr, x, x_transport="file")
+    y_bcast = spmv_dense(spark, csr, x, x_transport="broadcast")
     np.testing.assert_array_equal(y_file, y_bcast)
     A = oracles.adjacency(n, edges)
     np.testing.assert_allclose(y_bcast, x @ A, rtol=1e-12)
     csr.unpersist()
 
 
+def _csr_dirs():
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), "alp_csr_*")))
+
+
 def test_csr_build_rejects_out_of_range_src(spark):
     E = edges_df(spark, [(0, 1), (7, 2)])  # src 7 >= n=5
+    before = _csr_dirs()
     csr = None
     with pytest.raises(Exception, match="out of range"):
         csr = build_csr_blocks(spark, E, 5, n_partitions=2)
     if csr is not None:
         csr.unpersist()
+    assert _csr_dirs() <= before  # the failed build removed its files
 
 
-def test_csr_pagerank_auto_fallback_to_shuffle(spark):
-    # above max_driver_n the CSR path must delegate to the distributed
-    # shuffle path with identical semantics
-    from alp_spark.algorithms.simple_pagerank import (
-        simple_pagerank,
-        simple_pagerank_csr,
-    )
+def test_csr_pagerank_failure_removes_block_files(spark):
+    class Failing:
+        def save(self, *args, **kwargs):
+            raise RuntimeError("checkpoint store unavailable")
 
     n, edges = g10_line_hub()
     E = edges_df(spark, edges)
-    a = simple_pagerank_csr(spark, E, n, conv=0.0, max_iter=3, max_driver_n=5)
-    b = simple_pagerank(spark, E, n, conv=0.0, max_iter=3, strategy="shuffle")
-    av = {r["id"]: r["val"] for r in a.ranks.collect()}
-    bv = {r["id"]: r["val"] for r in b.ranks.collect()}
-    assert av == pytest.approx(bv)
+    before = _csr_dirs()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="checkpoint store unavailable"):
+        simple_pagerank_csr(spark, E, n, checkpointer=Failing(), checkpoint_every=1)
+    assert _csr_dirs() <= before
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() <= persisted
 
 
 def test_small_frontier_vxm_broadcasts_mask_and_frontier(spark, hub_graph):
