@@ -1108,6 +1108,7 @@ def q_hpcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("val") * F.col("_x")).alias("val"))
     )
     res = hpcg(spark, system, b, max_iterations=HPCG_ITERS, tolerance=0.0)
+    system.unpersist()  # x is a filled checkpoint
     return res.x.select("id", F.round("val", 6).alias("x"))
 
 
@@ -1133,6 +1134,7 @@ def q_hpcg2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("val") * F.col("_x")).alias("val"))
     )
     res = hpcg(spark, system, b, max_iterations=HPCG2_ITERS, tolerance=0.0)
+    system.unpersist()  # x is a filled checkpoint
     return res.x.select("id", F.round("val", 6).alias("x"))
 
 

@@ -33,15 +33,19 @@ Transliterates the reference HPCG stack
   + correct, post-smooth.
 - ``hpcg`` — the preconditioned CG driver (hpcg.hpp:14-100) with the
   reference's exact update order; the β-direction update is the
-  eWiseMulAdd FMA (hpcg.hpp:73-75), and each dot is one driver-side
+  eWiseMulAdd FMA (hpcg.hpp:73-75), and each dot is one observed
   aggregate (= ALP's ``grb::dot`` allreduce shape).
 
 Scale: every vector op is an id-equi-join over dense (id, val) frames;
-the stencil matrix is built once per level and persisted; SpMV shuffles
-only the masked n/C output rows after map-side partial aggregation.
-All state frames are lazily localCheckpoint-ed so each CG step runs a
-bounded-lineage plan. Per-iteration driver traffic is the CG scalars —
-O(1) — exactly ALP's collectives.
+the stencil matrix is built once per level and persisted (released by
+:meth:`MgLevel.unpersist`); SpMV shuffles only the masked n/C output rows
+after map-side partial aggregation. The CG driver runs on
+:class:`alp_spark.loop.Loop` over ONE state frame ``(id, x, r, p)``: each
+of the three dots per iteration (r·z, p·Ap, r·r) is the observed census
+of the checkpoint that produces its operands, the last one the
+iteration's step; the V-cycle's frames are lazy checkpoints filled by
+the first and released right after it. Per-iteration driver traffic is
+the CG scalars — O(1) — exactly ALP's collectives.
 """
 
 from __future__ import annotations
@@ -49,9 +53,15 @@ from __future__ import annotations
 import itertools
 import math
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..loop import Loop
+
+#: a lazy checkpoint of the loop the V-cycle runs in (:meth:`Loop.lazy`)
+Lazy = Callable[[DataFrame], DataFrame]
 
 
 @dataclass
@@ -69,13 +79,23 @@ class MgLevel:
     coarse_map: DataFrame | None = None  # (cid, fid), persisted
     coarser: "MgLevel | None" = None
 
+    def unpersist(self) -> None:
+        """Release this level's and every coarser level's frames."""
+        level = self
+        while level is not None:
+            level.A.unpersist()
+            if level.coarse_map is not None:
+                level.coarse_map.unpersist()
+            level = level.coarser
+
 
 @dataclass
 class HpcgResult:
     x: DataFrame  # (id, val) — the solution iterate
     iterations: int
     norm_residual: float
-    residuals: list[float] = field(default_factory=list)
+    residuals: list[float] = field(default_factory=list)  # initial, then per iteration
+    history: list[dict] = field(default_factory=list)  # one per iteration
 
 
 def _coords(col, sizes: tuple[int, ...]):
@@ -219,17 +239,8 @@ def _spmv(A: DataFrame, x: DataFrame, row_filter=None) -> DataFrame:
     )
 
 
-def _dot(a: DataFrame, b: DataFrame) -> float:
-    got = (
-        a.join(b.select("id", F.col("val").alias("_b")), on="id")
-        .agg(F.sum(F.col("val") * F.col("_b")).alias("d"))
-        .collect()[0]["d"]
-    )
-    return float(got or 0.0)
-
-
 def _rbgs_single_step(
-    level: MgLevel, x: DataFrame, r: DataFrame, color: int
+    level: MgLevel, x: DataFrame, r: DataFrame, color: int, lazy: Lazy
 ) -> DataFrame:
     """__rbgs_single_step (red_black_gauss_seidel.hpp:24-58):
     ``x[i] = (r[i] - (A·x)[i] + x[i]·d) / d`` for i ≡ color (mod C),
@@ -238,7 +249,7 @@ def _rbgs_single_step(
     Gauss-Seidel across the color sweep."""
     C, d = level.num_colors, level.diag
     t = _spmv(level.A, x, row_filter=F.col("row") % C == color)
-    return (
+    return lazy(
         x.join(r.select("id", F.col("val").alias("_r")), on="id")
         .join(t.select("id", F.col("val").alias("_t")), on="id", how="left")
         .select(
@@ -251,27 +262,19 @@ def _rbgs_single_step(
             .otherwise(F.col("val"))
             .alias("val"),
         )
-        .localCheckpoint(eager=False)
     )
 
 
 def run_smoother(
-    level: MgLevel, x: DataFrame, r: DataFrame, steps: int
+    level: MgLevel, x: DataFrame, r: DataFrame, steps: int, lazy: Lazy
 ) -> DataFrame:
     """``steps`` full RBGS rounds: forward color sweep then backward
     (red_black_gauss_seidel.hpp:109-123)."""
     C = level.num_colors
     for _ in range(steps):
         for c in list(range(C)) + list(range(C - 1, -1, -1)):
-            x = _rbgs_single_step(level, x, r, c)
+            x = _rbgs_single_step(level, x, r, c, lazy)
     return x
-
-
-def _vec_minus(a: DataFrame, b: DataFrame) -> DataFrame:
-    return (
-        a.join(b.select("id", F.col("val").alias("_b")), on="id")
-        .select("id", (F.col("val") - F.col("_b")).alias("val"))
-    )
 
 
 def multi_grid(
@@ -280,13 +283,14 @@ def multi_grid(
     r: DataFrame,
     presmoother_steps: int,
     postsmoother_steps: int,
+    lazy: Lazy,
 ) -> DataFrame:
     """One V-cycle (multigrid_v_cycle.hpp multi_grid:179-254) returning
     the level solution z for residual r."""
     z = _zeros(spark, level.n)
     if level.coarser is None:
-        return run_smoother(level, z, r, 1)
-    z = run_smoother(level, z, r, presmoother_steps)
+        return run_smoother(level, z, r, 1, lazy)
+    z = run_smoother(level, z, r, presmoother_steps, lazy)
     Az = _spmv(level.A, z)
     # fine residual r - A·z, dense (SpMV rows are dense here: every row
     # has a diagonal entry; coalesce guards the algebraic contract)
@@ -295,26 +299,23 @@ def multi_grid(
         .select("id", (F.col("val") - F.coalesce(F.col("_a"), F.lit(0.0))).alias("val"))
     )
     # restriction: r_coarse[cid] = fine_res[fid] (injection mxv)
-    r_coarse = (
+    r_coarse = lazy(
         level.coarse_map.join(
             fine_res.select(F.col("id").alias("fid"), "val"), on="fid"
-        )
-        .select(F.col("cid").alias("id"), "val")
-        .localCheckpoint(eager=False)
+        ).select(F.col("cid").alias("id"), "val")
     )
     z_coarse = multi_grid(
-        spark, level.coarser, r_coarse, presmoother_steps, postsmoother_steps
+        spark, level.coarser, r_coarse, presmoother_steps, postsmoother_steps, lazy
     )
     # prolongation: z[fid] += z_coarse[cid] (transpose injection)
     corr = level.coarse_map.join(
         z_coarse.select(F.col("id").alias("cid"), F.col("val").alias("_c")), on="cid"
     ).select(F.col("fid").alias("id"), "_c")
-    z = (
+    z = lazy(
         z.join(corr, on="id", how="left")
         .select("id", (F.col("val") + F.coalesce(F.col("_c"), F.lit(0.0))).alias("val"))
-        .localCheckpoint(eager=False)
     )
-    return run_smoother(level, z, r, postsmoother_steps)
+    return run_smoother(level, z, r, postsmoother_steps, lazy)
 
 
 def hpcg(
@@ -334,68 +335,81 @@ def hpcg(
     if max_iterations <= 0:
         raise ValueError("max_iterations must be positive")
     A, n = system.A, system.n
-    x = (x0 or _zeros(spark, n)).localCheckpoint(eager=False)
-    Ap = _spmv(A, x)
-    r = (
-        b.join(Ap.select("id", F.col("val").alias("_a")), on="id", how="left")
-        .select("id", (F.col("val") - F.coalesce(F.col("_a"), F.lit(0.0))).alias("val"))
-        .localCheckpoint(eager=False)
-    )
-    norm_residual = math.sqrt(_dot(r, r))
-    norm0 = norm_residual
-    residuals = [norm_residual]
-    r_dot_z, p = 0.0, None
-    it = 0
-    while True:
-        if with_preconditioning:
-            z = multi_grid(
-                spark, system, r, presmoother_steps, postsmoother_steps
-            )
-        else:
-            z = r
-        if it == 0:
-            p = z
-            r_dot_z = _dot(r, z)
-        else:
-            old = r_dot_z
-            r_dot_z = _dot(r, z)
-            # C++ double division yields NaN/inf on old == 0 (e.g.
-            # b ≡ 0 ⇒ z = p = 0); the loop guard below absorbs the NaN
-            # — mirror that instead of raising ZeroDivisionError.
-            beta = r_dot_z / old if old != 0.0 else float("nan")
-            # p = beta·p + z (the reference's eWiseMulAdd FMA, hpcg.hpp:73-75)
-            p = (
-                p.join(z.select("id", F.col("val").alias("_z")), on="id")
-                .select("id", (F.lit(beta) * F.col("val") + F.col("_z")).alias("val"))
-                .localCheckpoint(eager=False)
-            )
-        Ap = _spmv(A, p).localCheckpoint(eager=False)
-        pAp = _dot(Ap, p)
-        alpha = r_dot_z / pAp if pAp != 0.0 else float("nan")
-        x = (
-            x.join(p.select("id", F.col("val").alias("_p")), on="id")
-            .select("id", (F.col("val") + F.lit(alpha) * F.col("_p")).alias("val"))
-            .localCheckpoint(eager=False)
-        )
-        r = (
-            r.join(Ap.select("id", F.col("val").alias("_a")), on="id", how="left")
+    with Loop(spark, "hpcg") as loop:
+        smoothed: list[DataFrame] = []  # this round's V-cycle checkpoints
+
+        def lazy(df: DataFrame) -> DataFrame:
+            smoothed.append(loop.lazy(df))
+            return smoothed[-1]
+
+        x = x0 if x0 is not None else _zeros(spark, n)
+        # r = b - A·x; ONE fused state frame (id, x, r, p) from here on
+        st, stats = loop.checkpoint(
+            x.join(_spmv(A, x).select("id", F.col("val").alias("_a")), on="id", how="left")
+            .join(b.select("id", F.col("val").alias("_b")), on="id")
             .select(
                 "id",
-                (F.col("val") - F.lit(alpha) * F.coalesce(F.col("_a"), F.lit(0.0))).alias(
-                    "val"
-                ),
-            )
-            .localCheckpoint(eager=False)
+                F.col("val").alias("x"),
+                (F.col("_b") - F.coalesce(F.col("_a"), F.lit(0.0))).alias("r"),
+            ),
+            rr=F.sum(F.col("r") * F.col("r")),
         )
-        norm_residual = math.sqrt(_dot(r, r))
-        residuals.append(norm_residual)
-        it += 1
-        # exact reference loop guard (hpcg.hpp:96): continue while
-        # iter < max and norm/norm0 > tol — a NaN ratio (norm0 == 0)
-        # compares false and stops, as in C++
-        rel = norm_residual / norm0 if norm0 != 0.0 else float("nan")
-        if not (it < max_iterations and rel > tolerance):
-            break
+        norm0 = math.sqrt(float(stats["rr"] or 0.0))
+        r_dot_z = 0.0
+        while True:
+            if with_preconditioning:
+                r = st.select("id", F.col("r").alias("val"))
+                z = multi_grid(
+                    spark, system, r, presmoother_steps, postsmoother_steps, lazy
+                )
+                zst = st.join(z.select("id", F.col("val").alias("z")), on="id")
+            else:
+                zst = st.withColumn("z", F.col("r"))
+            zst, stats = loop.checkpoint(
+                zst, stage="precondition", replaces=st, rz=F.sum(F.col("r") * F.col("z"))
+            )
+            loop.release(*smoothed)  # filled into zst
+            smoothed.clear()
+            old, r_dot_z = r_dot_z, float(stats["rz"])
+            if loop.round == 0:
+                p = F.col("z")
+            else:
+                # C++ double division yields NaN/inf on old == 0 (e.g.
+                # b ≡ 0 ⇒ z = p = 0); the loop guard below absorbs the NaN
+                # — mirror that instead of raising ZeroDivisionError.
+                beta = r_dot_z / old if old != 0.0 else float("nan")
+                # p = beta·p + z (the reference's eWiseMulAdd FMA, hpcg.hpp:73-75)
+                p = F.lit(beta) * F.col("p") + F.col("z")
+            pst = zst.select("id", "x", "r", p.alias("p"))
+            Ap = _spmv(A, pst.select("id", F.col("p").alias("val")))
+            pst, stats = loop.checkpoint(
+                pst.join(Ap.select("id", F.col("val").alias("_a")), on="id", how="left")
+                .withColumn("_a", F.coalesce(F.col("_a"), F.lit(0.0))),
+                stage="spmv", replaces=zst, pap=F.sum(F.col("_a") * F.col("p")),
+            )
+            pAp = float(stats["pap"])
+            alpha = r_dot_z / pAp if pAp != 0.0 else float("nan")
+            st, stats = loop.step(
+                pst.select(
+                    "id",
+                    (F.col("x") + F.lit(alpha) * F.col("p")).alias("x"),
+                    (F.col("r") - F.lit(alpha) * F.col("_a")).alias("r"),
+                    "p",
+                ),
+                replaces=pst, rr=F.sum(F.col("r") * F.col("r")),
+            )
+            norm_residual = math.sqrt(float(stats["rr"]))
+            # exact reference loop guard (hpcg.hpp:96): continue while
+            # iter < max and norm/norm0 > tol — a NaN ratio (norm0 == 0)
+            # compares false and stops, as in C++
+            rel = norm_residual / norm0 if norm0 != 0.0 else float("nan")
+            if not (loop.round < max_iterations and rel > tolerance):
+                break
+        loop.finish(st)
     return HpcgResult(
-        x=x, iterations=it, norm_residual=norm_residual, residuals=residuals
+        x=st.select("id", F.col("x").alias("val")),
+        iterations=loop.round,
+        norm_residual=norm_residual,
+        residuals=[norm0] + [math.sqrt(h["rr"]) for h in loop.history],
+        history=loop.history,
     )

@@ -57,6 +57,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..loop import Loop
+
 
 @dataclass
 class KmeansResult:
@@ -111,65 +113,70 @@ def kpp_initialisation(
     because k++ needs a spread sample, not the full corpus. With
     n ≤ sample_cap the input is untouched, so results equal the exact
     path bit-for-bit (pytest-asserted)."""
-    pts = points.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).localCheckpoint(eager=False)
-    n = pts.count()
-    if sample_cap is not None and n > sample_cap:
-        pts = (
-            pts.orderBy(F.xxhash64(F.col("id"), F.lit(int(seed))), "id")
-            .limit(int(sample_cap))
-            .localCheckpoint(eager=False)
+    with Loop(spark, "kpp") as loop:
+        pts, stats = loop.checkpoint(
+            points.select(
+                F.col(id_col).alias("id"),
+                F.col(vec_col).cast("array<double>").alias("vec"),
+            ),
+            n=F.count(F.lit(1)),
         )
-        n = int(sample_cap)
-    first, samples = kpp_draws(n, k, seed)
-    # the uniform draw indexes the id-ordered point list (the reference
-    # indexes columns 0..n-1 of X); O(1) rows reach the driver
-    rn = F.row_number().over(Window.orderBy("id"))
-    sel = (
-        pts.select("id", rn.alias("_rn"))
-        .where(F.col("_rn").isin(first + 1, n))
-        .orderBy("_rn")
-        .collect()
-    )
-    max_id = sel[-1]["id"]
-    sel = sel[0]["id"]
-
-    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    centroids: list[list[float]] = []
-    mdf = pts.withColumn("mind", F.lit(float("inf")))
-    for l in range(k):
-        cvec = [
-            float(v)
-            for v in mdf.where(F.col("id") == sel).select("vec").head()["vec"]
-        ]
-        centroids.append(cvec)
-        if l == k - 1:
-            break
-        # selected_distances (latest centroid) + min_distances fold
-        mdf = mdf.select(
-            "id",
-            "vec",
-            _sq_dist(F.col("vec"), cvec).alias("_dl"),
-            "mind",
-        ).withColumn("mind", F.least("mind", F.col("_dl"))).localCheckpoint(
-            eager=False
-        )
-        total = float(
-            mdf.agg(F.sum("mind").alias("t")).collect()[0]["t"]
-        )  # range := Σ min_distances (kmeans.hpp:142-143)
-        # scan selected_distances/range in id order; first id whose
-        # running sum reaches the sample wins (kmeans.hpp:158-168)
-        cum = F.sum(F.col("_dl") / F.lit(total)).over(w)
-        hit = (
-            mdf.select("id", cum.alias("_cum"))
-            .where(F.col("_cum") >= samples[l])
-            .orderBy("id")
-            .limit(1)
+        n, full = stats["n"], None
+        if sample_cap is not None and n > sample_cap:
+            full = pts
+            pts = loop.lazy(
+                pts.orderBy(F.xxhash64(F.col("id"), F.lit(int(seed))), "id")
+                .limit(int(sample_cap))
+            )
+            n = int(sample_cap)
+        first, samples = kpp_draws(n, k, seed)
+        # the uniform draw indexes the id-ordered point list (the reference
+        # indexes columns 0..n-1 of X); O(1) rows reach the driver
+        rn = F.row_number().over(Window.orderBy("id"))
+        sel = (
+            pts.select("id", rn.alias("_rn"))
+            .where(F.col("_rn").isin(first + 1, n))
+            .orderBy("_rn")
             .collect()
         )
-        sel = hit[0]["id"] if hit else max_id  # reference clamp i = n-1
+        max_id = sel[-1]["id"]
+        sel = sel[0]["id"]
+        loop.release(full)  # the collect filled the sample (no-op if None)
+
+        w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        centroids: list[list[float]] = []
+        mdf, prev = pts.withColumn("mind", F.lit(float("inf"))), pts
+        for l in range(k):
+            cvec = [
+                float(v)
+                for v in mdf.where(F.col("id") == sel).select("vec").head()["vec"]
+            ]
+            centroids.append(cvec)
+            if l == k - 1:
+                break
+            # selected_distances (latest centroid) + min_distances fold;
+            # range := Σ min_distances (kmeans.hpp:142-143)
+            mdf, stats = loop.checkpoint(
+                mdf.select(
+                    "id",
+                    "vec",
+                    _sq_dist(F.col("vec"), cvec).alias("_dl"),
+                    "mind",
+                ).withColumn("mind", F.least("mind", F.col("_dl"))),
+                stage="kpp", replaces=prev, total=F.sum("mind"),
+            )
+            prev = mdf
+            # scan selected_distances/range in id order; first id whose
+            # running sum reaches the sample wins (kmeans.hpp:158-168)
+            cum = F.sum(F.col("_dl") / F.lit(float(stats["total"]))).over(w)
+            hit = (
+                mdf.select("id", cum.alias("_cum"))
+                .where(F.col("_cum") >= samples[l])
+                .orderBy("id")
+                .limit(1)
+                .collect()
+            )
+            sel = hit[0]["id"] if hit else max_id  # reference clamp i = n-1
     return centroids
 
 
@@ -200,49 +207,53 @@ def kmeans(
             sample_cap=kpp_sample_cap,
         )
     )
-    m = len(centroids[0])
-    pts = points.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    ).localCheckpoint(eager=False)
-
-    assigned = None
-    converged = False
-    iters = 0
-    while iters < max_iter:
-        iters += 1
-        # ---- assignment: argmin over (dist, cluster) structs ---------------
-        best = F.array_min(
-            F.array(
-                *[
-                    F.struct(
-                        _sq_dist(F.col("vec"), c).alias("dist"),
-                        F.lit(j).alias("cluster"),
-                    )
-                    for j, c in enumerate(centroids)
-                ]
+    with Loop(spark, "kmeans") as loop:
+        # filled by the first round's collect; every round's assignment is
+        # filled by its own collect, which supersedes the previous one
+        pts = loop.lazy(
+            points.select(
+                F.col(id_col).alias("id"),
+                F.col(vec_col).cast("array<double>").alias("vec"),
             )
         )
-        assigned = pts.withColumn("_b", best).select(
-            "id",
-            "vec",
-            F.col("_b.cluster").alias("cluster"),
-            F.col("_b.dist").alias("dist"),
-        ).localCheckpoint(eager=False)
-        # ---- update: per-(cluster, dim) sums; k·m cells to the driver ------
-        cells = (
-            assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_centroids = [list(c) for c in centroids]  # empty-cluster guard
-        for row in cells:
-            new_centroids[row["cluster"]][row["pos"]] = row["s"] / row["n"]
-        if new_centroids == centroids:
-            converged = True
-            break
-        centroids = new_centroids
+        assigned, converged = None, False
+        for iters in range(1, max_iter + 1):
+            # ---- assignment: argmin over (dist, cluster) structs -----------
+            best = F.array_min(
+                F.array(
+                    *[
+                        F.struct(
+                            _sq_dist(F.col("vec"), c).alias("dist"),
+                            F.lit(j).alias("cluster"),
+                        )
+                        for j, c in enumerate(centroids)
+                    ]
+                )
+            )
+            prev, assigned = assigned, loop.lazy(
+                pts.withColumn("_b", best).select(
+                    "id",
+                    "vec",
+                    F.col("_b.cluster").alias("cluster"),
+                    F.col("_b.dist").alias("dist"),
+                )
+            )
+            # ---- update: per-(cluster, dim) sums; k·m cells to the driver --
+            cells = (
+                assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
+                .groupBy("cluster", "pos")
+                .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
+                .collect()
+            )
+            loop.release(prev)  # superseded (no-op in the first round)
+            new_centroids = [list(c) for c in centroids]  # empty-cluster guard
+            for row in cells:
+                new_centroids[row["cluster"]][row["pos"]] = row["s"] / row["n"]
+            if new_centroids == centroids:
+                converged = True
+                break
+            centroids = new_centroids
+        loop.finish(assigned)
 
     return KmeansResult(
         assignments=assigned.select("id", "cluster", "dist"),

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
-from ..loop import Loop
+from ..loop import Loop, _release
 
 
 @dataclass
@@ -149,33 +149,42 @@ def bowtie_classes(
     vertex ``core`` (the largest SCC; ties broken by smallest label),
     ``in`` (reaches the core), ``out`` (reachable from the core), or
     ``other`` (tendrils, tubes, disconnected). Returns (id, cls)."""
-    labels = strongly_connected_components(spark, edges, n).labels  # checkpointed
-    core_lbl = (
-        labels.groupBy("scc")
-        .agg(F.count("*").alias("_sz"))
-        .orderBy(F.col("_sz").desc(), F.col("scc").asc())
-        .limit(1)
-        .select("scc")
-    )
-    core = labels.join(F.broadcast(core_lbl), on="scc", how="left_semi").select(ID)
-    core = core.localCheckpoint(eager=True)
-    fwd = reach_set(spark, edges, core, forward=True)
-    bwd = reach_set(spark, edges, core, forward=False)
-    return (
-        spark.range(n)
-        .select(F.col("id").alias(ID))
-        .join(core.select(ID, F.lit(True).alias("_c")), on=ID, how="left")
-        .join(bwd.select(ID, F.lit(True).alias("_in")), on=ID, how="left")
-        .join(fwd.select(ID, F.lit(True).alias("_out")), on=ID, how="left")
-        .select(
-            ID,
-            F.when(F.col("_c"), F.lit("core"))
-            .when(F.col("_in"), F.lit("in"))
-            .when(F.col("_out"), F.lit("out"))
-            .otherwise(F.lit("other"))
-            .alias("cls"),
+    labels = strongly_connected_components(spark, edges, n).labels
+    with Loop(spark, "bowtie") as loop:
+        core_lbl = (
+            labels.groupBy("scc")
+            .agg(F.count("*").alias("_sz"))
+            .orderBy(F.col("_sz").desc(), F.col("scc").asc())
+            .limit(1)
+            .select("scc")
         )
-    )
+        core, _ = loop.checkpoint(
+            labels.join(F.broadcast(core_lbl), on="scc", how="left_semi").select(ID),
+            stage="core",
+        )
+        fwd = reach_set(spark, edges, core, forward=True)
+        bwd = reach_set(spark, edges, core, forward=False)
+        classes, _ = loop.checkpoint(
+            spark.range(n)
+            .select(F.col("id").alias(ID))
+            .join(core.select(ID, F.lit(True).alias("_c")), on=ID, how="left")
+            .join(bwd.select(ID, F.lit(True).alias("_in")), on=ID, how="left")
+            .join(fwd.select(ID, F.lit(True).alias("_out")), on=ID, how="left")
+            .select(
+                ID,
+                F.when(F.col("_c"), F.lit("core"))
+                .when(F.col("_in"), F.lit("in"))
+                .when(F.col("_out"), F.lit("out"))
+                .otherwise(F.lit("other"))
+                .alias("cls"),
+            ),
+            stage="classes",
+        )
+        loop.finish(classes)
+    # the other operators' results, read only by ``classes``
+    for df in (labels, fwd, bwd):
+        _release(df)
+    return classes
 
 
 def strongly_connected_components(
@@ -272,16 +281,13 @@ def strongly_connected_components(
             )
             Eact = loop.swap(Eact, without(Eact, reached))
 
-        if not parts:  # n == 0
-            labels = spark.range(0).select(ID, F.col(ID).alias("scc"))
-        else:
-            # one frame for the result: the assigned batches are
-            # released with the loop
-            union = parts[0]
-            for p in parts[1:]:
-                union = union.unionByName(p)
-            labels, _ = loop.checkpoint(union, stage="labels")
-            loop.finish(labels)
+        # one frame for the result: the assigned batches are released
+        # with the loop
+        union = parts[0] if parts else spark.range(0).select(ID, F.col(ID).alias("scc"))
+        for p in parts[1:]:
+            union = union.unionByName(p)
+        labels, _ = loop.checkpoint(union, stage="labels")
+        loop.finish(labels)
     return SCCResult(
         labels=labels, outer_rounds=outer, inner_rounds=loop.round,
         history=loop.history,

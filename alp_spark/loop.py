@@ -3,7 +3,8 @@
 ALP runs Pregel and every shipped algorithm over one GraphBLAS core
 (interfaces/pregel.hpp:765-804); here Pregel's superstep and every
 census loop (PageRank, FastSV, k-core, MIS, SSSP, label propagation,
-k-truss, SCC) run on one :class:`Loop`, which owns:
+k-truss, SCC, the Krylov solvers, HPCG) run on one :class:`Loop`, which
+owns:
 
 - **invariants** (:meth:`Loop.cache`): persisted once in a size-derived
   layout and counted; unpersisted on every exit path.
@@ -11,7 +12,8 @@ k-truss, SCC) run on one :class:`Loop`, which owns:
   eager ``localCheckpoint`` with the round's census observed on it,
   so there is no separate stats job. The frame it ``replaces`` is
   released once the new one is filled.
-- **history**: one ``{round, wall_s, **census}`` entry per step.
+- **history**: one ``{round, wall_s, **census}`` entry per step;
+  ``wall_s`` runs from the end of the previous step (or of the prelude).
 - **parquet checkpoints** every ``checkpoint_every`` rounds and on
   :meth:`Loop.finish`; ``_``-prefixed columns are loop-internal and not
   saved.
@@ -20,8 +22,9 @@ k-truss, SCC) run on one :class:`Loop`, which owns:
 
 Frames the result reads are named with :meth:`Loop.finish`; every other
 checkpoint is released on exit, all of them on an exception. Fixed-round
-lazy chains (HITS, ANF, batched PPR) keep their one action at the end:
-:meth:`Loop.lazy` checkpoints without an action, :meth:`Loop.fill` runs it.
+lazy chains (HITS, ANF, batched PPR, the HPCG smoother) keep their one
+action at the end: :meth:`Loop.lazy` checkpoints without an action,
+:meth:`Loop.fill` (or the operator's own action, as in k-means) runs it.
 """
 
 from __future__ import annotations
@@ -105,7 +108,8 @@ class Loop:
             df = df.persist()
             n = df.count()
         self._invariants[id(df)] = df
-        self._t0 = time.perf_counter()
+        if not self.history:  # prelude; a step restarts the clock itself
+            self._t0 = time.perf_counter()
         return df, n
 
     def swap(self, old: DataFrame, new: DataFrame) -> DataFrame:
@@ -133,7 +137,8 @@ class Loop:
         self._frames[id(frame)] = frame
         if replaces is not None:
             self.release(replaces)
-        self._t0 = time.perf_counter()
+        if not self.history:
+            self._t0 = time.perf_counter()
         return frame, obs.get if obs is not None else {}
 
     def step(
@@ -148,10 +153,11 @@ class Loop:
         t0 = self._t0
         self.round += 1
         frame, stats = self.checkpoint(df, stage, replaces, **census)
-        self.history.append({"round": self.round, "wall_s": self._t0 - t0, **stats})
+        wall = time.perf_counter() - t0
+        self.history.append({"round": self.round, "wall_s": wall, **stats})
         if self.checkpointer is not None and self.round % self.checkpoint_every == 0:
             self._save(frame, stats, final=False)
-            self._t0 = time.perf_counter()
+        self._t0 = time.perf_counter()
         return frame, stats
 
     def lazy(self, df: DataFrame) -> DataFrame:

@@ -58,41 +58,7 @@ HEADLINE = [
 ]
 
 
-_THP_DEFRAG = "/sys/kernel/mm/transparent_hugepage/defrag"
-
-
-def _quiet_khugepaged() -> None:
-    """Best-effort: THP compaction (khugepaged) throttles python workers
-    under numpy allocation churn (measured 3-10x superstep inflation);
-    defrag off stops the compactor. The prior setting is restored at
-    exit (atexit) so the system-wide knob is not left changed. Ignored
-    without privileges."""
-    import atexit
-
-    try:
-        with open(_THP_DEFRAG) as fh:
-            prior = fh.read()
-        # active value is the bracketed token, e.g. "always defer [madvise] never"
-        prior = next(
-            (t.strip("[]") for t in prior.split() if t.startswith("[")), "madvise"
-        )
-        with open(_THP_DEFRAG, "w") as fh:
-            fh.write("never")
-    except OSError:
-        return
-
-    def _restore() -> None:
-        try:
-            with open(_THP_DEFRAG, "w") as fh:
-                fh.write(prior)
-        except OSError:
-            pass
-
-    atexit.register(_restore)
-
-
 def main() -> None:
-    _quiet_khugepaged()
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--sf-dir",

@@ -23,11 +23,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from alp_spark.session import get_spark  # noqa: E402
-from bench import HEADLINE, _quiet_khugepaged  # noqa: E402
+from bench import HEADLINE  # noqa: E402
 
 
 def main() -> None:
-    _quiet_khugepaged()
     ap = argparse.ArgumentParser()
     ap.add_argument(
         "--sf-dir",

@@ -60,40 +60,7 @@ def gen_graph(path: str, n: int, avg_deg: int) -> None:
     pq.write_table(tbl, path, row_group_size=4_000_000)
 
 
-_THP_DEFRAG = "/sys/kernel/mm/transparent_hugepage/defrag"
-
-
-def _quiet_khugepaged() -> None:
-    """Best-effort: THP compaction (khugepaged) throttles every worker to
-    ~50% CPU under numpy's allocation churn on this kernel — measured 3-10x
-    superstep inflation. Defrag off keeps huge pages but stops the
-    compactor; the prior setting is restored at exit. Ignored without
-    privileges."""
-    import atexit
-
-    try:
-        with open(_THP_DEFRAG) as fh:
-            raw = fh.read()
-        prior = next(
-            (t.strip("[]") for t in raw.split() if t.startswith("[")), "madvise"
-        )
-        with open(_THP_DEFRAG, "w") as fh:
-            fh.write("never")
-    except OSError:
-        return
-
-    def _restore() -> None:
-        try:
-            with open(_THP_DEFRAG, "w") as fh:
-                fh.write(prior)
-        except OSError:
-            pass
-
-    atexit.register(_restore)
-
-
 def main() -> None:
-    _quiet_khugepaged()
     ap = argparse.ArgumentParser()
     ap.add_argument("--cores", type=int, required=True)
     ap.add_argument(
@@ -130,38 +97,22 @@ def main() -> None:
     edges = spark.read.parquet(graph)
     n, iters = args.n, args.iters
 
+    from alp_spark.algorithms.simple_pagerank import simple_pagerank, simple_pagerank_csr
+
+    # every path times one whole PageRank call (edge build, caching,
+    # prelude and the supersteps) and divides it by --iters
+    m = edges.count()
+    t0 = time.monotonic()
     if args.path == "csr":
-        from alp_spark.plans.csr_blocks import build_csr_blocks, spmv_dense
-
-        t0 = time.monotonic()
-        csr = build_csr_blocks(spark, edges, n, n_partitions=args.cores * 2)
-        build_sec = time.monotonic() - t0
-        m = csr.n_edges
-
-        # steady-state loop: plain power iteration (rank semantics
-        # exercised fully in simple_pagerank_csr; here we time the
-        # superstep kernel itself, one mapInPandas pass per superstep)
-        x = np.full(n, 1.0 / n)
-        spmv_dense(spark, csr, x)  # warm the cached blocks
-        laps = []
-        for _ in range(iters):
-            t0 = time.monotonic()
-            x = spmv_dense(spark, csr, x) * 0.85 + 0.15 / n
-            laps.append(time.monotonic() - t0)
-        wall = sum(laps)
-        csr.unpersist()
+        res = simple_pagerank_csr(spark, edges, n, conv=0.0, max_iter=iters)
     else:
-        from alp_spark.algorithms.simple_pagerank import simple_pagerank
-
-        m = edges.count()
-        t0 = time.monotonic()
         res = simple_pagerank(
             spark, edges, n, conv=0.0, max_iter=iters, strategy=args.path
         )
-        wall = time.monotonic() - t0
-        build_sec = 0.0
-        laps = [wall / iters] * iters
-        assert res.iterations == iters
+    wall = time.monotonic() - t0
+    build_sec = 0.0  # inside the timed call
+    laps = [wall / iters] * iters
+    assert res.iterations == iters
 
     per_step = wall / iters
     print(

@@ -59,6 +59,7 @@ def test_hpcg_preconditioned_matches_oracle(spark):
     res = hpcg(
         spark, system, _vec_df(spark, b), max_iterations=3, tolerance=0.0
     )
+    system.unpersist()
     want_x, want_it, want_norm = hpcg_oracle(
         sizes, b, num_colors=3, max_iterations=3
     )
@@ -81,6 +82,7 @@ def test_hpcg_unpreconditioned_matches_oracle(spark):
         with_preconditioning=False,
         max_iterations=5,
     )
+    system.unpersist()
     want_x, want_it, want_norm = hpcg_oracle(
         sizes, b, num_colors=3, with_preconditioning=False, max_iterations=5
     )
@@ -104,6 +106,7 @@ def test_hpcg_reference_smoke_invariant(spark):
         .agg(F.sum(F.col("val") * F.col("_x")).alias("val"))
     )
     res = hpcg(spark, system, b_df, max_iterations=56, tolerance=1e-10)
+    system.unpersist()
     x = _collect_x(res.x, n)
     assert res.iterations < 56  # converged by tolerance, not cap
     np.testing.assert_allclose(x, np.ones(n), rtol=0, atol=1e-7)
@@ -129,6 +132,7 @@ def test_hpcg_zero_rhs_graceful_exit(spark):
     system = build_hpcg_system(spark, sizes, num_colors=3, max_levels=1)
     zeros = _vec_df(spark, np.zeros(27))
     res = hpcg(spark, system, zeros, max_iterations=5, tolerance=1e-9)
+    system.unpersist()
     assert res.iterations == 1  # NaN relative residual stops the loop
     assert res.residuals[0] == 0.0
 
@@ -146,6 +150,7 @@ def test_hpcg_two_level_vcycle_matches_oracle(spark):
     res = hpcg(
         spark, system, _vec_df(spark, b), max_iterations=2, tolerance=0.0
     )
+    system.unpersist()
     want_x, want_it, want_norm = hpcg_oracle(
         sizes, b, num_colors=3, max_iterations=2, max_levels=2
     )

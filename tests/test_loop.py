@@ -5,13 +5,15 @@ of the shuffle partition count, a per-round ``history`` and the
 
 from __future__ import annotations
 
+import time
+from collections import Counter
 from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
 import pytest
 
-from alp_spark.loop import PHASE
+from alp_spark.loop import PHASE, Loop
 
 from .fixtures import edges_df, g497_powerlaw, g_seeded_labels, vec_df
 
@@ -128,6 +130,70 @@ def _ppr(spark, **kw):
     return ppr_multi(spark, edges_df(spark, DIRECTED), N, [0, 7, N - 1], **kw)
 
 
+# solver systems over the same graph: SPD (Laplacian + 2I), diagonally
+# dominant non-symmetric, Hermitian positive definite
+DEG = Counter(s for s, _ in SYMMETRIC)
+SPD = [(s, d, -1.0) for s, d in SYMMETRIC] + [(i, i, DEG[i] + 2.0) for i in range(N)]
+NONSYM = [(s, d, -0.5) for s, d in DIRECTED] + [(i, i, DEG[i] + 3.0) for i in range(N)]
+HERMITIAN = [
+    (s, d, -1.0, (1 if s < d else -1) * ((3 * min(s, d) + max(s, d)) % 5 - 2) / 10)
+    for s, d in SYMMETRIC
+] + [(i, i, 1.1 * DEG[i] + 2.0, 0.0) for i in range(N)]
+RHS = [(i, (i % 7 + 1) / 4.0) for i in range(N)]
+
+
+def _cg(spark, **kw):
+    from alp_spark.algorithms import conjugate_gradient
+
+    A, b = edges_df(spark, SPD, val=True), vec_df(spark, RHS)
+    return conjugate_gradient(spark, A, b, N, tol=1e-8, **kw)
+
+
+def _bicgstab(spark, **kw):
+    from alp_spark.algorithms import bicgstab
+
+    A, b = edges_df(spark, NONSYM, val=True), vec_df(spark, RHS)
+    return bicgstab(spark, A, b, N, tol=1e-8, **kw)
+
+
+def _cg_complex(spark, **kw):
+    from alp_spark.algorithms.solvers import conjugate_gradient_complex
+
+    A = spark.createDataFrame(HERMITIAN, "src long, dst long, re double, im double")
+    b = spark.createDataFrame(
+        [(i, v, -v / 2) for i, v in RHS], "id long, re double, im double"
+    )
+    return conjugate_gradient_complex(spark, A, b, N, tol=1e-8, **kw)
+
+
+def _hpcg(spark, max_iterations=2):
+    from alp_spark.algorithms.hpcg import build_hpcg_system, hpcg
+
+    # a two-level hierarchy: 6³ coarsened to 3³
+    system = build_hpcg_system(spark, (6, 6, 6), num_colors=3, min_phys_size=3)
+    b = vec_df(spark, [(i, (i % 9 - 4) / 8.0) for i in range(system.n)])
+    res = hpcg(spark, system, b, max_iterations=max_iterations)
+    system.unpersist()
+    return res
+
+
+def _kmeans(spark, **kw):
+    from alp_spark.algorithms import kmeans
+
+    # binary-fraction coordinates: every centroid sum is exact
+    pts = spark.createDataFrame(
+        [(i, [(i * 7 % 13) / 4.0, (i * 5 % 11) / 4.0]) for i in range(N)],
+        "id long, vec array<double>",
+    )
+    return kmeans(spark, pts, k=3, seed=5, **kw)
+
+
+def _bowtie(spark):
+    from alp_spark.algorithms.scc import bowtie_classes
+
+    return bowtie_classes(spark, edges_df(spark, DIRECTED), N)
+
+
 def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
@@ -146,6 +212,7 @@ class Op:
     bound: str | None = None  # the option that caps its rounds
     rounds: Callable | None = None  # census loops: result -> rounds
     label: str | None = None  # the alp.phase op name seen by a checkpointer
+    rtol: float = 1e-15  # float scores across shuffle partition counts
 
 
 OPS = {
@@ -211,6 +278,33 @@ OPS = {
         _ppr, 1, lambda r: r.rounds, lambda r: _scores(r.ranks, key=("seed", "id")),
         bound="rounds",
     ),
+    # Krylov solvers: their oracle tests' rtol, as the iterate compounds
+    # the dots' summation order
+    "cg": Op(
+        _cg, 1, lambda r: (r.iterations, r.converged), lambda r: _scores(r.x),
+        bound="max_iterations", rounds=lambda r: r.iterations, rtol=1e-9,
+    ),
+    "bicgstab": Op(
+        _bicgstab, 1, lambda r: (r.iterations, r.converged), lambda r: _scores(r.x),
+        bound="max_iterations", rounds=lambda r: r.iterations, rtol=1e-9,
+    ),
+    "cg_complex": Op(
+        _cg_complex, 1, lambda r: (r.iterations, r.converged),
+        lambda r: np.concatenate([_scores(r.x, "re"), _scores(r.x, "im")]),
+        bound="max_iterations", rounds=lambda r: r.iterations, rtol=1e-9,
+    ),
+    "hpcg": Op(
+        _hpcg, 1, lambda r: r.iterations, lambda r: _scores(r.x),
+        bound="max_iterations", rounds=lambda r: r.iterations, rtol=1e-9,
+    ),
+    "kmeans": Op(
+        _kmeans, 1,
+        lambda r: (
+            _rows(r.assignments, "id", "cluster", "dist"), r.iterations, r.centroids
+        ),
+        bound="max_iter",
+    ),
+    "bowtie": Op(_bowtie, 1, lambda r: _rows(r, "id", "cls")),
 }
 CENSUS = [name for name, op in OPS.items() if op.rounds is not None]
 CHECKPOINTING = [name for name, op in OPS.items() if op.label is not None]
@@ -273,7 +367,7 @@ def test_outputs_independent_of_shuffle_partition_count(spark, name):
         spark.conf.set(conf, old)
     assert two[0] == eight[0]
     if op.scores is not None:
-        np.testing.assert_allclose(two[1], eight[1], rtol=1e-15)
+        np.testing.assert_allclose(two[1], eight[1], rtol=op.rtol)
 
 
 @pytest.mark.parametrize("name", CENSUS)
@@ -296,3 +390,16 @@ def test_checkpoint_saves_run_under_the_operator_label(spark, name):
     assert rec.labels[0] == f"{op.label}:save:1"
     assert rec.labels[-1] == f"{op.label}:save:{op.rounds(res)}"
     assert spark.sparkContext.getLocalProperty(PHASE) is None
+
+
+def test_step_wall_counts_mid_round_checkpoints(spark):
+    # a round runs from the end of the previous step to the end of its
+    # own: a checkpoint between two steps belongs to the second round
+    df = spark.range(4)
+    with Loop(spark, "clock") as loop:
+        f, _ = loop.checkpoint(df)
+        f, _ = loop.step(df, replaces=f)
+        time.sleep(0.3)
+        f, _ = loop.checkpoint(df, stage="mid", replaces=f)
+        loop.step(df, replaces=f)
+    assert loop.history[1]["wall_s"] >= 0.3
