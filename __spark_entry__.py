@@ -250,11 +250,10 @@ def q_pagerank5(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.ranks.select(ID, F.round(VAL, 6).alias("rank"))
 
 
-# L1 residuals of the sf0.01 driver graph's power iteration fall ~8x per
-# step (5.4e-6 at iter 6, 6.3e-7 at iter 7), so the 1e-6 stop round is
-# FP-ordering-proof and the convergence oracle can unroll exactly 7.
+# the oracle unrolls to the engine's round cap and stops where the engine
+# does: at the first round whose L1 residual is <= the tolerance
 PR_CONV_TOL = 1e-6
-PR_CONV_ITERS = 7
+PR_CONV_MAX_ITER = 200
 
 
 def q_pagerank_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,15 +261,15 @@ def q_pagerank_conv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (L1 residual <= 1e-6, the reference stop rule
     simple_pagerank.hpp:433-443) rather than a pinned round count.
     The emitted per-row ``iters`` column pins the engine's actual stop
-    round against the oracle's unrolled depth, so a convergence-test
-    regression (stopping early/late) is a hash mismatch, not silence."""
+    round against the oracle's, so a convergence-test regression
+    (stopping early/late) is a hash mismatch, not silence."""
     res = simple_pagerank(
         spark,
         _edges(spark, sf_dir),
         N_V,
         alpha=0.85,
         conv=PR_CONV_TOL,
-        max_iter=200,
+        max_iter=PR_CONV_MAX_ITER,
     )
     return res.ranks.select(
         ID,
@@ -479,7 +478,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core coreness (kcore_decomposition.hpp:141-296, Li et al.
     HPEC'21 semantics) via the iterated-h-index engine — few rounds
     instead of one job per peel level (VERDICT r4 item 5); output
-    identical to the peel loop and to the unrolled-peel SQL oracle."""
+    identical to the unrolled-peel SQL oracle."""
     res = kcore_decomposition(spark, _sym_edges(spark, sf_dir), N_V)
     return res.cores.select(ID, F.col("core").alias("coreness"))
 
@@ -1528,12 +1527,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracle SQL (DuckDB dialect where ANSI falls short: list lambdas)
 # --------------------------------------------------------------------------
 
-def _pagerank5_sql(iters: int = PR_ITERS, final_extra: str = "") -> str:
+def _pagerank_rounds_sql(iters: int, cte: str = "") -> str:
+    """The ``WITH`` body of the unrolled power iteration: rank vectors
+    ``p0 .. p{iters}`` over ``v``; ``cte`` qualifies each round's CTE."""
     n, a = N_V, 0.85
     steps = []
     prev = "p0"
     for k in range(1, iters + 1):
-        steps.append(f"""p{k} AS (
+        steps.append(f"""p{k} AS {cte}(
   SELECT v.id,
          coalesce(s.contrib, 0)
          + ({a} * (SELECT coalesce(sum(p.rank), 0) FROM {prev} p
@@ -1547,12 +1548,40 @@ def _pagerank5_sql(iters: int = PR_ITERS, final_extra: str = "") -> str:
 )""")
         prev = f"p{k}"
     joined = ",\n".join(steps)
-    return f"""WITH {E_SQL},
+    return f"""{E_SQL},
 outdeg AS (SELECT src, count(*)::DOUBLE AS d FROM edges GROUP BY src),
 v AS (SELECT id FROM range({n}) t(id)),
 p0 AS (SELECT id, 1.0 / {n} AS rank FROM v),
-{joined}
-SELECT id, round(rank, 6) AS rank{final_extra} FROM {prev}"""
+{joined}"""
+
+
+def _pagerank5_sql(iters: int = PR_ITERS) -> str:
+    return f"""WITH {_pagerank_rounds_sql(iters)}
+SELECT id, round(rank, 6) AS rank FROM p{iters}"""
+
+
+def _pagerank_conv_sql(cap: int = PR_CONV_MAX_ITER) -> str:
+    """PageRank to the engine's stop rule at any depth: unroll ``cap``
+    rounds, take each round's L1 residual against the previous one and
+    emit the first round with residual <= PR_CONV_TOL (the cap when none
+    is), with that round as ``iters``."""
+    rounds = "\n  UNION ALL ".join(
+        f"SELECT {k} AS k, id, rank FROM p{k}" for k in range(cap + 1)
+    )
+    return f"""WITH {_pagerank_rounds_sql(cap, cte="MATERIALIZED ")},
+ps AS MATERIALIZED (
+  {rounds}
+),
+res AS (
+  SELECT c.k, sum(abs(c.rank - p.rank)) AS r
+  FROM ps c JOIN ps p ON p.id = c.id AND p.k = c.k - 1
+  GROUP BY c.k
+),
+stop AS (
+  SELECT coalesce(min(k) FILTER (WHERE r <= {PR_CONV_TOL}), {cap}) AS k FROM res
+)
+SELECT ps.id, round(ps.rank, 6) AS rank, ps.k AS iters
+FROM ps JOIN stop ON ps.k = stop.k"""
 
 
 def _hits_sql(iters: int = HITS_ITERS) -> str:
@@ -2916,10 +2945,7 @@ SELECT sum(o.v * i.v)::DOUBLE AS dot_val FROM o JOIN i ON o.id = i.id""",
         "pagerank5": _pagerank5_sql(),
         "ppr5": _ppr5_sql(),
         "pagerank5_csr": _pagerank5_sql(),
-        "pagerank_conv": _pagerank5_sql(
-            iters=PR_CONV_ITERS,
-            final_extra=f", {PR_CONV_ITERS} AS iters",
-        ),
+        "pagerank_conv": _pagerank_conv_sql(),
         "out_degree_salted": f"""WITH {E_SQL}
 SELECT src AS id, count(*) AS degree FROM edges GROUP BY src""",
         "fma_degrees": f"""WITH {E_SQL},

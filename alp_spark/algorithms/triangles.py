@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..containers import DST, SRC
+from ..loop import Loop
 
 
 @dataclass
@@ -30,44 +31,46 @@ class TriangleResult:
 
 def triangle_count(edges: DataFrame) -> TriangleResult:
     """Count triangles in an UNDIRECTED graph given as a both-direction
-    edge table (u→v and v→u both present, no self-loops)."""
-    # orient by (degree, id): each triangle counted exactly once
-    deg = edges.groupBy(SRC).agg(F.count("*").alias("_d"))
-    e = (
-        edges.join(deg.withColumnRenamed(SRC, SRC), on=SRC)
-        .join(
-            deg.select(F.col(SRC).alias(DST), F.col("_d").alias("_d2")),
-            on=DST,
+    edge table (u→v and v→u both present, no self-loops). ONE action
+    after the oriented edge cache: the per-vertex counts are checkpointed
+    with the total observed on them; the triangles themselves are never
+    persisted."""
+    with Loop(edges.sparkSession, "triangles") as loop:
+        # orient by (degree, id): each triangle counted exactly once
+        deg = edges.groupBy(SRC).agg(F.count("*").alias("_d"))
+        e, _ = loop.cache(
+            edges.join(deg, on=SRC)
+            .join(
+                deg.select(F.col(SRC).alias(DST), F.col("_d").alias("_d2")),
+                on=DST,
+            )
+            .where(
+                (F.col("_d") < F.col("_d2"))
+                | ((F.col("_d") == F.col("_d2")) & (F.col(SRC) < F.col(DST)))
+            )
+            .select(SRC, DST),
+            resize=False,
         )
-        .where(
-            (F.col("_d") < F.col("_d2"))
-            | ((F.col("_d") == F.col("_d2")) & (F.col(SRC) < F.col(DST)))
-        )
-        .select(SRC, DST)
-        .persist()
-    )
 
-    # wedges i→j→k in the oriented graph, masked by the oriented edge set
-    a = e.select(F.col(SRC).alias("i"), F.col(DST).alias("j"))
-    b = e.select(F.col(SRC).alias("j"), F.col(DST).alias("k"))
-    tri = (
-        a.join(b, on="j")
-        .join(
+        # wedges i→j→k in the oriented graph, masked by the oriented edge set
+        a = e.select(F.col(SRC).alias("i"), F.col(DST).alias("j"))
+        b = e.select(F.col(SRC).alias("j"), F.col(DST).alias("k"))
+        tri = a.join(b, on="j").join(
             e.select(F.col(SRC).alias("i"), F.col(DST).alias("k")),
             on=["i", "k"],
             how="left_semi",
         )
-        .persist()
-    )
-    total = tri.count()
-    per_vertex = (
-        tri.select(F.col("i").alias("id"))
-        .unionAll(tri.select(F.col("j").alias("id")))
-        .unionAll(tri.select(F.col("k").alias("id")))
-        .groupBy("id")
-        .agg(F.count("*").alias("count"))
-    )
-    e.unpersist()
+        # one pass over the unpersisted triangles: each is counted at its
+        # three vertices
+        per_vertex, stats = loop.checkpoint(
+            tri.select(F.explode(F.array("i", "j", "k")).alias("id"))
+            .groupBy("id")
+            .agg(F.count("*").alias("count")),
+            stage="count",
+            incidences=F.sum("count"),
+        )
+        loop.finish(per_vertex)
+    total = int(stats["incidences"] or 0) // 3
     return TriangleResult(total=total, per_vertex=per_vertex)
 
 

@@ -25,24 +25,17 @@ reference ``execute`` (pregel.hpp:650-920):
    (pregel.hpp:882-884, ring built at :714-721). NOTE the reference
    default keeps ``out`` dense (SparsificationStrategy NONE,
    pregel.hpp:242): vertices that went inactive KEEP broadcasting their
-   last message. We reproduce that exactly by default — it is
-   load-bearing for round-count and label parity.
-6. ``sparsify`` exposes the reference's full SparsificationStrategy set
-   (pregel.hpp:167-242, applied at :887-898): under
-   'always'/'when_reduced'/'when_halved' the outgoing-message vector is
-   restricted to the active set (and reset to the combiner identity)
-   right after an exchange, so inactive vertices stop broadcasting and
-   the exchange join input shrinks with the frontier. The reference
-   applies sparsify AFTER the vxm; in this loop's phase (exchange at
-   round entry) that lands between assembling ``incoming`` and running
-   the program, as one more masked Column in the same projection.
-   Liveness is tracked in the ``_out_live`` column; ``out_nnz`` (the
-   trigger's cost input) is carried on the driver. Measured
-   (scripts/bench_pregel_sparsify.py, BASELINE.md round 5): the
-   reference's "ALWAYS is slower" result does NOT carry over — all
-   strategies sit within ~7% on the CC flood (ALWAYS slightly ahead).
-   Default stays 'none' for reference parity; enabling it is safe and
-   pays on early-decaying frontiers.
+   last message. We reproduce that exactly — it is load-bearing for
+   round-count and label parity.
+6. NONE is the only SparsificationStrategy (pregel.hpp:167-242): the
+   outgoing-message vector is always the n-row state. The reference
+   defaults to NONE because restricting that workspace to the active set
+   is typically not worth it (pregel.hpp:183-184), and that holds here:
+   on the sf0.01 driver graph, local-convergence PageRank took 9 rounds
+   under NONE and 78-98 rounds under WHEN_HALVED/ALWAYS, which also
+   change the scores, while a halt-vote program such as CC never
+   deactivates a vertex, so the other strategies do nothing there
+   (CHANGES.md).
 
 Per-superstep Spark cost: ONE SQL execution — one
 :meth:`alp_spark.loop.Loop.step`, the runtime every census loop shares.
@@ -97,7 +90,6 @@ VertexProgram = Callable[[PregelContext], dict[str, Column]]
 
 _STATE_COLS = ["id", "state", "out", "active", "halt", "outdegree", "indegree"]
 _PROGRAM_OUT = ("state", "out", "active", "halt")
-_SPARSIFY = ("none", "always", "when_reduced", "when_halved")
 
 
 def _struct_lit(value, dt: DataType):
@@ -146,26 +138,17 @@ def pregel(
     init_use_index: bool = False,
     data: object = None,
     max_rounds: int = 0,
-    num_edges: int | None = None,
     checkpointer=None,
     checkpoint_every: int = 10,
     resume_state: DataFrame | None = None,
     resume_round: int = 0,
-    sparsify: str = "none",
 ) -> PregelResult:
     """Run a vertex program to termination (pregel.hpp:650-920).
 
-    ``sparsify``: the reference SparsificationStrategy for the outgoing
-    message vector (pregel.hpp:167-242) — 'none' (reference default,
-    inactive vertices keep broadcasting their last message) | 'always' |
-    'when_reduced' | 'when_halved'.
-
     ``history`` holds one entry per superstep: the active census after
     it, the halt vote, the cumulative count of vertices that ran the
-    program, the out-vector nnz and the superstep's wall time.
+    program and the superstep's wall time.
     """
-    if sparsify not in _SPARSIFY:
-        raise ValueError(f"sparsify must be one of {_SPARSIFY}")
     state_dt = _parse_datatype_string(state_type)
     msg_dt = _parse_datatype_string(msg_type)
     msg_id_col = _struct_lit(combiner.identity, msg_dt)
@@ -180,8 +163,7 @@ def pregel(
         # the superstep loop scans the edge table every round: cache it
         # ONCE in a size-derived layout (guide §2/§5) and reuse the count
         # it needed anyway
-        edges, counted = loop.cache(edges, key=SRC)
-        nnz = num_edges if num_edges is not None else counted
+        edges, num_edges = loop.cache(edges, key=SRC)
         if resumed:
             init = resume_state.select(*_STATE_COLS)
         else:
@@ -203,33 +185,23 @@ def pregel(
                 "outdegree",
                 "indegree",
             )
-        # out-liveness under sparsification; on resume the live set
-        # restarts at the active set (≡ a sparsify applied at resume) for
-        # != 'none'. The census is observed on the same action (a resumed
-        # state can carry inactive rows).
-        live_init = F.lit(True) if sparsify == "none" else active
-        state, stats = loop.checkpoint(
-            init.withColumn("_out_live", live_init),
-            active=F.sum(active.cast("long")),
-        )
+        # the census is observed on the same action (a resumed state can
+        # carry inactive rows)
+        state, stats = loop.checkpoint(init, active=F.sum(active.cast("long")))
         n_active = int(stats["active"] or 0)
 
         converged = True
-        out_nnz = n  # nnz of the outgoing-message vector (driver-tracked)
         program_rows = 0
         while True:
-            # ---- exchange: incoming[j] = ⊕_{i→j, live(i)} out[i] -----------
+            # ---- exchange: incoming[j] = ⊕_{i→j} out[i] ---------------------
             # when EVERY vertex is active (halt-vote-only programs never
             # shrink the set) the output mask is a per-round no-op: skip it
             split = n_active < n
-            exchange = resumed or loop.round > 0
-            if not exchange:
+            if not (resumed or loop.round > 0):
                 cur, incoming = state, msg_id_col
             else:
-                out_vec = (
-                    state.where("_out_live") if sparsify != "none" else state
-                ).select(ID, F.col("out").alias(VAL))
-                # the out vector has out_nnz entries: broadcast-join when
+                out_vec = state.select(ID, F.col("out").alias(VAL))
+                # the out vector has n entries: broadcast-join when
                 # it fits, shuffle otherwise — the CRS/CCS direction
                 # choice. n_active is already counted on the driver: pass
                 # it through so a small-frontier round broadcasts the
@@ -239,7 +211,7 @@ def pregel(
                 msgs = vxm(
                     out_vec, edges, ring,
                     out_mask=state.where("active").select(ID) if split else None,
-                    strategy="auto", frontier_nnz=out_nnz,
+                    strategy="auto", frontier_nnz=n,
                     out_mask_nnz=n_active if split else None,
                 )
                 # NOTE: no broadcast hint on the msgs side of the state
@@ -253,33 +225,21 @@ def pregel(
                 )
                 incoming = F.coalesce(F.col("_msg"), msg_id_col)
 
-            # ---- sparsify-out (reference order: right after the vxm,
-            # before the program — pregel.hpp:887-898) ---------------------
-            do_sparsify = sparsify != "none" and exchange and (
-                sparsify == "always"
-                or (sparsify == "when_reduced" and out_nnz > n_active)
-                or (sparsify == "when_halved" and n_active <= out_nnz // 2)
-            )
-            if do_sparsify:
-                out_nnz = n_active
-            # program inputs: live := active and out := combiner identity
-            # on a sparsify round; halt votes reset (pregel.hpp:865-870)
+            # program inputs; halt votes reset (pregel.hpp:865-870)
             cur = cur.select(
                 ID,
                 "state",
-                (F.when(active, msg_id_col).otherwise(F.col("out"))
-                 if do_sparsify else F.col("out")).alias("out"),
+                "out",
                 incoming.alias("incoming"),
                 "active",
                 F.lit(False).alias("halt"),
                 "outdegree",
                 "indegree",
                 active.alias("_ran"),
-                (active if do_sparsify else active | F.col("_out_live")).alias("_out_live"),
             )
 
             ctx = PregelContext(
-                round=loop.round, num_vertices=n, num_edges=nnz, data=data
+                round=loop.round, num_vertices=n, num_edges=num_edges, data=data
             )
             updates = program(ctx)
             unknown = set(updates) - set(_PROGRAM_OUT)
@@ -294,7 +254,7 @@ def pregel(
                     if c in updates else c
                     for c in _PROGRAM_OUT
                 ],
-                "outdegree", "indegree", "_ran", "_out_live",
+                "outdegree", "indegree", "_ran",
             )
             # ONE action: checkpoint + halt vote + census + program rows
             state, stats = loop.step(
@@ -307,7 +267,7 @@ def pregel(
             n_active = int(stats["active"] or 0)
             all_halt = bool(stats["all_halt"])
             program_rows += int(stats["ran"] or 0)
-            loop.history[-1].update(program_rows=program_rows, out_nnz=out_nnz)
+            loop.history[-1]["program_rows"] = program_rows
 
             if all_halt:  # everyone who ran voted to halt (pregel.hpp:816-822)
                 break

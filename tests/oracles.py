@@ -59,27 +59,19 @@ def pregel_pagerank(
     tolerance: float = 1e-5,
     local_converge: bool = False,
     max_rounds: int = 0,
-    sparsify: str = "none",
 ):
     """pregel_pagerank.hpp:87-144 over the pregel.hpp:650-920 round loop.
 
     Round 0 sets score=1; round>0: score = α + (1-α)·incoming, converged
     vertices either deactivate (local) or vote to halt (global). Broadcast
     out = score/outdeg. Inactive vertices keep their last out-message
-    (out_sparsify defaults to NONE, pregel.hpp:242) and those stale
+    (the out SparsificationStrategy defaults to NONE, pregel.hpp:242) and those stale
     messages CONTINUE to be delivered — reference behaviour.
-
-    ``sparsify`` mirrors the reference SparsificationStrategy
-    (pregel.hpp:167-242, applied at :887-898): after an exchange the out
-    vector is restricted to the active set and reset to the combiner
-    identity, so inactive vertices STOP broadcasting.
     """
     A = adjacency(n, edges)
     outdeg = A.sum(axis=1)
     score = np.zeros(n)
     out = np.zeros(n)  # Id of the add monoid
-    live = np.ones(n, dtype=bool)  # out-vector sparsity pattern
-    out_nnz = n
     incoming = np.zeros(n)
     active = np.ones(n, dtype=bool)
     step = 0
@@ -106,17 +98,8 @@ def pregel_pagerank(
             break
         if max_rounds > 0 and step > max_rounds:
             break
-        # in[j] = Σ_{i live} out[i]A[i,j], output-masked to active
-        incoming = np.where(active, (out * live) @ A, 0.0)
-        cur_active = int(active.sum())
-        if sparsify != "none" and (
-            sparsify == "always"
-            or (sparsify == "when_reduced" and out_nnz > cur_active)
-            or (sparsify == "when_halved" and cur_active <= out_nnz // 2)
-        ):
-            live = active.copy()
-            out = np.zeros(n)  # reset live entries to the combiner identity
-            out_nnz = cur_active
+        # in[j] = Σ_i out[i]A[i,j], output-masked to active
+        incoming = np.where(active, out @ A, 0.0)
     return score, step
 
 

@@ -93,29 +93,10 @@ def test_kcore_two_components(spark):
     assert [got[i] for i in range(n)] == list(want)
 
 
-def test_kcore_shuffle_frontier_path(spark, monkeypatch):
-    # a zero broadcast gate forces every peel round onto the shuffle
-    # left_semi join (the >threshold web-scale branch); results must be
-    # identical to the broadcast path
-    from alp_spark.algorithms.kcore import kcore_decomposition
-    from alp_spark.operators import blas2
-
-    from .fixtures import g2_components
-
-    n, edges = g2_components()
-    E = edges_df(spark, edges)
-    monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
-    res = kcore_decomposition(spark, E, n, method="peel")
-    got = {r["id"]: r["core"] for r in res.cores.collect()}
-    from .oracles import kcore as kcore_oracle
-    want = kcore_oracle(n, edges)
-    assert [got[i] for i in range(n)] == list(want)
-
-
 def test_kcore_hindex_and_peel_agree(spark):
-    # the two engines must produce identical coreness (module docstring;
-    # the h-index fixpoint equals coreness, Lu et al. 2016) on a graph
-    # with a deep-ish hierarchy + isolated vertices
+    # the h-index fixpoint equals the peel oracle's coreness (module
+    # docstring; Lu et al. 2016) on a graph with a deep-ish hierarchy +
+    # isolated vertices
     import random
 
     from alp_spark.algorithms.kcore import kcore_decomposition
@@ -131,15 +112,12 @@ def test_kcore_hindex_and_peel_agree(spark):
         und.add((i - 1, i))
     sym = sorted({(a, b) for a, b in und} | {(b, a) for a, b in und})
     E = edges_df(spark, sym)
-    hi = kcore_decomposition(spark, E, n, method="hindex")
-    pe = kcore_decomposition(spark, E, n, method="peel")
-    got_h = {r["id"]: r["core"] for r in hi.cores.collect()}
-    got_p = {r["id"]: r["core"] for r in pe.cores.collect()}
-    assert got_h == got_p
+    hi = kcore_decomposition(spark, E, n)
+    got = {r["id"]: r["core"] for r in hi.cores.collect()}
     from .oracles import kcore as kcore_oracle
     want = kcore_oracle(n, sym)
-    assert [got_h[i] for i in range(n)] == list(want)
-    assert hi.max_k == pe.max_k
+    assert [got[i] for i in range(n)] == list(want)
+    assert hi.max_k == max(want)
 
 
 def test_spy_matches_numpy(spark):
@@ -318,12 +296,12 @@ def test_kcore_resume_equals_uninterrupted(spark, tmp_path):
 
 
 def test_kcore_frontier_path_exact(spark, monkeypatch):
-    # frontier_min_edges=0 forces frontier mode from the first eligible
-    # round; coreness must match the default (full-round) engine and
-    # the oracle exactly, with its semi-joins broadcast or not
+    # a zero edge gate forces frontier mode from the first eligible
+    # round; coreness must match the oracle exactly, with its semi-joins
+    # broadcast or not
     import random
 
-    from alp_spark.algorithms.kcore import kcore_decomposition
+    from alp_spark.algorithms import kcore
     from alp_spark.operators import blas2
 
     rng = random.Random(23)
@@ -337,13 +315,14 @@ def test_kcore_frontier_path_exact(spark, monkeypatch):
         und.add((i - 1, i))
     sym = sorted({(a, b) for a, b in und} | {(b, a) for a, b in und})
     E = edges_df(spark, sym)
-    fr = kcore_decomposition(spark, E, n, frontier_min_edges=0)
+    monkeypatch.setattr(kcore, "FRONTIER_MIN_EDGES", 0)
+    fr = kcore.kcore_decomposition(spark, E, n)
     got = {r["id"]: r["core"] for r in fr.cores.collect()}
     from .oracles import kcore as kcore_oracle
     want = kcore_oracle(n, sym)
     assert [got[i] for i in range(n)] == list(want)
     # a zero gate leaves both frontier semi-joins unbroadcast
     monkeypatch.setattr(blas2, "BROADCAST_NNZ_THRESHOLD", 0)
-    sh = kcore_decomposition(spark, E, n, frontier_min_edges=0)
+    sh = kcore.kcore_decomposition(spark, E, n)
     assert {r["id"]: r["core"] for r in sh.cores.collect()} == got
     assert sh.rounds == fr.rounds

@@ -13,7 +13,7 @@ from typing import Callable
 import numpy as np
 import pytest
 
-from alp_spark.loop import PHASE, Loop
+from alp_spark.loop import PHASE, Loop, _release
 
 from .fixtures import edges_df, g497_powerlaw, g_seeded_labels, vec_df
 
@@ -57,14 +57,10 @@ def _fastsv(spark, **kw):
     return fastsv_components(spark, edges_df(spark, SYMMETRIC), N, **kw)
 
 
-def _kcore(method):
-    def run(spark, **kw):
-        from alp_spark.algorithms.kcore import kcore_decomposition
+def _kcore(spark, **kw):
+    from alp_spark.algorithms.kcore import kcore_decomposition
 
-        E = edges_df(spark, SYMMETRIC)
-        return kcore_decomposition(spark, E, N, method=method, **kw)
-
-    return run
+    return kcore_decomposition(spark, edges_df(spark, SYMMETRIC), N, **kw)
 
 
 def _mis(spark, **kw):
@@ -194,6 +190,12 @@ def _bowtie(spark):
     return bowtie_classes(spark, edges_df(spark, DIRECTED), N)
 
 
+def _triangles(spark):
+    from alp_spark.algorithms import triangle_count
+
+    return triangle_count(edges_df(spark, SYMMETRIC))
+
+
 def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
@@ -235,12 +237,8 @@ OPS = {
         bound="max_rounds", rounds=lambda r: r.rounds, label="fastsv",
     ),
     "kcore_hindex": Op(
-        _kcore("hindex"), 1, lambda r: (_rows(r.cores, "id", "core"), r.rounds, r.max_k),
+        _kcore, 1, lambda r: (_rows(r.cores, "id", "core"), r.rounds, r.max_k),
         bound="max_rounds", rounds=lambda r: r.rounds, label="kcore",
-    ),
-    "kcore_peel": Op(
-        _kcore("peel"), 1, lambda r: (_rows(r.cores, "id", "core"), r.rounds, r.max_k),
-        bound="max_rounds", rounds=lambda r: r.rounds,
     ),
     "mis": Op(
         _mis, 1, lambda r: (_rows(r.members, "id"), r.rounds),
@@ -305,6 +303,9 @@ OPS = {
         bound="max_iter",
     ),
     "bowtie": Op(_bowtie, 1, lambda r: _rows(r, "id", "cls")),
+    "triangle_count": Op(
+        _triangles, 1, lambda r: (r.total, _rows(r.per_vertex, "id", "count")),
+    ),
 }
 CENSUS = [name for name, op in OPS.items() if op.rounds is not None]
 CHECKPOINTING = [name for name, op in OPS.items() if op.label is not None]
@@ -390,6 +391,15 @@ def test_checkpoint_saves_run_under_the_operator_label(spark, name):
     assert rec.labels[0] == f"{op.label}:save:1"
     assert rec.labels[-1] == f"{op.label}:save:{op.rounds(res)}"
     assert spark.sparkContext.getLocalProperty(PHASE) is None
+
+
+def test_triangle_count_persists_only_its_counts(spark):
+    # the triangles themselves are never persisted: releasing the
+    # per-vertex counts the result reads returns to the baseline
+    before = _persisted(spark)
+    res = _triangles(spark)
+    _release(res.per_vertex)
+    assert _persisted(spark) == before
 
 
 def test_step_wall_counts_mid_round_checkpoints(spark):

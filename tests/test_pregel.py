@@ -92,36 +92,6 @@ def test_program_pass_is_frontier_proportional(spark):
     assert total_prog_rows < res.rounds * n  # the active set shrank
 
 
-@pytest.mark.parametrize("strategy", ["always", "when_reduced", "when_halved"])
-def test_pregel_sparsification_strategies_match_oracle(spark, strategy):
-    # sparsified out-vectors change which messages flow (inactive
-    # vertices stop broadcasting) — pin against the NumPy oracle
-    # extended with the same reference semantics (pregel.hpp:887-898)
-    n, edges = g497_powerlaw(n=97)
-    E = edges_df(spark, edges)
-    res = pregel_pagerank(spark, E, n, local_converge=True, sparsify=strategy)
-    want, want_rounds = pr_oracle(n, edges, local_converge=True, sparsify=strategy)
-    got = state_arr(res.state, n)
-    np.testing.assert_allclose(got, want, rtol=1e-12)
-    assert res.rounds == want_rounds
-    # out_nnz recorded in history must never grow
-    nnzs = [h["out_nnz"] for h in res.history]
-    assert all(b <= a for a, b in zip(nnzs, nnzs[1:]))
-
-
-def test_sparsify_noop_for_halt_vote_programs(spark):
-    # CC never deactivates vertices (halt votes only), so live == active
-    # == everyone until termination: any strategy must reproduce the
-    # NONE labels and round count exactly
-    n, edges = g2_components()
-    E = edges_df(spark, edges)
-    res = connected_components(spark, E, n, sparsify="always")
-    want, want_rounds = cc_oracle(n, edges)
-    got = state_arr(res.state, n, dtype=np.int64)
-    np.testing.assert_array_equal(got, want)
-    assert res.rounds == want_rounds
-
-
 @pytest.mark.parametrize("local", [False, True])
 def test_pregel_struct_state_pagerank_residual(spark, local):
     """Struct-typed state (interfaces/pregel.hpp:508-663 arbitrary POD):
