@@ -62,8 +62,6 @@ def fastsv_components(
     max_rounds: int = 0,
     checkpointer=None,
     checkpoint_every: int = 10,
-    resume_state: DataFrame | None = None,
-    resume_round: int = 0,
     vertices: DataFrame | None = None,
 ) -> FastSVResult:
     """Exact connected components of an undirected graph given as a
@@ -74,21 +72,20 @@ def fastsv_components(
     ``range(n)`` vertex set — ids may then be arbitrary longs (e.g.
     doc_ids in the near-dup clustering pipeline); ``n`` is ignored.
 
-    Resumable like the Pregel runtime: the parent vector ``f`` is
-    checkpointed with lineage + per-round metrics every
-    ``checkpoint_every`` rounds; a run resumed from any snapshot
-    produces identical labels (each round is a deterministic min-fold
-    of the previous ``f`` over the same edges)."""
-    start = resume_round if resume_state is not None else 0
-    with Loop(spark, "fastsv", checkpointer, checkpoint_every, start=start) as loop:
+    Resumable: the parent vector ``f`` is checkpointed with lineage +
+    per-round metrics every ``checkpoint_every`` rounds; pass a
+    checkpointer whose run holds a snapshot and the run continues from
+    it to identical labels (each round is a deterministic min-fold of
+    the previous ``f`` over the same edges)."""
+    with Loop(spark, "fastsv", checkpointer, checkpoint_every) as loop:
         # size-derived cached layout (guide §2): the loop re-scans E
         # every round; partition count follows the measured row count,
         # capped at the conf parallelism (identical layout at scale).
         E, _ = loop.cache(sym_edges.select(SRC, DST), key=DST)
 
         # f: the parent (Shiloach-Vishkin forest) vector, init f[i] = i
-        if resume_state is not None:
-            f = resume_state.select(ID, "f")
+        if loop.resumed is not None:
+            f = loop.resumed.select(ID, "f")
         else:
             base = (
                 vertices.select(F.col(vertices.columns[0]).alias("id"))

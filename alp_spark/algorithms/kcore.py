@@ -54,8 +54,6 @@ def kcore_decomposition(
     max_rounds: int = 0,
     checkpointer=None,
     checkpoint_every: int = 10,
-    resume_state: DataFrame | None = None,
-    resume_round: int = 0,
 ) -> KCoreResult:
     """Coreness per vertex over an undirected graph given as a
     symmetric edge table (both directions present, no self-loops):
@@ -73,19 +71,19 @@ def kcore_decomposition(
     collect_list); each round is ONE :meth:`alp_spark.loop.Loop.step`
     action with the change census observed on the checkpoint.
 
-    Resumable like the Pregel runtime: the h vector is checkpointed with
-    lineage + per-round metrics every ``checkpoint_every`` rounds; a
-    resumed run's first round is a full recompute (the frontier set is
-    not persisted — correct because a full round is always exact) and
-    converges to identical coreness."""
-    start = resume_round if resume_state is not None else 0
-    with Loop(spark, "kcore", checkpointer, checkpoint_every, start=start) as loop:
+    Resumable: the h vector is checkpointed with lineage + per-round
+    metrics every ``checkpoint_every`` rounds; pass a checkpointer whose
+    run holds a snapshot and the run continues from it. Its first round
+    is a full recompute (the frontier set is not persisted — correct
+    because a full round is always exact) and it converges to identical
+    coreness."""
+    with Loop(spark, "kcore", checkpointer, checkpoint_every) as loop:
         # size-derived cached layout (guide §2; conf-capped — identical
         # at scale); the count doubles as the frontier-mode gate input
         sym_edges, m_sym = loop.cache(sym_edges, key=SRC)
 
-        if resume_state is not None:
-            h = resume_state.select(ID, "h")
+        if loop.resumed is not None:
+            h = loop.resumed.select(ID, "h")
         else:
             deg = sym_edges.groupBy(F.col(SRC).alias(ID)).agg(
                 F.count("*").alias("h")

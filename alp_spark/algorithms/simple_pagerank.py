@@ -26,6 +26,7 @@ dangling mass (the initial mass rides on the initial checkpoint).
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,8 +65,6 @@ def simple_pagerank(
     max_iter: int = 1000,
     checkpointer=None,
     checkpoint_every: int = 5,
-    initial: DataFrame | None = None,
-    start_iteration: int = 0,
     strategy: str = "auto",
     teleport: DataFrame | None = None,
 ) -> PageRankResult:
@@ -87,16 +86,17 @@ def simple_pagerank(
     graphs fall back to the shuffle hash join.
     The analog of the reference's CRS/CCS loop-size strategy choice
     (reference/blas2.hpp:1104-1145).
+
+    Resumable: ``pr`` is checkpointed every ``checkpoint_every``
+    iterations; pass a checkpointer whose run holds a snapshot and the
+    iteration continues from its ranks and iteration count.
     """
     if not 0 < alpha < 1 or max_iter <= 0:
         raise ValueError("alpha must be in (0,1), max_iter > 0")  # ILLEGAL checks
 
     if strategy == "auto":
         strategy = "broadcast" if n <= DENSE_BROADCAST_NNZ else "shuffle"
-    with Loop(
-        spark, "simple_pagerank", checkpointer, checkpoint_every,
-        start=start_iteration,
-    ) as loop:
+    with Loop(spark, "simple_pagerank", checkpointer, checkpoint_every) as loop:
         if not edges.storageLevel.useMemory:
             # pre-partition by dst ONCE (broadcast strategy): the
             # broadcast hash join preserves this partitioning, so every
@@ -141,8 +141,8 @@ def simple_pagerank(
                 resize=False,
             )
 
-        if initial is not None:
-            pr = initial
+        if loop.resumed is not None:
+            pr = loop.resumed.select(ID, VAL)
         elif tele is not None:
             pr = tele.select(ID, F.col("_tele").alias(VAL))  # pr0 = v
         else:
@@ -226,7 +226,8 @@ def simple_pagerank_csr(
     The dense rank vector lives on the driver (8n bytes of float64). A
     graph whose vector does not fit the driver runs
     :func:`simple_pagerank`: the Loop-based DataFrame engine handles any
-    n with ``strategy='shuffle'`` and resumes from its checkpoints.
+    n with ``strategy='shuffle'``. Resumable and with a ``history`` like
+    :func:`simple_pagerank`.
     """
     import numpy as np
 
@@ -249,37 +250,41 @@ def simple_pagerank_csr(
         dangling_mask = outdeg == 0.0
         inv = np.where(dangling_mask, 0.0, alpha / np.where(dangling_mask, 1.0, outdeg))
 
-        pr = np.full(n, 1.0 / n, dtype=np.float64)
-        iters, residual, residuals = 0, float("inf"), []
+        pr, iters = np.full(n, 1.0 / n, dtype=np.float64), 0
+        if checkpointer is not None and checkpointer.latest() is not None:
+            snap, rec = checkpointer.load(spark)
+            pr, iters = snap.toPandas().sort_values(ID)[VAL].to_numpy(), rec["superstep"]
+        residual, history = float("inf"), []
+        t0 = time.perf_counter()
         while True:
             dangling = float(pr[dangling_mask].sum())
             d = (alpha * dangling + 1.0 - alpha) / n
             nxt = spmv_dense(spark, csr, pr * inv) + d
             residual = float(np.abs(nxt - pr).sum())
-            residuals.append(residual)
             pr = nxt
             iters += 1
+            history.append(
+                {"round": iters, "wall_s": time.perf_counter() - t0, "residual": residual}
+            )
             if checkpointer is not None and iters % checkpoint_every == 0:
-                _save_np_ranks(spark, checkpointer, pr, iters, residual)
+                checkpointer.save(_ranks_df(spark, pr), iters, {"residual": residual})
             if (conv != 0.0 and residual <= conv) or iters >= max_iter:
                 break
+            t0 = time.perf_counter()
     finally:
         csr.unpersist()
 
-    ranks = spark.createDataFrame(
-        _np_ranks_pdf(pr), schema=f"{ID} long, {VAL} double"
-    )
+    ranks = _ranks_df(spark, pr)
     if checkpointer is not None:
         checkpointer.save(ranks, superstep=iters, metrics={"residual": residual}, final=True)
-    return PageRankResult(ranks=ranks, iterations=iters, residual=residual, residuals=residuals)
+    return PageRankResult(
+        ranks=ranks, iterations=iters, residual=residual,
+        residuals=[h["residual"] for h in history], history=history,
+    )
 
 
-def _np_ranks_pdf(pr):
+def _ranks_df(spark, pr):
     import pandas as pd
 
-    return pd.DataFrame({ID: range(len(pr)), VAL: pr})
-
-
-def _save_np_ranks(spark, checkpointer, pr, iters, residual):
-    df = spark.createDataFrame(_np_ranks_pdf(pr), schema=f"{ID} long, {VAL} double")
-    checkpointer.save(df, superstep=iters, metrics={"residual": residual})
+    pdf = pd.DataFrame({ID: range(len(pr)), VAL: pr})
+    return spark.createDataFrame(pdf, schema=f"{ID} long, {VAL} double")

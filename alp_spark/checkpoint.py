@@ -2,10 +2,18 @@
 
 North-rule requirement: iteration state (rank vector, frontier mask, label
 vector) is checkpointed **per-partition with lineage and superstep
-metrics** so any run resumes mid-iteration.
+metrics** so any run resumes mid-iteration. The rule: a checkpointer that
+already holds a committed snapshot resumes the call it is passed to (the
+loop runtime, :mod:`alp_spark.loop`, reads it once, at the start); a new
+run starts fresh. To resume run ``run_id``, pass
+``ParquetCheckpointer.attach(base, run_id)``.
+
+The checkpointer protocol: ``save(df, superstep, metrics, final)`` commits
+a snapshot; ``latest()`` is the newest committed record or ``None``;
+``load(spark)`` returns that snapshot as ``(state frame, record)``.
 
 Design: a Parquet warehouse with JSON snapshot sidecars, written by the
-loop runtime (:mod:`alp_spark.loop`) through ``save``:
+loop runtime through ``save``:
 
     {base}/{run_id}/superstep={k}/part-*.parquet      state rows
     {base}/{run_id}/_lineage/{k}.json                 snapshot metadata
@@ -96,23 +104,15 @@ class ParquetCheckpointer:
         recs = self.lineage()
         return recs[-1] if recs else None
 
-    def load(self, spark: SparkSession, superstep: int | None = None) -> tuple[DataFrame, dict]:
-        recs = self.lineage()
-        if not recs:
+    def load(self, spark: SparkSession) -> tuple[DataFrame, dict]:
+        rec = self.latest()
+        if rec is None:
             raise FileNotFoundError(f"no checkpoints under {self.run_dir}")
-        rec = recs[-1] if superstep is None else next(
-            r for r in recs if r["superstep"] == superstep
-        )
         return spark.read.parquet(rec["path"]), rec
 
     @classmethod
     def attach(cls, base_dir: str, run_id: str) -> "ParquetCheckpointer":
-        """Re-attach to an existing run for resume."""
-        ckpt = cls.__new__(cls)
-        ckpt.base_dir = base_dir
-        ckpt.run_id = run_id
-        ckpt.run_dir = os.path.join(base_dir, run_id)
-        if not os.path.isdir(os.path.join(ckpt.run_dir, "_lineage")):
+        """Re-attach to an existing run: a call passed it resumes."""
+        if not os.path.isdir(os.path.join(base_dir, run_id, "_lineage")):
             raise FileNotFoundError(f"run {run_id} has no lineage under {base_dir}")
-        return ckpt
-
+        return cls(base_dir, run_id)

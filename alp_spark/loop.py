@@ -17,6 +17,10 @@ owns:
 - **parquet checkpoints** every ``checkpoint_every`` rounds and on
   :meth:`Loop.finish`; ``_``-prefixed columns are loop-internal and not
   saved.
+- **resume**: a checkpointer that already holds a committed snapshot
+  resumes the call. ``__init__`` loads it, sets ``round`` to its
+  superstep and hands the state frame to the operator as ``resumed``,
+  which the operator starts from instead of its fresh init.
 - **the job label** ``alp.phase=<op>:<stage>:<round>`` on every job; the
   previous value is restored on exit.
 
@@ -50,8 +54,8 @@ def _release(df: DataFrame) -> None:
 class Loop:
     """Context manager for one operator call (module docstring).
 
-    ``start`` is the round a resumed run continues from; rounds, history
-    and checkpoint supersteps count on from it."""
+    ``resumed`` is the latest snapshot's state frame (``None`` for a fresh
+    run); rounds, history and supersteps count on from its superstep."""
 
     def __init__(
         self,
@@ -59,13 +63,16 @@ class Loop:
         op: str,
         checkpointer=None,
         checkpoint_every: int = 10,
-        start: int = 0,
     ):
         self.spark = spark
         self.op = op
         self.checkpointer = checkpointer
         self.checkpoint_every = checkpoint_every
-        self.round = start
+        self.round = 0
+        self.resumed: DataFrame | None = None
+        if checkpointer is not None and checkpointer.latest() is not None:
+            self.resumed, rec = checkpointer.load(spark)
+            self.round = rec["superstep"]
         self.history: list[dict] = []
         self._sc = spark.sparkContext
         # live frames by id(): invariants, checkpoints, the result's

@@ -140,7 +140,7 @@ def build_csr_blocks(
         "pid", (F.col(DST) / F.lit(width)).cast("int")
     )
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         os.makedirs(tmp_dir, exist_ok=True)  # executor-local on clusters
         pid = int(key[0])
         lo = pid * width

@@ -140,14 +140,15 @@ def pregel(
     max_rounds: int = 0,
     checkpointer=None,
     checkpoint_every: int = 10,
-    resume_state: DataFrame | None = None,
-    resume_round: int = 0,
 ) -> PregelResult:
     """Run a vertex program to termination (pregel.hpp:650-920).
 
     ``history`` holds one entry per superstep: the active census after
     it, the halt vote, the cumulative count of vertices that ran the
     program and the superstep's wall time.
+
+    Resumable: pass a checkpointer whose run holds a snapshot and the
+    run continues from that superstep's state (:mod:`alp_spark.loop`).
     """
     state_dt = _parse_datatype_string(state_type)
     msg_dt = _parse_datatype_string(msg_type)
@@ -155,17 +156,13 @@ def pregel(
     ring = alg.Semiring(add=combiner, mul=alg.left_assign, one=True)
     active, ran = F.col("active"), F.col("_ran")
 
-    resumed = resume_state is not None
-    with Loop(
-        spark, "pregel", checkpointer, checkpoint_every,
-        start=resume_round if resumed else 0,
-    ) as loop:
+    with Loop(spark, "pregel", checkpointer, checkpoint_every) as loop:
         # the superstep loop scans the edge table every round: cache it
         # ONCE in a size-derived layout (guide §2/§5) and reuse the count
         # it needed anyway
         edges, num_edges = loop.cache(edges, key=SRC)
-        if resumed:
-            init = resume_state.select(*_STATE_COLS)
+        if loop.resumed is not None:
+            init = loop.resumed.select(*_STATE_COLS)
         else:
             deg = _degrees(spark, edges, n)
             # init_use_index: state := vertex id (set<use_index>,
@@ -197,7 +194,7 @@ def pregel(
             # when EVERY vertex is active (halt-vote-only programs never
             # shrink the set) the output mask is a per-round no-op: skip it
             split = n_active < n
-            if not (resumed or loop.round > 0):
+            if loop.round == 0:
                 cur, incoming = state, msg_id_col
             else:
                 out_vec = state.select(ID, F.col("out").alias(VAL))

@@ -9,6 +9,9 @@ Single place where scale-relevant knobs live so local tests and a real
   ``eWiseLambda`` analog must be vectorized — BASELINE input_hint).
 - ``shuffle.partitions`` sized to cores locally; on a cluster this should
   be ~2-3x total cores (set via spark-submit conf).
+- Python workers import ``alp_spark`` from any working directory: the
+  package's root goes on ``PYTHONPATH``, which the JVM and its workers
+  inherit when the session starts.
 """
 
 from __future__ import annotations
@@ -27,6 +30,10 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults."""
+    root = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in map(os.path.realpath, paths):
+        os.environ["PYTHONPATH"] = os.pathsep.join([root, *paths])
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     b = (

@@ -29,11 +29,6 @@ import numpy as np
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# the mapInPandas workers import alp_spark too: they inherit PYTHONPATH
-# from the JVM, which inherits it from this process when the session starts
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 
 SEED = 77
 AVG_DEG = 24

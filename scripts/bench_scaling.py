@@ -2,20 +2,19 @@
 
 No real multi-executor cluster exists in the sandbox, so the N-vs-4N
 criterion is evidenced by running the SAME PageRank job on the SAME
-input at two parallelism levels (local[8] vs local[32]) and reporting
-throughput at both plus scaling efficiency — see BASELINE.md "Sandbox
-scaling protocol".
+input at two parallelism levels (local[1] vs local[4] on a 4-core host)
+and reporting throughput at both plus scaling efficiency — see
+BASELINE.md "Sandbox scaling protocol".
 
 Meant to be launched via spark-submit --py-files (the north rule's
 deployment form), e.g.::
 
-    spark-submit --master local[8] --py-files alp_spark.zip \
-        scripts/bench_scaling.py --cores 8 --path csr --iters 5
+    spark-submit --master local[4] --py-files alp_spark.zip \
+        scripts/bench_scaling.py --cores 4 --path csr --iters 5
 
 Prints one JSON line:
-  {"cores": 8, "path": "csr", "n": ..., "edges": ...,
-   "build_sec": ..., "superstep_sec": ..., "edges_per_sec": ...,
-   "supersteps_per_hour": ...}
+  {"cores": 4, "path": "csr", "n": ..., "edges": ..., "iters": ...,
+   "superstep_sec": ..., "edges_per_sec": ..., "supersteps_per_hour": ...}
 
 The graph is generated deterministically (seed=42) once and cached as
 parquet under --data-dir: a Zipf(1.4) out-degree power-law digraph with
@@ -35,11 +34,6 @@ import numpy as np
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
-# the mapInPandas workers import alp_spark too: they inherit PYTHONPATH
-# from the JVM, which inherits it from this process when the session starts
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
-)
 
 SEED = 42
 DEFAULT_N = 4_000_000
@@ -116,8 +110,6 @@ def main() -> None:
             spark, edges, n, conv=0.0, max_iter=iters, strategy=args.path
         )
     wall = time.monotonic() - t0
-    build_sec = 0.0  # inside the timed call
-    laps = [wall / iters] * iters
     assert res.iterations == iters
 
     per_step = wall / iters
@@ -129,12 +121,8 @@ def main() -> None:
                 "n": n,
                 "edges": int(m),
                 "iters": iters,
-                "build_sec": round(build_sec, 2),
                 "superstep_sec": round(per_step, 3),
-                "superstep_min": round(min(laps), 3),
-                "superstep_max": round(max(laps), 3),
                 "edges_per_sec": round(m / per_step, 1),
-                "edges_per_sec_best": round(m / min(laps), 1),
                 "supersteps_per_hour": round(3600.0 / per_step, 1),
             }
         )

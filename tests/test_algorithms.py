@@ -258,43 +258,6 @@ def test_ppr_uniform_teleport_equals_standard(spark):
     )
 
 
-def test_kcore_resume_equals_uninterrupted(spark, tmp_path):
-    # kill at round 2, resume from the checkpoint: identical coreness
-    # and total round count (each round's h vector is a deterministic
-    # function of the previous one, frontier or full)
-    import random
-
-    from alp_spark.algorithms.kcore import kcore_decomposition
-    from alp_spark.checkpoint import ParquetCheckpointer
-
-    rng = random.Random(11)
-    n = 50
-    und = {(i, (i + 1) % 30) for i in range(30)}
-    for _ in range(80):
-        a, b = rng.randrange(30), rng.randrange(30)
-        if a != b:
-            und.add((min(a, b), max(a, b)))
-    for i in range(30, 40):
-        und.add((i - 1, i))
-    sym = sorted({(a, b) for a, b in und} | {(b, a) for a, b in und})
-    E = edges_df(spark, sym)
-
-    full = kcore_decomposition(spark, E, n)
-    ck = ParquetCheckpointer(str(tmp_path), run_id="kcore-test")
-    kcore_decomposition(spark, E, n, checkpointer=ck, checkpoint_every=1,
-                        max_rounds=2)
-    ck2 = ParquetCheckpointer.attach(str(tmp_path), "kcore-test")
-    state, rec = ck2.load(spark, superstep=2)
-    resumed = kcore_decomposition(
-        spark, E, n, resume_state=state, resume_round=rec["superstep"]
-    )
-    got_f = {r["id"]: r["core"] for r in full.cores.collect()}
-    got_r = {r["id"]: r["core"] for r in resumed.cores.collect()}
-    assert got_f == got_r
-    assert resumed.rounds == full.rounds
-    assert all("changed" in r["metrics"] for r in ck2.lineage())
-
-
 def test_kcore_frontier_path_exact(spark, monkeypatch):
     # a zero edge gate forces frontier mode from the first eligible
     # round; coreness must match the oracle exactly, with its semi-joins

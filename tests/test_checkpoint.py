@@ -1,40 +1,13 @@
-"""Checkpoint/resume equivalence: kill at superstep k, resume, identical
-result (FIXTURES.md §5 'resume' tier; north rule resumability)."""
+"""Checkpoint lineage: per-partition rows and files plus superstep metrics
+(FIXTURES.md §5 'resume' tier; the kill-and-resume equivalence runs per
+operator in tests/test_loop.py)."""
 
 from __future__ import annotations
 
-import numpy as np
-
-from alp_spark.algorithms import connected_components, simple_pagerank
+from alp_spark.algorithms import connected_components
 from alp_spark.checkpoint import ParquetCheckpointer
 
-from .fixtures import edges_df, g2_components, g497_powerlaw
-
-
-def labels_arr(df, n):
-    out = np.zeros(n, dtype=np.int64)
-    for r in df.collect():
-        out[r["id"]] = r["state"]
-    return out
-
-
-def test_cc_resume_equals_uninterrupted(spark, tmp_path):
-    n, edges = g2_components()
-    E = edges_df(spark, edges)
-
-    full = connected_components(spark, E, n)
-
-    # interrupted run: checkpoint every round, kill after round 2
-    ck = ParquetCheckpointer(str(tmp_path), run_id="cc-test")
-    connected_components(spark, E, n, checkpointer=ck, checkpoint_every=1,
-                         max_rounds=2)
-    ck2 = ParquetCheckpointer.attach(str(tmp_path), "cc-test")
-    state, rec = ck2.load(spark, superstep=2)
-    resumed = connected_components(
-        spark, E, n, resume_state=state, resume_round=rec["superstep"]
-    )
-    np.testing.assert_array_equal(labels_arr(resumed.state, n), labels_arr(full.state, n))
-    assert resumed.rounds == full.rounds
+from .fixtures import edges_df, g2_components
 
 
 def test_lineage_records_partitions_and_metrics(spark, tmp_path):
@@ -50,23 +23,3 @@ def test_lineage_records_partitions_and_metrics(spark, tmp_path):
     assert sum(int(v) for v in recs[0]["partition_rows"].values()) == n
     assert all(p["bytes"] > 0 for p in recs[0]["partitions"])
 
-
-def test_pagerank_resume_midway(spark, tmp_path):
-    n, edges = g497_powerlaw(n=60)
-    E = edges_df(spark, edges)
-    full = simple_pagerank(spark, E, n)
-
-    ck = ParquetCheckpointer(str(tmp_path), run_id="pr-test")
-    simple_pagerank(spark, E, n, checkpointer=ck, checkpoint_every=3, max_iter=6)
-    state, rec = ParquetCheckpointer.attach(str(tmp_path), "pr-test").load(spark)
-    resumed = simple_pagerank(
-        spark, E, n, initial=state, start_iteration=rec["superstep"]
-    )
-    got = np.zeros(n)
-    want = np.zeros(n)
-    for r in resumed.ranks.collect():
-        got[r["id"]] = r["val"]
-    for r in full.ranks.collect():
-        want[r["id"]] = r["val"]
-    np.testing.assert_allclose(got, want, atol=1e-6)
-    assert resumed.iterations == full.iterations

@@ -7,7 +7,6 @@ Labels here are component MIN vertex id (hooking is min-wise)."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from alp_spark.algorithms import fastsv_components
 
@@ -77,27 +76,3 @@ def test_fastsv_powerlaw(spark):
     res = fastsv_components(spark, edges_df(spark, sym(edges)), n)
     np.testing.assert_array_equal(labels_arr(res.labels, n), uf_min_labels(n, edges))
 
-
-def test_fastsv_resume_equals_uninterrupted(spark, tmp_path):
-    from alp_spark.checkpoint import ParquetCheckpointer
-
-    n = 48
-    edges = [(i, i + 1) for i in range(n - 1)]  # path: several rounds
-    E = edges_df(spark, sym(edges))
-
-    full = fastsv_components(spark, E, n)
-
-    ck = ParquetCheckpointer(str(tmp_path), run_id="fastsv-test")
-    fastsv_components(spark, E, n, checkpointer=ck, checkpoint_every=1,
-                      max_rounds=2)
-    ck2 = ParquetCheckpointer.attach(str(tmp_path), "fastsv-test")
-    state, rec = ck2.load(spark, superstep=2)
-    resumed = fastsv_components(
-        spark, E, n, resume_state=state, resume_round=rec["superstep"]
-    )
-    np.testing.assert_array_equal(
-        labels_arr(resumed.labels, n), labels_arr(full.labels, n)
-    )
-    assert resumed.rounds == full.rounds
-    # lineage carries the per-round change census
-    assert all("changed" in r["metrics"] for r in ck2.lineage())

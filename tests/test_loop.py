@@ -1,7 +1,7 @@
 """The loop runtime (alp_spark/loop.py) across every operator that runs
 on it: no leaked persisted frames on any exit path, outputs independent
-of the shuffle partition count, a per-round ``history`` and the
-``alp.phase`` job label."""
+of the shuffle partition count, a per-round ``history``, the
+``alp.phase`` job label and resume from a killed run's checkpoints."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ from typing import Callable
 import numpy as np
 import pytest
 
+from alp_spark.checkpoint import ParquetCheckpointer
 from alp_spark.loop import PHASE, Loop, _release
 
 from .fixtures import edges_df, g497_powerlaw, g_seeded_labels, vec_df
@@ -319,6 +320,9 @@ class _FailingCheckpointer:
     def save(self, *args, **kwargs):
         raise RuntimeError("checkpoint store unavailable")
 
+    def latest(self):
+        return None
+
 
 class _LabelRecorder:
     def __init__(self, spark):
@@ -327,6 +331,22 @@ class _LabelRecorder:
 
     def save(self, *args, **kwargs):
         self.labels.append(self.sc.getLocalProperty(PHASE))
+
+    def latest(self):
+        return None
+
+
+KILL_AT = 2
+
+
+class _KilledCheckpointer(ParquetCheckpointer):
+    """The process dies right after committing superstep ``KILL_AT``: no
+    later round and no final snapshot is written."""
+
+    def save(self, df, superstep, metrics=None, final=False):
+        super().save(df, superstep, metrics, final)
+        if superstep == KILL_AT:
+            raise RuntimeError(f"killed after superstep {superstep}")
 
 
 @pytest.mark.parametrize("name", list(OPS))
@@ -391,6 +411,23 @@ def test_checkpoint_saves_run_under_the_operator_label(spark, name):
     assert rec.labels[0] == f"{op.label}:save:1"
     assert rec.labels[-1] == f"{op.label}:save:{op.rounds(res)}"
     assert spark.sparkContext.getLocalProperty(PHASE) is None
+
+
+@pytest.mark.parametrize("name", CHECKPOINTING + ["simple_pagerank_csr"])
+def test_killed_run_resumes_to_the_uninterrupted_result(spark, tmp_path, name):
+    # a checkpointer whose run holds a snapshot resumes the call from it
+    op = OPS[name]
+    full = op.run(spark)
+    base = str(tmp_path)
+    with pytest.raises(RuntimeError, match="killed after superstep"):
+        op.run(spark, checkpointer=_KilledCheckpointer(base, "run"), checkpoint_every=1)
+    res = op.run(
+        spark, checkpointer=ParquetCheckpointer.attach(base, "run"), checkpoint_every=1
+    )
+    assert res.history[0]["round"] == KILL_AT + 1
+    assert op.exact(res) == op.exact(full)
+    if op.scores is not None:
+        np.testing.assert_allclose(op.scores(res), op.scores(full), rtol=1e-12)
 
 
 def test_triangle_count_persists_only_its_counts(spark):

@@ -149,6 +149,9 @@ def test_csr_pagerank_failure_removes_block_files(spark):
         def save(self, *args, **kwargs):
             raise RuntimeError("checkpoint store unavailable")
 
+        def latest(self):
+            return None
+
     n, edges = g10_line_hub()
     E = edges_df(spark, edges)
     before = _csr_dirs()

@@ -117,38 +117,6 @@ def test_pregel_struct_state_pagerank_residual(spark, local):
         assert (got_resid < 1e-5).all()
 
 
-def test_history_records_wall_time(spark):
-    n, edges = g2_components()
-    res = connected_components(spark, edges_df(spark, edges), n)
-    assert len(res.history) == res.rounds
-    assert all(h["wall_s"] > 0 for h in res.history)
-
-
-class _FailingCheckpointer:
-    def save(self, *args, **kwargs):
-        raise RuntimeError("checkpoint store unavailable")
-
-
-def test_pregel_releases_persisted_frames(spark):
-    # the cached edge table and every superstep checkpoint are released
-    # on each exit path; only the returned state may stay persisted
-    def persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    n, edges = g2_components()
-    E = edges_df(spark, edges)
-    for kwargs in ({}, {"max_rounds": 1}):
-        before = persisted()
-        connected_components(spark, E, n, **kwargs)
-        assert persisted() <= before + 1, kwargs
-    before = persisted()
-    with pytest.raises(RuntimeError, match="checkpoint store unavailable"):
-        connected_components(
-            spark, E, n, checkpointer=_FailingCheckpointer(), checkpoint_every=1
-        )
-    assert persisted() <= before
-
-
 def test_outputs_independent_of_shuffle_partitions(spark):
     # every superstep plan shuffles: labels, scores and round counts must
     # not depend on how many partitions the shuffles use. Labels are

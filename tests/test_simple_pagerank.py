@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 
 from alp_spark.algorithms import simple_pagerank
+from alp_spark.checkpoint import ParquetCheckpointer
 
 from .fixtures import edges_df, g10_line_hub, g497_powerlaw, g_dangling
 from .oracles import simple_pagerank as oracle_pagerank
@@ -40,10 +41,14 @@ def test_pagerank_matches_oracle(spark, fixture):
     assert got.sum() == pytest.approx(1.0, abs=1e-9)  # PR mass preserved
 
 
-def test_pagerank_warm_start_converges_fast(spark):
+def test_pagerank_warm_start_converges_fast(spark, tmp_path):
+    # a finished run's checkpointer holds its converged ranks: a call
+    # passed it resumes there and stops within two more rounds
     n, edges = g10_line_hub()
     E = edges_df(spark, edges)
-    full = simple_pagerank(spark, E, n)
-    warm = simple_pagerank(spark, E, n, initial=full.ranks)
-    assert warm.iterations <= 2
+    full = simple_pagerank(spark, E, n, checkpointer=ParquetCheckpointer(str(tmp_path), "pr"))
+    warm = simple_pagerank(
+        spark, E, n, checkpointer=ParquetCheckpointer.attach(str(tmp_path), "pr")
+    )
+    assert full.iterations < warm.iterations <= full.iterations + 2
     verify(as_arr(warm.ranks, n), as_arr(full.ranks, n))
