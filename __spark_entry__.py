@@ -774,18 +774,10 @@ def q_mpv3_minplus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mpv y = A³x (mpv.hpp:94) under the (min, plus) ring on a pattern
     matrix (pattern nonzero = ring one = 0.0, so each hop propagates
     min of the neighbour values)."""
-    from alp_spark.plans.partitions import cache_sized
-
     x = spark.range(N_V).select(
         F.col("id").alias(ID), (F.col("id") % 7).cast("double").alias(VAL)
     )
-    # cache A once (each hop scans it) and materialize the hop chain so
-    # the cache can be released before returning
-    A, _ = cache_sized(spark, _edges(spark, sf_dir), key=DST)
-    y = mpv(spark, A, 3, x, alg.MIN_PLUS, frontier_nnz=N_V).localCheckpoint(
-        eager=True
-    )
-    A.unpersist()
+    y = mpv(spark, _edges(spark, sf_dir), 3, x, alg.MIN_PLUS, frontier_nnz=N_V)
     return y.select(ID, F.round(VAL, 6).alias("dist"))
 
 

@@ -23,8 +23,8 @@ Scale shape: identical to the PageRank/FastSV loop — the edge table is
 hash-partitioned by dst once and persisted, each round is one join +
 one map-side-combined bit_or aggregation (8 bytes/vertex of state, the
 cheapest state vector in the engine), and rounds are FIXED at K (no
-convergence action needed; one lazy :meth:`alp_spark.loop.Loop.lazy`
-checkpoint per round, all filled by one action at the end).
+convergence test). Each round is one eager :meth:`alp_spark.loop.Loop.step`
+that releases the round before it.
 
 Determinism: the hash is a pure function of the vertex id, bit-OR is
 commutative/associative/idempotent — results are exact-identical
@@ -98,6 +98,7 @@ def _fm_round(s: DataFrame, E: DataFrame, n: int) -> DataFrame:
 class ANFResult:
     sketches: DataFrame  # (id, sketch, est_reach)
     rounds: int
+    history: list[dict]  # one {round, wall_s} per round
 
 
 def neighborhood_function(
@@ -111,10 +112,10 @@ def neighborhood_function(
     saturation point is the web graph's EFFECTIVE DIAMETER (Palmer et
     al. KDD 2002 §4; the Kronecker/graph-500 evaluation statistic).
 
-    One propagation pass: after each bit-OR round the per-vertex FM
-    estimates are summed into a 1-row frame; the per-hop frames union
-    into the (hop, n_pairs) result and the whole computation stays ONE
-    lazy plan — no per-round action (the one-job pattern)."""
+    One propagation pass: each bit-OR round is a step whose census is
+    the integer sum of the per-vertex FM values; the (hop, n_pairs)
+    result is built from those driver-side sums and reads no
+    checkpoint."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
     with Loop(spark, "neighborhood_function") as loop:
@@ -122,29 +123,19 @@ def neighborhood_function(
         # at scale) — one E scan per hop.
         E, _ = loop.cache(edges.select(SRC, DST), key=DST)
         s = _fm_init(spark, n)
+        # sum the EXACT integer 2^R values and divide by φ once: a float
+        # sum is partition-order-sensitive at round(6) precision, an
+        # integer sum is bit-identical in any order and any engine
         hops = []
         for h in range(1, rounds + 1):
-            s = loop.lazy(_fm_round(s, E, n))
-            # sum the EXACT integer 2^R values and divide by φ once: a
-            # float sum is partition-order-sensitive at round(6)
-            # precision, an integer sum is bit-identical in any order and
-            # any engine
-            hops.append(
-                s.agg(F.sum(fm_lowzero_col(F.col("_s"))).alias("_z")).select(
-                    F.lit(h).cast("long").alias("hop"),
-                    F.round(F.col("_z").cast("double") / F.lit(FM_PHI), 6).alias(
-                        "n_pairs"
-                    ),
-                )
+            s, stats = loop.step(
+                _fm_round(s, E, n), replaces=s,
+                z=F.sum(fm_lowzero_col(F.col("_s"))),
             )
-        out = hops[0]
-        for f in hops[1:]:
-            out = out.unionByName(f)
-        # one action for the chain; the per-hop states are released with
-        # the loop
-        out, _ = loop.checkpoint(out, stage="hops")
-        loop.finish(out)
-    return out
+            hops.append((h, stats["z"]))
+    return spark.createDataFrame(hops, "hop long, _z long").select(
+        "hop", F.round(F.col("_z").cast("double") / F.lit(FM_PHI), 6).alias("n_pairs")
+    )
 
 
 def anf(
@@ -162,18 +153,11 @@ def anf(
         E, _ = loop.cache(edges.select(SRC, DST), key=DST)
         s = _fm_init(spark, n)
         for _ in range(rounds):
-            # lazy: no per-round action — the single fill below runs the
-            # whole pinned-round chain as one job, each checkpoint
-            # truncating lineage as it fills
-            s = loop.lazy(_fm_round(s, E, n))
-        # ONE action for the whole run (fills every lazy checkpoint);
-        # the loop then releases E and the intermediate rounds, and later
-        # reads serve from the final state
-        loop.fill(s)
+            s, _ = loop.step(_fm_round(s, E, n), replaces=s)
         loop.finish(s)
     out = s.select(
         ID,
         F.col("_s").alias("sketch"),
         F.round(fm_estimate_col(F.col("_s")), 6).alias("est_reach"),
     )
-    return ANFResult(sketches=out, rounds=rounds)
+    return ANFResult(sketches=out, rounds=rounds, history=loop.history)

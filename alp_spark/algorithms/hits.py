@@ -17,16 +17,18 @@ Scale shape
 Each round is two shuffle aggregations (map-side partial sums absorb
 hub skew, the reference/blas2.hpp:1259-1265 analog) plus two O(1)
 scalar norms that ride in-plan as broadcast 1-row frames — the
-allreduce shape of PageRank's residual WITHOUT the per-round driver
-action: a pinned-round run is one Spark job end to end.
+allreduce shape of PageRank's residual without a driver ``collect``.
+Each half-round is one eager checkpoint on
+:class:`alp_spark.loop.Loop`: the authority vector a ``checkpoint``
+(stage ``auth``), the hub vector the round's ``step``, each releasing
+the vector it supersedes, so a round is one Spark action per vector
+and lineage never grows past one round.
 The normalisation itself is a literal multiply folded into the next
 scan (no extra shuffle): c·(A x) = A (c·x) would even let the scalar
 ride into the next SpMV, but materialising the normalised vector keeps
 the per-round output exactly the textbook sequence the unrolled oracle
 mirrors. Vectors stay sparse (vertices with no in/out edges are
-structurally absent = 0); lineage is flattened by a lazy
-:meth:`alp_spark.loop.Loop.lazy` checkpoint per round (released after
-the one action), so the 100-TB posture is identical to
+structurally absent = 0); the 100-TB posture is identical to
 ``simple_pagerank``: edge table partitioned once, rounds bounded by the
 pinned iteration budget.
 """
@@ -50,17 +52,17 @@ class HitsResult:
     auth: DataFrame  # (id, val) — authority scores, unit 2-norm
     hubs: DataFrame  # (id, val) — hub scores, unit 2-norm
     rounds: int
+    history: list[dict]  # one {round, wall_s} per round
 
 
 def _normalize(x: DataFrame) -> DataFrame:
     """Scale x to unit 2-norm (no-op on an all-zero/empty vector).
 
     The norm rides along as a broadcast 1-row frame instead of a
-    driver ``collect()``: the whole pinned-round loop then compiles to
-    ONE lazy plan with a single action at materialisation — 2 driver
-    round-trips per round become zero (measured 5.3 s → one-job hits5
-    at bench scale). Same arithmetic as the collect form (multiply by
-    the reciprocal), so results are bit-identical."""
+    driver ``collect()``, so it runs inside the checkpoint's action
+    rather than as a driver round-trip of its own. Same arithmetic as
+    the collect form (multiply by the reciprocal), so results are
+    bit-identical."""
     nrm = x.agg(F.sqrt(F.sum(F.col(VAL) * F.col(VAL))).alias("_n"))
     scale = F.when(F.col("_n") > 0, F.lit(1.0) / F.col("_n")).otherwise(
         F.lit(0.0)
@@ -93,21 +95,21 @@ def hits(
         h = spark.range(0, n, 1, range_partitions(spark, n)).select(
             F.col("id").alias(ID), F.lit(1.0).alias(VAL)
         )
+        a = None
         for _ in range(iters):
             # frontier_nnz=n: the score vectors are ≤ n entries by
             # construction, so the driver-known size gates a STATIC
             # broadcast plan — no AQE both-sides materialization barrier
             # per SpMV (measured 5.2 s → 3.4 s on the 5-round bench run)
             # authority: a[j] = Σ_{i→j} h[i]  (join src, group dst)
-            a = loop.lazy(_normalize(vxm(h, E, alg.PLUS_TIMES, frontier_nnz=n)))
-            # hub: h[i] = Σ_{i→j} a[j]  (join dst, group src)
-            h = loop.lazy(
-                _normalize(vxm(a, E, alg.PLUS_TIMES, transpose=True, frontier_nnz=n))
+            a, _ = loop.checkpoint(
+                _normalize(vxm(h, E, alg.PLUS_TIMES, frontier_nnz=n)),
+                stage="auth", replaces=a,
             )
-        # ONE action for the whole run: filling h's checkpoint pulls
-        # every lazy checkpoint in the chain (a feeds h); the loop then
-        # releases E and every intermediate checkpoint, and later reads
-        # serve from the materialised final state
-        loop.fill(h)
+            # hub: h[i] = Σ_{i→j} a[j]  (join dst, group src)
+            h, _ = loop.step(
+                _normalize(vxm(a, E, alg.PLUS_TIMES, transpose=True, frontier_nnz=n)),
+                replaces=h,
+            )
         loop.finish(a, h)
-    return HitsResult(auth=a, hubs=h, rounds=iters)
+    return HitsResult(auth=a, hubs=h, rounds=iters, history=loop.history)

@@ -43,9 +43,10 @@ after map-side partial aggregation. The CG driver runs on
 :class:`alp_spark.loop.Loop` over ONE state frame ``(id, x, r, p)``: each
 of the three dots per iteration (r·z, p·Ap, r·r) is the observed census
 of the checkpoint that produces its operands, the last one the
-iteration's step; the V-cycle's frames are lazy checkpoints filled by
-the first and released right after it. Per-iteration driver traffic is
-the CG scalars — O(1) — exactly ALP's collectives.
+iteration's step; every smoother, restriction and correction frame of
+the V-cycle is an eager ``vcycle`` checkpoint, released once the
+iteration's ``precondition`` checkpoint has read it. Per-iteration
+driver traffic is the CG scalars — O(1) — exactly ALP's collectives.
 """
 
 from __future__ import annotations
@@ -60,8 +61,8 @@ from pyspark.sql import functions as F
 
 from ..loop import Loop
 
-#: a lazy checkpoint of the loop the V-cycle runs in (:meth:`Loop.lazy`)
-Lazy = Callable[[DataFrame], DataFrame]
+#: an eager checkpoint of the loop the V-cycle runs in (:meth:`Loop.checkpoint`)
+Checkpoint = Callable[[DataFrame], DataFrame]
 
 
 @dataclass
@@ -240,7 +241,7 @@ def _spmv(A: DataFrame, x: DataFrame, row_filter=None) -> DataFrame:
 
 
 def _rbgs_single_step(
-    level: MgLevel, x: DataFrame, r: DataFrame, color: int, lazy: Lazy
+    level: MgLevel, x: DataFrame, r: DataFrame, color: int, checkpoint: Checkpoint
 ) -> DataFrame:
     """__rbgs_single_step (red_black_gauss_seidel.hpp:24-58):
     ``x[i] = (r[i] - (A·x)[i] + x[i]·d) / d`` for i ≡ color (mod C),
@@ -249,7 +250,7 @@ def _rbgs_single_step(
     Gauss-Seidel across the color sweep."""
     C, d = level.num_colors, level.diag
     t = _spmv(level.A, x, row_filter=F.col("row") % C == color)
-    return lazy(
+    return checkpoint(
         x.join(r.select("id", F.col("val").alias("_r")), on="id")
         .join(t.select("id", F.col("val").alias("_t")), on="id", how="left")
         .select(
@@ -266,14 +267,14 @@ def _rbgs_single_step(
 
 
 def run_smoother(
-    level: MgLevel, x: DataFrame, r: DataFrame, steps: int, lazy: Lazy
+    level: MgLevel, x: DataFrame, r: DataFrame, steps: int, checkpoint: Checkpoint
 ) -> DataFrame:
     """``steps`` full RBGS rounds: forward color sweep then backward
     (red_black_gauss_seidel.hpp:109-123)."""
     C = level.num_colors
     for _ in range(steps):
         for c in list(range(C)) + list(range(C - 1, -1, -1)):
-            x = _rbgs_single_step(level, x, r, c, lazy)
+            x = _rbgs_single_step(level, x, r, c, checkpoint)
     return x
 
 
@@ -283,14 +284,14 @@ def multi_grid(
     r: DataFrame,
     presmoother_steps: int,
     postsmoother_steps: int,
-    lazy: Lazy,
+    checkpoint: Checkpoint,
 ) -> DataFrame:
     """One V-cycle (multigrid_v_cycle.hpp multi_grid:179-254) returning
     the level solution z for residual r."""
     z = _zeros(spark, level.n)
     if level.coarser is None:
-        return run_smoother(level, z, r, 1, lazy)
-    z = run_smoother(level, z, r, presmoother_steps, lazy)
+        return run_smoother(level, z, r, 1, checkpoint)
+    z = run_smoother(level, z, r, presmoother_steps, checkpoint)
     Az = _spmv(level.A, z)
     # fine residual r - A·z, dense (SpMV rows are dense here: every row
     # has a diagonal entry; coalesce guards the algebraic contract)
@@ -299,23 +300,24 @@ def multi_grid(
         .select("id", (F.col("val") - F.coalesce(F.col("_a"), F.lit(0.0))).alias("val"))
     )
     # restriction: r_coarse[cid] = fine_res[fid] (injection mxv)
-    r_coarse = lazy(
+    r_coarse = checkpoint(
         level.coarse_map.join(
             fine_res.select(F.col("id").alias("fid"), "val"), on="fid"
         ).select(F.col("cid").alias("id"), "val")
     )
     z_coarse = multi_grid(
-        spark, level.coarser, r_coarse, presmoother_steps, postsmoother_steps, lazy
+        spark, level.coarser, r_coarse, presmoother_steps, postsmoother_steps,
+        checkpoint,
     )
     # prolongation: z[fid] += z_coarse[cid] (transpose injection)
     corr = level.coarse_map.join(
         z_coarse.select(F.col("id").alias("cid"), F.col("val").alias("_c")), on="cid"
     ).select(F.col("fid").alias("id"), "_c")
-    z = lazy(
+    z = checkpoint(
         z.join(corr, on="id", how="left")
         .select("id", (F.col("val") + F.coalesce(F.col("_c"), F.lit(0.0))).alias("val"))
     )
-    return run_smoother(level, z, r, postsmoother_steps, lazy)
+    return run_smoother(level, z, r, postsmoother_steps, checkpoint)
 
 
 def hpcg(
@@ -338,9 +340,10 @@ def hpcg(
     with Loop(spark, "hpcg") as loop:
         smoothed: list[DataFrame] = []  # this round's V-cycle checkpoints
 
-        def lazy(df: DataFrame) -> DataFrame:
-            smoothed.append(loop.lazy(df))
-            return smoothed[-1]
+        def vcycle(df: DataFrame) -> DataFrame:
+            frame, _ = loop.checkpoint(df, stage="vcycle")
+            smoothed.append(frame)
+            return frame
 
         x = x0 if x0 is not None else _zeros(spark, n)
         # r = b - A·x; ONE fused state frame (id, x, r, p) from here on
@@ -360,7 +363,7 @@ def hpcg(
             if with_preconditioning:
                 r = st.select("id", F.col("r").alias("val"))
                 z = multi_grid(
-                    spark, system, r, presmoother_steps, postsmoother_steps, lazy
+                    spark, system, r, presmoother_steps, postsmoother_steps, vcycle
                 )
                 zst = st.join(z.select("id", F.col("val").alias("z")), on="id")
             else:
@@ -368,7 +371,7 @@ def hpcg(
             zst, stats = loop.checkpoint(
                 zst, stage="precondition", replaces=st, rz=F.sum(F.col("r") * F.col("z"))
             )
-            loop.release(*smoothed)  # filled into zst
+            loop.release(*smoothed)  # read into zst
             smoothed.clear()
             old, r_dot_z = r_dot_z, float(stats["rz"])
             if loop.round == 0:

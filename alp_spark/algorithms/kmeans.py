@@ -66,6 +66,7 @@ class KmeansResult:
     centroids: list[list[float]]  # k × m
     iterations: int
     converged: bool  # False ⇔ reference FAILED at max_iter
+    history: list[dict]  # one {round, wall_s} per Lloyd iteration
 
 
 def kpp_draws(n: int, k: int, seed: int) -> tuple[int, list[float]]:
@@ -121,12 +122,12 @@ def kpp_initialisation(
             ),
             n=F.count(F.lit(1)),
         )
-        n, full = stats["n"], None
+        n = stats["n"]
         if sample_cap is not None and n > sample_cap:
-            full = pts
-            pts = loop.lazy(
+            pts, _ = loop.checkpoint(
                 pts.orderBy(F.xxhash64(F.col("id"), F.lit(int(seed))), "id")
-                .limit(int(sample_cap))
+                .limit(int(sample_cap)),
+                stage="sample", replaces=pts,
             )
             n = int(sample_cap)
         first, samples = kpp_draws(n, k, seed)
@@ -141,7 +142,6 @@ def kpp_initialisation(
         )
         max_id = sel[-1]["id"]
         sel = sel[0]["id"]
-        loop.release(full)  # the collect filled the sample (no-op if None)
 
         w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, Window.currentRow)
         centroids: list[list[float]] = []
@@ -208,13 +208,12 @@ def kmeans(
         )
     )
     with Loop(spark, "kmeans") as loop:
-        # filled by the first round's collect; every round's assignment is
-        # filled by its own collect, which supersedes the previous one
-        pts = loop.lazy(
+        pts, _ = loop.checkpoint(
             points.select(
                 F.col(id_col).alias("id"),
                 F.col(vec_col).cast("array<double>").alias("vec"),
-            )
+            ),
+            stage="points",
         )
         assigned, converged = None, False
         for iters in range(1, max_iter + 1):
@@ -230,13 +229,14 @@ def kmeans(
                     ]
                 )
             )
-            prev, assigned = assigned, loop.lazy(
+            assigned, _ = loop.step(
                 pts.withColumn("_b", best).select(
                     "id",
                     "vec",
                     F.col("_b.cluster").alias("cluster"),
                     F.col("_b.dist").alias("dist"),
-                )
+                ),
+                replaces=assigned,
             )
             # ---- update: per-(cluster, dim) sums; k·m cells to the driver --
             cells = (
@@ -245,7 +245,6 @@ def kmeans(
                 .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
                 .collect()
             )
-            loop.release(prev)  # superseded (no-op in the first round)
             new_centroids = [list(c) for c in centroids]  # empty-cluster guard
             for row in cells:
                 new_centroids[row["cluster"]][row["pos"]] = row["s"] / row["n"]
@@ -260,4 +259,5 @@ def kmeans(
         centroids=centroids,
         iterations=iters,
         converged=converged,
+        history=loop.history,
     )

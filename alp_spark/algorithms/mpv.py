@@ -16,7 +16,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import algebra as alg
-from ..containers import ID, SRC, add_identity, vector_schema
+from ..containers import DST, ID, SRC, add_identity, vector_schema
+from ..loop import Loop
 from ..operators import mxv
 
 
@@ -32,14 +33,20 @@ def mpv(
     """u = Aᵏ·v under ``ring`` (mpv.hpp:94).
 
     ``frontier_nnz``: driver-known bound on nnz(u) across hops — gates
-    a static broadcast plan per hop (the vxm strategy input)."""
-    u = v
-    for _ in range(k):
-        # lazy: the caller's first action materializes every hop in one
-        # job instead of one blocking job per hop (the one-job pattern)
-        u = mxv(
-            A, u, ring, transpose=transpose, frontier_nnz=frontier_nnz
-        ).localCheckpoint(eager=False)
+    a static broadcast plan per hop (the vxm strategy input).
+
+    ``A`` is cached once, keyed by the column each hop joins on, and
+    every hop is one eager step that releases the hop before it; the
+    returned frame is the last hop's checkpoint."""
+    with Loop(spark, "mpv") as loop:
+        A, _ = loop.cache(A, key=SRC if transpose else DST)
+        u = v
+        for _ in range(k):
+            u, _ = loop.step(
+                mxv(A, u, ring, transpose=transpose, frontier_nnz=frontier_nnz),
+                replaces=u,
+            )
+        loop.finish(u)
     return u
 
 
@@ -59,13 +66,11 @@ def knn(
     """k-hop neighbourhood of ``source`` (knn.hpp:82): forward reachability
     within ≤ k hops, self included (add_identity); reference golden is the
     neighbourhood SIZE (smoketests.sh:129)."""
-    # cache A+I once (size-derived layout, guide §2): every hop scans it
-    from ..plans.partitions import cache_sized
-
-    ai, _ = cache_sized(spark, add_identity(A, spark, n), key=SRC)
     onehot = spark.createDataFrame([(source, True)], vector_schema("boolean"))
     # knn.hpp:129-135: mpv with transpose ⇒ u = (Mᵀ)ᵏ e_src, M = A+I
-    u = mpv(spark, ai, k, onehot, alg.OR_AND, transpose=True, frontier_nnz=n)
-    reached = u.where("val").localCheckpoint(eager=True)
-    ai.unpersist()
-    return KnnResult(reached=reached.select(ID, "val"), size=reached.count())
+    u = mpv(
+        spark, add_identity(A, spark, n), k, onehot, alg.OR_AND,
+        transpose=True, frontier_nnz=n,
+    )
+    reached = u.where("val").select(ID, "val")
+    return KnnResult(reached=reached, size=reached.count())

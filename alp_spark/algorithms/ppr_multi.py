@@ -17,9 +17,9 @@ so each seed's slice equals the single-source run bit for bit.
 Scale shape: the edge table shuffles ONCE (dst-partitioned, persisted);
 per round there is one join + one map-side-combined aggregation over
 S·nnz contribution rows, and the per-seed dangling masses ride in-plan
-as a broadcast S-row frame (the one-job HITS norm trick) — the whole
-pinned-round batch is ONE Spark job with zero per-round driver
-actions. Rank state is S·n rows; batch S to executor memory
+as a broadcast S-row frame (the HITS norm trick), so each round is one
+eager :meth:`alp_spark.loop.Loop.step` with no driver ``collect``; it
+releases the round before it. Rank state is S·n rows; batch S to executor memory
 (S ≈ 10-100 at 10^9 vertices) and loop batches for more seeds.
 """
 
@@ -41,6 +41,7 @@ from ..operators.blas2 import broadcast_if_fits, vxm
 class PPRMultiResult:
     ranks: DataFrame  # (seed, id, val) — dense per seed
     rounds: int
+    history: list[dict]  # one {round, wall_s} per round
 
 
 def ppr_multi(
@@ -96,7 +97,7 @@ def ppr_multi(
                 .agg(F.sum("_x").alias("_c"))
                 .select("seed", F.col(DST).alias(ID), "_c")
             )
-            state = loop.lazy(
+            state, _ = loop.step(
                 base.join(contrib, on=["seed", ID], how="left")
                 .join(broadcast_if_fits(dang, len(seeds)), on="seed", how="left")
                 .select(
@@ -110,11 +111,8 @@ def ppr_multi(
                         )
                         * is_seed
                     ).alias(VAL),
-                )
+                ),
+                replaces=state,
             )
-
-        # ONE action fills the whole lazy chain; the loop then releases
-        # the caches and the intermediate rounds
-        loop.fill(state)
         loop.finish(state)
-    return PPRMultiResult(ranks=state, rounds=rounds)
+    return PPRMultiResult(ranks=state, rounds=rounds, history=loop.history)

@@ -28,11 +28,11 @@ Faithfully reproduced conventions:
 
 Spark plan: each applied layer is ONE vxm (edge equi-join + groupBy
 sum — broadcast or shuffle per the engine's auto strategy) followed by
-pure Column bias/relu/threshold arithmetic; no Python in the loop, no
-driver actions (the whole L-layer chain is lazy, lineage bounded by a
-per-layer lazy localCheckpoint). At 100 TB the per-layer shuffle keys
-are the weight-matrix dst ids — the same partitioning every iterative
-algorithm here uses.
+pure Column bias/relu/threshold arithmetic; no Python in the loop. Each
+applied layer is one eager :meth:`alp_spark.loop.Loop.step` that
+releases the layer before it, so lineage never spans two layers. At
+100 TB the per-layer shuffle keys are the weight-matrix dst ids — the
+same partitioning every iterative algorithm here uses.
 """
 
 from __future__ import annotations
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from .. import algebra as alg
 from ..containers import ID, VAL
+from ..loop import Loop
 from ..operators import vxm
 
 
@@ -78,8 +79,12 @@ def sparse_nn_single_inference(
             v = F.least(v, F.lit(float(threshold)))  # foldl(out, θ, min)
         return vec.select(ID, v.alias(VAL))
 
-    cur = densify(vxm(in_vec, layers[0], alg.PLUS_TIMES), biases[1])
-    for i in range(1, num_layers - 1):
-        cur = activate(cur).localCheckpoint(eager=False)
-        cur = densify(vxm(cur, layers[i], alg.PLUS_TIMES), biases[i + 1])
+    with Loop(spark, "sparse_nn") as loop:
+        cur, _ = loop.step(densify(vxm(in_vec, layers[0], alg.PLUS_TIMES), biases[1]))
+        for i in range(1, num_layers - 1):
+            cur, _ = loop.step(
+                densify(vxm(activate(cur), layers[i], alg.PLUS_TIMES), biases[i + 1]),
+                replaces=cur,
+            )
+        loop.finish(cur)
     return activate(cur)

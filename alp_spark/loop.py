@@ -2,16 +2,18 @@
 
 ALP runs Pregel and every shipped algorithm over one GraphBLAS core
 (interfaces/pregel.hpp:765-804); here Pregel's superstep and every
-census loop (PageRank, FastSV, k-core, MIS, SSSP, label propagation,
-k-truss, SCC, the Krylov solvers, HPCG) run on one :class:`Loop`, which
-owns:
+iterative operator (PageRank, FastSV, k-core, MIS, SSSP, label
+propagation, k-truss, SCC, the Krylov solvers, HPCG, HITS, ANF, batched
+PPR, k-means, mpv, sparse-NN) run on one :class:`Loop`, which owns:
 
 - **invariants** (:meth:`Loop.cache`): persisted once in a size-derived
   layout and counted; unpersisted on every exit path.
 - **the step** (:meth:`Loop.step`): ONE Spark action per round — an
   eager ``localCheckpoint`` with the round's census observed on it,
-  so there is no separate stats job. The frame it ``replaces`` is
-  released once the new one is filled.
+  so there is no separate stats job. Under AQE that action runs as one
+  job per query stage. The frame it ``replaces`` is released once the
+  new one is filled. :meth:`Loop.checkpoint` is the same action for a
+  frame that is not a round.
 - **history**: one ``{round, wall_s, **census}`` entry per step;
   ``wall_s`` runs from the end of the previous step (or of the prelude).
 - **parquet checkpoints** every ``checkpoint_every`` rounds and on
@@ -25,10 +27,9 @@ owns:
   previous value is restored on exit.
 
 Frames the result reads are named with :meth:`Loop.finish`; every other
-checkpoint is released on exit, all of them on an exception. Fixed-round
-lazy chains (HITS, ANF, batched PPR, the HPCG smoother) keep their one
-action at the end: :meth:`Loop.lazy` checkpoints without an action,
-:meth:`Loop.fill` (or the operator's own action, as in k-means) runs it.
+checkpoint is released on exit, all of them on an exception. There is no
+deferred checkpoint: under AQE a non-eager ``localCheckpoint`` already
+runs every shuffle and broadcast stage of the plan when it is built.
 """
 
 from __future__ import annotations
@@ -166,19 +167,6 @@ class Loop:
             self._save(frame, stats, final=False)
         self._t0 = time.perf_counter()
         return frame, stats
-
-    def lazy(self, df: DataFrame) -> DataFrame:
-        """Lazy ``localCheckpoint`` for a fixed-round chain: no action
-        now; the chain's one :meth:`fill` materializes it."""
-        frame = df.localCheckpoint(eager=False)
-        self._frames[id(frame)] = frame
-        return frame
-
-    def fill(self, df: DataFrame) -> None:
-        """The one action of a lazy chain: counting ``df`` fills every
-        lazy checkpoint it reads."""
-        self._label("fill", self.round)
-        df.count()
 
     def release(self, *frames: DataFrame) -> None:
         """Release checkpoints or invariants of this loop now."""

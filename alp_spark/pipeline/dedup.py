@@ -79,13 +79,23 @@ def shingle_sets(docs: DataFrame, shingle_k: int = 2) -> DataFrame:
     at 100 TB the map-side text work is the dominant scan cost, so
     running it once instead of three times is a direct guide-§2.3 cut
     (shuffle/scan fewer bytes; identical expressions, identical
-    results)."""
+    results). ``_sh`` carries the column metadata ``{"shingle_k": k}``,
+    which the consumers check against their own ``shingle_k``."""
     return docs.select(
         "doc_id",
         F.array_distinct(
             shingles_col(tokens_col(F.col("text")), shingle_k)
-        ).alias("_sh"),
+        ).alias("_sh", metadata={"shingle_k": shingle_k}),
     )
+
+
+def _check_shingles(shingles: DataFrame, shingle_k: int) -> None:
+    """Reject a ``shingles`` frame built with another ``shingle_k``."""
+    tag = shingles.schema["_sh"].metadata.get("shingle_k")
+    if tag != shingle_k:
+        raise ValueError(
+            f"shingles were built with shingle_k={tag}, not {shingle_k}"
+        )
 
 
 def minhash_signatures(
@@ -116,6 +126,7 @@ def minhash_signatures(
     pass is shared with the verify stage instead of recomputed.
     """
     if shingles is not None:
+        _check_shingles(shingles, shingle_k)
         src, sh = shingles, F.col("_sh")
     else:
         src = docs
@@ -227,8 +238,13 @@ def ngram_jaccard_pairs(
     pairs sharing at least one shingle are compared (hot shingles make
     this quadratic — safe only at small scale / after blocking).
     Returns (doc_a, doc_b, jaccard) with jaccard ≥ threshold, rounded
-    to 1e-6 for engine portability.
+    to 1e-6 for engine portability. ``shingles`` (a :func:`shingle_sets`
+    frame of the same ``shingle_k``) needs ``candidates``.
     """
+    if shingles is not None:
+        if candidates is None:
+            raise ValueError("shingles needs candidates (the all-pairs path ignores it)")
+        _check_shingles(shingles, shingle_k)
     if candidates is not None:
         # candidate-scoped verify WITHOUT the shingle explode: attach
         # each side's distinct-shingle SET (one array per doc) via two

@@ -121,7 +121,7 @@ def random_walks(
         out = out.unionByName(f)
     # NOTE: the union branches re-derive the step-t state lazily, and
     # actions over `out` (count, column-pruned scans) exploit that —
-    # measured: inserting per-step localCheckpoints + a final eager one
+    # measured: inserting per-step local checkpoints + a final eager one
     # costs ~25% wall (interleaved A/B, sf0.1) because the checkpoint
     # materialises full rows the action may never need. nbr/deg stay
     # cached while `out` is alive for the same reason.

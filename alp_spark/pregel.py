@@ -41,7 +41,7 @@ Per-superstep Spark cost: ONE SQL execution — one
 :meth:`alp_spark.loop.Loop.step`, the runtime every census loop shares.
 It runs the message groupBy (shuffle; map-side partial agg absorbs hub
 in-degree skew), the state ⋈ messages join with the vertex program fused
-into its projection, and an eager ``localCheckpoint`` that truncates
+into its projection, and an eager local checkpoint that truncates
 lineage. The halt vote, active census and program-row count ride on that
 same action as ``observe`` metrics, so there is no separate stats job.
 The loop runtime also releases the previous superstep's checkpoint,

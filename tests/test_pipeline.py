@@ -283,6 +283,35 @@ def test_shared_shingle_pass_is_equivalent(docs):
         shs.unpersist()
 
 
+def test_shingles_of_another_k_are_rejected(docs):
+    # a shingle_sets frame carries its k; a consumer asked for another k
+    # must not silently fold over the wrong shingles
+    from alp_spark.pipeline import shingle_sets
+
+    shs = shingle_sets(docs, shingle_k=3)
+    with pytest.raises(ValueError, match="shingle_k=3"):
+        minhash_signatures(docs, num_hashes=8, shingle_k=2, shingles=shs)
+    cands = docs.select(F.col("doc_id").alias("doc_a")).crossJoin(
+        docs.select(F.col("doc_id").alias("doc_b"))
+    )
+    with pytest.raises(ValueError, match="shingle_k=3"):
+        ngram_jaccard_pairs(docs, shingle_k=2, candidates=cands, shingles=shs)
+    # an untagged frame is not a shingle_sets frame of any k
+    untagged = shs.select("doc_id", F.col("_sh").alias("_sh", metadata={}))
+    with pytest.raises(ValueError, match="shingle_k=None"):
+        minhash_signatures(docs, num_hashes=8, shingle_k=3, shingles=untagged)
+
+
+def test_shingles_without_candidates_are_rejected(docs):
+    # the all-pairs path recomputes its shingles: a supplied frame would
+    # be ignored, so the call fails instead
+    from alp_spark.pipeline import shingle_sets
+
+    shs = shingle_sets(docs, shingle_k=2)
+    with pytest.raises(ValueError, match="needs candidates"):
+        ngram_jaccard_pairs(docs, shingle_k=2, shingles=shs)
+
+
 def test_candidate_scoped_jaccard_matches_unscoped(docs, spark):
     # candidate-scoped intersection must equal the all-pairs result
     # restricted to the candidate set
