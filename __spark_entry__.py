@@ -319,7 +319,7 @@ def q_out_degree_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     hd = hot_keys(e, SRC, threshold=50)
     u = salted_vxm(
         ones, e, alg.PLUS_FIRST, hot_src=hs, hot_dst=hd, n_salts=8,
-        transpose=True,
+        transpose=True, hot_nnz=N_V,  # hot keys are vertex ids
     )
     return u.select(ID, F.col(VAL).cast("long").alias("degree"))
 

@@ -43,7 +43,7 @@ from ..containers import DST, ID, SRC
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits
 from ..plans.partitions import range_partitions
-from .mis import PRIO_MOD, PRIO_MULT
+from .mis import PRIO_MOD, hash32
 
 #: golden-ratio salt so h(0) ≠ 0 for almost all ids (h == 0 is still
 #: guarded: it maps to the 2^32 "impossibly rare" bit).
@@ -56,7 +56,7 @@ FM_PHI = 0.77351
 def fm_init_col(id_col: Column) -> Column:
     """One-bit FM sketch of a vertex id: ``h & -h`` (the lowest set
     bit's VALUE, i.e. 2^ρ(h)) of the salted multiplicative hash."""
-    h = (id_col * F.lit(PRIO_MULT) + F.lit(HASH_SALT)) % F.lit(PRIO_MOD)
+    h = hash32(id_col, HASH_SALT)
     return F.when(h == 0, F.lit(PRIO_MOD)).otherwise(
         h.bitwiseAND(-h)
     )

@@ -67,7 +67,7 @@ def _normalize(x: DataFrame) -> DataFrame:
     scale = F.when(F.col("_n") > 0, F.lit(1.0) / F.col("_n")).otherwise(
         F.lit(0.0)
     )
-    return x.crossJoin(F.broadcast(nrm)).select(
+    return x.crossJoin(F.broadcast(nrm)).select(  # bound: one row
         ID, (F.col(VAL) * scale).alias(VAL)
     )
 

@@ -156,7 +156,7 @@ def kpp_initialisation(
                 break
             # selected_distances (latest centroid) + min_distances fold;
             # range := Σ min_distances (kmeans.hpp:142-143)
-            mdf, stats = loop.checkpoint(
+            mdf, stats = loop.step(
                 mdf.select(
                     "id",
                     "vec",

@@ -45,10 +45,21 @@ PRIO_MOD = 2**32
 UNDECIDED, IN_MIS, OUT = 0, 1, 2
 
 
+def hash32(id_col: Column, salt: int = 0) -> Column:
+    """``(id·PRIO_MULT + salt) mod 2^32`` for ids ≥ 0 in BIGINT math that
+    cannot overflow under ANSI for any id: only the id's low 32 bits
+    matter mod 2^32, and they are multiplied as two 16-bit halves, so
+    every partial product stays below 2^49."""
+    lo = id_col.bitwiseAND(F.lit(PRIO_MOD - 1))
+    hi16, lo16 = F.shiftright(lo, 16), lo.bitwiseAND(F.lit(0xFFFF))
+    m = F.lit(PRIO_MULT)
+    prod = (hi16 * m) % F.lit(2**16) * F.lit(2**16) + lo16 * m
+    return (prod + F.lit(salt)) % F.lit(PRIO_MOD)
+
+
 def priority_col(id_col: Column) -> Column:
-    """Deterministic distinct priority of a vertex id (BIGINT math —
-    ids up to 2^31 stay far below 2^63 overflow)."""
-    return (id_col * F.lit(PRIO_MULT)) % F.lit(PRIO_MOD)
+    """Deterministic distinct priority of a vertex id."""
+    return hash32(id_col)
 
 
 @dataclass

@@ -159,7 +159,7 @@ def bowtie_classes(
             .select("scc")
         )
         core, _ = loop.checkpoint(
-            labels.join(F.broadcast(core_lbl), on="scc", how="left_semi").select(ID),
+            labels.join(F.broadcast(core_lbl), on="scc", how="left_semi").select(ID),  # bound: one row
             stage="core",
         )
         fwd = reach_set(spark, edges, core, forward=True)

@@ -17,11 +17,17 @@ driver-side loop over DataFrame jobs:
     residual  = Σ|pr' - pr|        (dot under (add, abs_diff), :433-437)
     stop when residual ≤ conv or iter == max
 
-Scale design: the only per-iteration shuffles are the vxm groupBy(dst)
-(map-side partial aggregation absorbs hub in-degree skew) and one id-join.
-Each iteration is one :meth:`alp_spark.loop.Loop.step`: one action that
-checkpoints ``pr`` and observes the residual AND the *next* iteration's
-dangling mass (the initial mass rides on the initial checkpoint).
+Scale design: the loop invariants ride in the checkpointed state
+``(id, val, _inv[, _tele])``: ``inv`` (null on dangling rows) and the
+teleport share are joined once, into the initial checkpoint, as ALP
+computes ``inv`` once (simple_pagerank.hpp:241-249). So the only
+per-iteration joins are the vxm's (its groupBy(dst) is the one shuffle;
+map-side partial aggregation absorbs hub in-degree skew) and
+``pr ⋈ new``. Each iteration is one :meth:`alp_spark.loop.Loop.step`:
+one action that checkpoints the state and observes the residual AND the
+*next* iteration's dangling mass (the initial mass rides on the initial
+checkpoint). Snapshots keep ``(id, val)`` only (``_`` columns are not
+saved), so a resumed run re-joins the invariants in its init checkpoint.
 """
 
 from __future__ import annotations
@@ -121,63 +127,50 @@ def simple_pagerank(
         # the prelude row-sum uses the same strategy gate as the loop: the
         # dense ones vector broadcasts when n fits, so the cached edge
         # table is never shuffled for the degree pass either
-        inv, _ = loop.cache(
-            vxm(ones, edges, row_ring, transpose=True, strategy=strategy)
-            .select(F.col(ID), (F.lit(alpha) / F.col(VAL)).alias("inv")),
-            resize=False,
-        )
-        has_out = broadcast_if_fits(
-            inv.select(ID, F.lit(True).alias("_has_out")), n
+        inv = vxm(ones, edges, row_ring, transpose=True, strategy=strategy).select(
+            F.col(ID), (F.lit(alpha) / F.col(VAL)).alias("_inv")
         )
 
-        tele = None
-        if teleport is not None:
+        if teleport is None:
+            state = set_dense(spark, n, 1.0 / n)
+        else:
             # densify to all n rows (non-seed vertices still RECEIVE link
-            # mass, so the iterate must stay dense) and pin the plan
-            tele, _ = loop.cache(
+            # mass, so the iterate must stay dense); pr0 = v
+            state = (
                 set_dense(spark, n, 0.0)
                 .join(teleport.select(ID, F.col(VAL).alias("_t")), on=ID, how="left")
-                .select(ID, F.coalesce(F.col("_t"), F.lit(0.0)).alias("_tele")),
-                resize=False,
+                .select(ID, F.coalesce(F.col("_t"), F.lit(0.0)).alias("_tele"))
+                .withColumn(VAL, F.col("_tele"))
             )
-
         if loop.resumed is not None:
-            pr = loop.resumed.select(ID, VAL)
-        elif tele is not None:
-            pr = tele.select(ID, F.col("_tele").alias(VAL))  # pr0 = v
-        else:
-            pr = set_dense(spark, n, 1.0 / n)
-        # dangling mass: Σ pr over ids absent from inv
-        dangling_col = F.sum(F.when(F.col("_has_out").isNull(), F.col(VAL)))
-        pr, stats = loop.checkpoint(
-            pr.join(has_out, on=ID, how="left"), dangling=dangling_col
-        )
+            state = state.drop(VAL).join(loop.resumed.select(ID, VAL), on=ID)
+        # the invariants join the state ONCE: _inv is null on dangling rows
+        state = state.join(broadcast_if_fits(inv, n), on=ID, how="left")
+        dangling_col = F.sum(F.when(F.col("_inv").isNull(), F.col(VAL)))
+        pr, stats = loop.checkpoint(state, dangling=dangling_col)
+        carried = [c for c in ("_inv", "_tele") if c in pr.columns]
 
         residual = float("inf")
         while True:
             dangling = float(stats["dangling"] or 0.0)
-            if tele is None:
+            if teleport is None:
                 add = F.lit((alpha * dangling + 1.0 - alpha) / n)
             else:
                 # personalized: the same scalar mass lands ∝ teleport value
                 add = F.lit(alpha * dangling + 1.0 - alpha) * F.col("_tele")
 
-            # scaled = pr ⊗ inv (intersection); new = scaled·L (sparse);
-            # next = coalesce(new, 0) + teleport share, carried with the
-            # old value for the residual
-            scaled = (
-                pr.join(broadcast_if_fits(inv, n), on=ID, how="inner")
-                .select(F.col(ID), (F.col(VAL) * F.col("inv")).alias(VAL))
+            # scaled = pr ⊗ inv (dangling rows drop out); new = scaled·L
+            # (sparse); next = coalesce(new, 0) + teleport share, carried
+            # with the old value for the residual and the invariants
+            scaled = pr.where(F.col("_inv").isNotNull()).select(
+                ID, (F.col(VAL) * F.col("_inv")).alias(VAL)
             )
             new = vxm(scaled, edges, alg.PLUS_TIMES, strategy=strategy)
-            base = pr.select(ID, VAL).alias("p").join(new.alias("m"), on=ID, how="left")
-            if tele is not None:
-                base = base.join(tele, on=ID)
-            nxt = base.join(has_out, on=ID, how="left").select(
+            nxt = pr.alias("p").join(new.alias("m"), on=ID, how="left").select(
                 F.col(ID),
                 (F.coalesce(F.col(f"m.{VAL}"), F.lit(0.0)) + add).alias(VAL),
                 F.col(f"p.{VAL}").alias("_old"),
-                F.col("_has_out"),
+                *carried,
             )
             # ONE action: checkpoint + L1 residual + next iteration's
             # dangling mass

@@ -38,8 +38,8 @@ import os
 import time
 import uuid
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class ParquetCheckpointer:
@@ -62,16 +62,19 @@ class ParquetCheckpointer:
     ) -> None:
         path = os.path.join(self.run_dir, f"superstep={superstep}")
         df.write.mode("overwrite").parquet(path)
-        # per-partition lineage: file listing + row counts per output file
+        # per-partition lineage: file listing + row counts per output file,
+        # read from the footers just written (no second job over df); a
+        # part-NNNNN file holds partition NNNNN's rows
         files = sorted(
             f for f in os.listdir(path) if f.endswith(".parquet") and not f.startswith("_")
         )
         per_partition = [
             {"file": f, "bytes": os.path.getsize(os.path.join(path, f))} for f in files
         ]
-        counts = (
-            df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-        )
+        rows: dict[str, int] = {}
+        for f in files:
+            pid = str(int(f.split("-")[1]))
+            rows[pid] = rows.get(pid, 0) + pq.read_metadata(os.path.join(path, f)).num_rows
         record = {
             "run_id": self.run_id,
             "superstep": superstep,
@@ -80,7 +83,7 @@ class ParquetCheckpointer:
             "metrics": metrics or {},
             "schema": df.schema.jsonValue(),
             "partitions": per_partition,
-            "partition_rows": {str(r["pid"]): r["count"] for r in counts},
+            "partition_rows": rows,
             "path": path,
         }
         tmp = os.path.join(self.run_dir, "_lineage", f".{superstep}.json.tmp")

@@ -99,7 +99,7 @@ def vxm(
 
     vv = v.select(F.col(ID).alias(join_key), F.col(VAL).alias("_v"))
     if strategy == "broadcast":
-        vv = F.broadcast(vv)
+        vv = F.broadcast(vv)  # bound: the caller's gate (DENSE_BROADCAST_NNZ)
     elif strategy == "auto":
         vv = broadcast_if_fits(vv, frontier_nnz)
 

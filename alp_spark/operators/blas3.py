@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..algebra import BinOp, Monoid, Semiring
 from ..containers import DST, ID, SRC, VAL
+from .blas2 import broadcast_if_fits
 
 
 def mxm(
@@ -64,12 +65,15 @@ def mxm(
     )
 
 
-def outer(u: DataFrame, v: DataFrame, mul_op: BinOp) -> DataFrame:
+def outer(
+    u: DataFrame, v: DataFrame, mul_op: BinOp, v_nnz: int | None = None
+) -> DataFrame:
     """Rank-1 outer product A[i,j] = u[i] ⊗ v[j] (reference/blas3.hpp:805).
-    Broadcasts the right side — only sane when v is small."""
+    Broadcasts the right side when its driver-known row count ``v_nnz``
+    passes the broadcast gate; otherwise the planner picks the join."""
     uu = u.select(F.col("id").alias(SRC), F.col(VAL).alias("_u"))
     vv = v.select(F.col("id").alias(DST), F.col(VAL).alias("_v"))
-    return uu.crossJoin(F.broadcast(vv)).select(
+    return uu.crossJoin(broadcast_if_fits(vv, v_nnz)).select(
         SRC, DST, mul_op(F.col("_u"), F.col("_v")).alias(VAL)
     )
 

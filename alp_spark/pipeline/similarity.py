@@ -7,7 +7,8 @@ a bucket-co-partitioned join. Dot products stay JVM-side via
 to double in array order so the DuckDB oracle (list_dot_product over
 DOUBLE[]) reproduces sums bit-for-bit.
 
-Scale notes: the query side is broadcast (top-k search is Q ≪ N); the
+Scale notes: the query side is broadcast through the one gate, sized by
+``n_queries`` (top-k search is Q ≪ N); the
 candidate scan is embarrassingly parallel over the embedding table's
 partitions; per-partition top-k happens inside the window's partial
 sort before the final k-row shuffle.
@@ -20,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from ..operators.blas2 import broadcast_if_fits
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -51,10 +54,11 @@ def cosine_topk(
     Returns (query_id, rank, neighbor_id, cos) — cos rounded to 1e-5,
     rank by unrounded cosine with neighbor-id tiebreak.
     """
-    q = F.broadcast(
+    q = broadcast_if_fits(
         emb.where(F.col(id_col) < n_queries).select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-        )
+        ),
+        n_queries,
     )
     c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
     scored = (
@@ -331,14 +335,15 @@ def ivf_topk(
         1,
         n_probe,
     )
-    q = F.broadcast(
+    q = broadcast_if_fits(
         emb.where(F.col(id_col) < n_queries)
         .select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("_qv"),
             F.explode(probes).alias("_p"),
         )
-        .select("query_id", "_qv", F.col("_p.cluster").alias("cluster"))
+        .select("query_id", "_qv", F.col("_p.cluster").alias("cluster")),
+        n_queries * n_probe,
     )
     scored = (
         q.join(cells, on="cluster")
@@ -382,10 +387,11 @@ def lsh_ann_topk(
     bucketed = emb.select(
         F.col(id_col), F.col(vec_col), srp_bucket(F.col(vec_col), dim, n_planes, seed).alias("_bkt")
     )
-    q = F.broadcast(
+    q = broadcast_if_fits(
         bucketed.where(F.col(id_col) < n_queries).select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"), "_bkt"
-        )
+        ),
+        n_queries,
     )
     c = bucketed.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"), "_bkt"

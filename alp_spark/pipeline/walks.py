@@ -21,10 +21,9 @@ steps reshuffle only the walk-state frame, which is O(#walks). Hot
 the join against the UNIQUE-keyed (src, idx) side is the AQE
 skew-split-friendly lookup shape, same as the FastSV grandparent join.
 
-Hash note: ``start * PRIO_MULT + t * STEP_SALT`` stays below 2^63 for
-start ids up to ~3.4e9; for a full 10^12-page id space switch the hash
-to xxhash64 on both sides (the oracle uses the same arithmetic, so the
-swap is one expression in each engine).
+Hash note: the walk index ``(start * PRIO_MULT + t * STEP_SALT + seed)
+mod 2^32`` is :func:`~alp_spark.algorithms.mis.hash32`, which cannot
+overflow for any BIGINT start id (the oracle uses the same arithmetic).
 """
 
 from __future__ import annotations
@@ -34,7 +33,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..algorithms.mis import PRIO_MOD, PRIO_MULT
+from ..algorithms.mis import hash32
 from ..containers import DST, SRC
 from ..plans.partitions import cache_sized
 
@@ -88,11 +87,7 @@ def random_walks(
         )
     ]
     for t in range(1, length + 1):
-        idx = (
-            F.col("start") * F.lit(PRIO_MULT)
-            + F.lit(t) * F.lit(STEP_SALT)
-            + F.lit(seed)
-        ) % F.lit(PRIO_MOD)
+        idx = hash32(F.col("start"), t * STEP_SALT + seed)
         # pick the neighbour index FIRST, then equi-join on (cur, idx):
         # the hash join probes one ranked row per walk instead of
         # exploding deg(cur) rows and filtering

@@ -21,7 +21,9 @@ millions of times the median. Two skew points in the vxm plan
 
 Hot keys are detected once per graph by degree (``hot_keys``) — the
 analog of ALP precomputing degrees in the Pregel constructor
-(interfaces/pregel.hpp:380-416) — and broadcast.
+(interfaces/pregel.hpp:380-416) — and broadcast through the one gate
+(:func:`~alp_spark.operators.blas2.broadcast_if_fits`) when the caller
+knows their size.
 """
 
 from __future__ import annotations
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..algebra import Semiring
 from ..containers import DST, ID, SRC, VAL
+from ..operators.blas2 import broadcast_if_fits
 
 #: degree above which a vertex counts as a hub (tune per graph; at web
 #: scale ~32 partitions' worth of a balanced share is a good default)
@@ -58,6 +61,7 @@ def salted_vxm(
     hot_dst: DataFrame | None = None,
     n_salts: int = 16,
     transpose: bool = False,
+    hot_nnz: int | None = None,
 ) -> DataFrame:
     """u[j] = ⊕_i v[i] ⊗ A[i,j] with explicit two-sided salting.
 
@@ -66,8 +70,10 @@ def salted_vxm(
     makes Spark's partial aggregation correct).
 
     ``hot_src`` / ``hot_dst``: (id) DataFrames of hub vertices (from
-    :func:`hot_keys`), broadcast into the plan. ``None`` disables that
-    side's salting.
+    :func:`hot_keys`). ``None`` disables that side's salting.
+    ``hot_nnz``: driver-known bound on each hot set's rows (at most
+    |E|/threshold, and at most the vertex count); the broadcast gate
+    hints them at or below its threshold, and AQE decides when ``None``.
     """
     join_key, group_key = (DST, SRC) if transpose else (SRC, DST)
 
@@ -80,7 +86,7 @@ def salted_vxm(
     vv = v.select(F.col(ID).alias(join_key), F.col(VAL).alias("_v"))
 
     if hot_src is not None:
-        hot = F.broadcast(hot_src.select(F.col(ID).alias(join_key)))
+        hot = broadcast_if_fits(hot_src.select(F.col(ID).alias(join_key)), hot_nnz)
         # replicate hot vector rows across all salts; cold rows keep salt 0
         vv = (
             vv.join(hot.withColumn("_hot", F.lit(True)), on=join_key, how="left")
@@ -104,7 +110,7 @@ def salted_vxm(
     contrib = semiring.mul(F.col("_v"), a_val)
 
     if hot_dst is not None:
-        hotd = F.broadcast(hot_dst.select(F.col(ID).alias(group_key)))
+        hotd = broadcast_if_fits(hot_dst.select(F.col(ID).alias(group_key)), hot_nnz)
         dst_salt = F.pmod(F.xxhash64(F.col(SRC), F.col(DST)), F.lit(n_salts))
         with_salt = joined.join(
             hotd.withColumn("_dhot", F.lit(True)), on=group_key, how="left"

@@ -74,7 +74,7 @@ def assign_contiguous_ids(urls: DataFrame, col: str = "url") -> DataFrame:
         offsets, "_pid int, _off long, _mn long"
     )
     result = (
-        distinct.join(F.broadcast(off), on="_pid")
+        distinct.join(F.broadcast(off), on="_pid")  # bound: one row per range partition
         .select(
             col,
             (F.col("_off") + (F.col("_mid") - F.col("_mn"))).alias("id"),

@@ -94,7 +94,7 @@ def main() -> None:
     results["agg_salted"] = timed(
         lambda: salted_vxm(
             v, E, alg.PLUS_TIMES, hot_src=hs, hot_dst=hd,
-            n_salts=args.n_salts,
+            n_salts=args.n_salts, hot_nnz=n_hot,
         )
     )
     # transpose vxm joins on dst — the hub keys land on the JOIN, the
@@ -112,7 +112,7 @@ def main() -> None:
     results["join_salted"] = timed(
         lambda: salted_vxm(
             v, E, alg.PLUS_TIMES, hot_src=hs, hot_dst=hd,
-            n_salts=args.n_salts, transpose=True,
+            n_salts=args.n_salts, transpose=True, hot_nnz=n_hot,
         )
     )
     print(

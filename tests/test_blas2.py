@@ -112,3 +112,23 @@ def test_broadcast_and_shuffle_agree(spark, g10):
     ub = vxm(v, E, alg.PLUS_TIMES, strategy="broadcast")
     us = vxm(v, E, alg.PLUS_TIMES, strategy="shuffle")
     np.testing.assert_allclose(as_arr(ub, n), as_arr(us, n), rtol=1e-12)
+
+
+def test_every_broadcast_hint_has_an_absolute_bound():
+    # a raw F.broadcast is allowed only inside the one gate, or on a line
+    # that states its bound in a ``# bound:`` comment
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "alp_spark"
+    unbounded = []
+    for path in sorted(root.rglob("*.py")):
+        src = path.read_text()
+        gate = set()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "broadcast_if_fits":
+                gate.update(range(node.lineno, node.end_lineno + 1))
+        for no, line in enumerate(src.splitlines(), 1):
+            if "F.broadcast(" in line and no not in gate and "# bound:" not in line:
+                unbounded.append(f"{path.relative_to(root)}:{no}")
+    assert not unbounded

@@ -259,6 +259,26 @@ def test_random_walks_stop_at_sinks(spark):
     assert got == [(0, 0, 0), (0, 1, 1), (1, 0, 1)]
 
 
+def test_id_hashes_do_not_overflow_on_any_bigint_id(spark):
+    # ANSI mode raises ARITHMETIC_OVERFLOW on a wrapped BIGINT product:
+    # the hashes multiply in halves, and keep (id·PRIO_MULT + salt) mod 2^32
+    from alp_spark.algorithms.anf import fm_init_col
+    from alp_spark.algorithms.mis import hash32, priority_col
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    ids = [0, 2**32 - 1, 3_500_000_000, 2**40, 2**63 - 1]
+    walk_salt = 3 * STEP_SALT + 7
+    row = spark.range(1).select(
+        *[priority_col(F.lit(v)).alias(f"p{i}") for i, v in enumerate(ids)],
+        *[fm_init_col(F.lit(v)).alias(f"f{i}") for i, v in enumerate(ids)],
+        *[hash32(F.lit(v), walk_salt).alias(f"w{i}") for i, v in enumerate(ids)],
+    ).collect()[0]
+    for i, v in enumerate(ids):
+        assert row[f"p{i}"] == v * PRIO_MULT % PRIO_MOD
+        assert row[f"f{i}"] == _fm_init(v)
+        assert row[f"w{i}"] == (v * PRIO_MULT + walk_salt) % PRIO_MOD
+
+
 # --------------------------------------------------------------------------
 # batched multi-source PPR
 # --------------------------------------------------------------------------

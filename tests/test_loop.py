@@ -5,9 +5,14 @@ of the shuffle partition count, a per-round ``history``, the
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 import time
 from collections import Counter
 from dataclasses import dataclass
+from pathlib import Path
 from typing import Callable
 
 import numpy as np
@@ -18,6 +23,7 @@ from alp_spark.loop import PHASE, Loop, _release
 
 from .fixtures import edges_df, g497_powerlaw, g_seeded_labels, vec_df
 
+ROOT = Path(__file__).resolve().parents[1]
 N = 60
 
 
@@ -44,6 +50,13 @@ def _pagerank(spark, **kw):
     from alp_spark.algorithms import simple_pagerank
 
     return simple_pagerank(spark, edges_df(spark, DIRECTED), N, **kw)
+
+
+def _pagerank_teleport(spark, **kw):
+    from alp_spark.algorithms import simple_pagerank
+
+    tele = vec_df(spark, [(0, 0.25), (3, 0.75)])
+    return simple_pagerank(spark, edges_df(spark, DIRECTED), N, teleport=tele, **kw)
 
 
 def _pagerank_csr(spark, **kw):
@@ -246,6 +259,10 @@ OPS = {
     ),
     "simple_pagerank": Op(
         _pagerank, 1, lambda r: r.iterations, lambda r: _scores(r.ranks),
+        bound="max_iter", rounds=lambda r: r.iterations, label="simple_pagerank",
+    ),
+    "simple_pagerank_teleport": Op(
+        _pagerank_teleport, 1, lambda r: r.iterations, lambda r: _scores(r.ranks),
         bound="max_iter", rounds=lambda r: r.iterations, label="simple_pagerank",
     ),
     # a driver numpy loop, not on Loop: held to the same release and
@@ -479,3 +496,46 @@ def test_step_wall_counts_mid_round_checkpoints(spark):
         f, _ = loop.checkpoint(df, stage="mid", replaces=f)
         loop.step(df, replaces=f)
     assert loop.history[1]["wall_s"] >= 0.3
+
+
+# k-means++ seeding in a fresh session with an uncompressed event log
+KPP_SCRIPT = f"""
+import sys
+sys.path.insert(0, {str(ROOT)!r})
+from alp_spark.algorithms.kmeans import kpp_initialisation
+from alp_spark.session import get_spark
+
+spark = get_spark(master="local[1]", shuffle_partitions=1, extra_conf={{
+    "spark.eventLog.enabled": "true", "spark.eventLog.dir": sys.argv[1],
+    "spark.eventLog.compress": "false",
+}})
+pts = spark.createDataFrame(
+    [(i, [(i * 7 % 13) / 4.0, (i * 5 % 11) / 4.0]) for i in range(40)],
+    "id long, vec array<double>",
+)
+kpp_initialisation(spark, pts, k=4, seed=7)
+spark.stop()
+"""
+
+
+def test_kpp_draws_fold_into_distinct_rounds(tmp_path):
+    # each centroid draw is a step of kpp's Loop: its checkpoint and the
+    # draw's own jobs carry that round's label
+    log = tmp_path / "events"
+    log.mkdir()
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", KPP_SCRIPT, str(log)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    jobs = Counter()
+    for f in log.rglob("events_*"):  # Spark 4.1 rolls the log into events_<k>_<app>
+        for line in f.read_text().splitlines():
+            ev = json.loads(line)
+            if ev.get("Event") == "SparkListenerJobStart":
+                jobs[ev["Properties"].get(PHASE)] += 1
+    draws = {l: c for l, c in jobs.items() if l and l.startswith("kpp:kpp:")}
+    # k - 1 = 3 draws; each is a checkpoint plus the draw's collect
+    assert sorted(draws) == ["kpp:kpp:1", "kpp:kpp:2", "kpp:kpp:3"]
+    assert all(c >= 2 for c in draws.values())

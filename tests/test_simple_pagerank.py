@@ -11,7 +11,7 @@ import pytest
 from alp_spark.algorithms import simple_pagerank
 from alp_spark.checkpoint import ParquetCheckpointer
 
-from .fixtures import edges_df, g10_line_hub, g497_powerlaw, g_dangling
+from .fixtures import edges_df, g10_line_hub, g497_powerlaw, g_dangling, vec_df
 from .oracles import simple_pagerank as oracle_pagerank
 
 
@@ -52,3 +52,29 @@ def test_pagerank_warm_start_converges_fast(spark, tmp_path):
     )
     assert full.iterations < warm.iterations <= full.iterations + 2
     verify(as_arr(warm.ranks, n), as_arr(full.ranks, n))
+
+
+def _joins(df) -> int:
+    """Join nodes in ``df``'s analyzed logical plan."""
+    tree = df._jdf.queryExecution().analyzed().treeString()
+    return sum(1 for line in tree.splitlines() if line.lstrip(" :+-").startswith("Join "))
+
+
+@pytest.mark.parametrize("personalized", [False, True])
+def test_round_frame_joins_only_the_vxm_output(spark, monkeypatch, personalized):
+    # inv and the teleport share ride in the checkpointed state, so a
+    # round joins the edges inside vxm and the vxm output onto pr: nothing else
+    from alp_spark.loop import Loop
+
+    rounds = []
+    step = Loop.step
+
+    def spy(self, df, *args, **kwargs):
+        rounds.append(_joins(df))
+        return step(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(Loop, "step", spy)
+    n, edges = g_dangling()
+    tele = vec_df(spark, [(0, 0.5), (n - 1, 0.5)]) if personalized else None
+    res = simple_pagerank(spark, edges_df(spark, edges), n, max_iter=3, teleport=tele)
+    assert rounds == [2] * res.iterations
