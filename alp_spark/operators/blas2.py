@@ -75,7 +75,10 @@ def vxm(
     ``accum``: existing u to ⊕-fold the product into (the reference's
     in-place accumulation u = u ⊕ vA). ``transpose`` swaps src/dst
     (descriptors.hpp:71). ``strategy``: 'broadcast' | 'shuffle' | 'auto'
-    with ``frontier_nnz`` as the auto-mode cost input. ``out_mask_nnz``:
+    with ``frontier_nnz`` as the auto-mode cost input; an explicit
+    'broadcast' hints ``v`` unconditionally, so bounding its size is the
+    caller's contract (``simple_pagerank``'s 'auto' checks
+    ``DENSE_BROADCAST_NNZ``). ``out_mask_nnz``:
     driver-known size of ``out_mask`` — at or below the broadcast
     threshold the mask semi-join broadcasts the mask so the edge table
     is never shuffled for the pruning step (the reference picks the
@@ -99,7 +102,7 @@ def vxm(
 
     vv = v.select(F.col(ID).alias(join_key), F.col(VAL).alias("_v"))
     if strategy == "broadcast":
-        vv = F.broadcast(vv)  # bound: the caller's gate (DENSE_BROADCAST_NNZ)
+        vv = F.broadcast(vv)  # bound: the caller's; only 'auto' is gated here
     elif strategy == "auto":
         vv = broadcast_if_fits(vv, frontier_nnz)
 

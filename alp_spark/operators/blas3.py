@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from ..algebra import BinOp, Monoid, Semiring
 from ..containers import DST, ID, SRC, VAL
-from .blas2 import broadcast_if_fits
 
 
 def mxm(
@@ -65,15 +64,13 @@ def mxm(
     )
 
 
-def outer(
-    u: DataFrame, v: DataFrame, mul_op: BinOp, v_nnz: int | None = None
-) -> DataFrame:
+def outer(u: DataFrame, v: DataFrame, mul_op: BinOp) -> DataFrame:
     """Rank-1 outer product A[i,j] = u[i] ⊗ v[j] (reference/blas3.hpp:805).
-    Broadcasts the right side when its driver-known row count ``v_nnz``
-    passes the broadcast gate; otherwise the planner picks the join."""
+    No broadcast hint: the planner picks the cross join from the sides'
+    size statistics."""
     uu = u.select(F.col("id").alias(SRC), F.col(VAL).alias("_u"))
     vv = v.select(F.col("id").alias(DST), F.col(VAL).alias("_v"))
-    return uu.crossJoin(broadcast_if_fits(vv, v_nnz)).select(
+    return uu.crossJoin(vv).select(
         SRC, DST, mul_op(F.col("_u"), F.col("_v")).alias(VAL)
     )
 

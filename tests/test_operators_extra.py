@@ -96,12 +96,10 @@ def test_matrix_zip_and_set(spark):
     assert out == {(3, 5): 0.0, (4, 6): 8.0}
 
 
-@pytest.mark.parametrize("v_nnz", [None, 2])
-def test_outer_product(spark, v_nnz):
-    # the right side is broadcast only through the gate, when its size is known
+def test_outer_product(spark):
     u = vec_df(spark, [(0, 2.0), (3, 5.0)])
     v = vec_df(spark, [(1, 3.0), (2, 7.0)])
-    got = {(r[SRC], r[DST]): r[VAL] for r in outer(u, v, alg.mul, v_nnz).collect()}
+    got = {(r[SRC], r[DST]): r[VAL] for r in outer(u, v, alg.mul).collect()}
     assert got == {(0, 1): 6.0, (0, 2): 14.0, (3, 1): 15.0, (3, 2): 35.0}
 
 

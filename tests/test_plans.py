@@ -58,9 +58,13 @@ def test_salted_vxm_matches_plain(spark, hub_graph, ring):
     hot_d = hot_keys(E, "dst", threshold=100)
     hot_s = hot_keys(E, "src", threshold=100)
     plain = _vec(vxm(v, E, ring, strategy="shuffle"))
-    salted = _vec(
-        salted_vxm(v, E, ring, hot_src=hot_s, hot_dst=hot_d, n_salts=8)
+    salted_df = salted_vxm(
+        v, E, ring, hot_src=hot_s, hot_dst=hot_d, n_salts=8, hot_nnz=n
     )
+    # both hot sets are under the gate's threshold, so both are broadcast
+    plan = salted_df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") >= 2
+    salted = _vec(salted_df)
     assert set(plain) == set(salted)
     for k in plain:
         assert plain[k] == pytest.approx(salted[k], rel=1e-12)
