@@ -176,16 +176,6 @@ def argmax_op(x: Column, y: Column) -> Column:  # ops.hpp:600
     return F.greatest(x, y)
 
 
-def argmin_agg(idx: Column, val: Column) -> Column:
-    """Index of the minimum value in a group (min_by; idx NOT the
-    tiebreak — use pair_agg for determinism on ties)."""
-    return F.min_by(idx, val)
-
-
-def argmax_agg(idx: Column, val: Column) -> Column:
-    return F.max_by(idx, val)
-
-
 def pair(val: Column, idx: Column) -> Column:
     """Build the (val, idx) operand argmin/argmax reduce over."""
     return F.struct(val.alias("val"), idx.alias("idx"))
@@ -194,14 +184,12 @@ def pair(val: Column, idx: Column) -> Column:
 # --- standard monoids --------------------------------------------------------
 
 PLUS = Monoid(op=add, agg=F.sum, identity=0.0)
-PLUS_LONG = Monoid(op=add, agg=F.sum, identity=0)
 TIMES = Monoid(op=mul, agg=F.product, identity=1.0)
 MIN = Monoid(op=min_, agg=F.min, identity=math.inf)
 MAX = Monoid(op=max_, agg=F.max, identity=-math.inf)
 MIN_LONG = Monoid(op=min_, agg=F.min, identity=(1 << 62))
 MAX_LONG = Monoid(op=max_, agg=F.max, identity=-(1 << 62))
 LOR = Monoid(op=logical_or, agg=lambda c: F.max(c.cast("boolean")), identity=False)
-LAND = Monoid(op=logical_and, agg=lambda c: F.min(c.cast("boolean")), identity=True)
 ANY = Monoid(op=any_or, agg=lambda c: F.first(c, ignorenulls=True), identity=None)
 # argmin/argmax monoids reduce struct(val, idx) pairs; the identity pair
 # is a Column, not a python literal — use lit_identity(). The identity's
@@ -221,19 +209,9 @@ PLUS_TIMES = Semiring(add=PLUS, mul=mul, one=1.0)
 # (simple_pagerank.hpp:210-215; interfaces/pregel.hpp:381-386): a pattern
 # matrix contributes the *vector* value (or 1) per nonzero.
 PLUS_FIRST = Semiring(add=PLUS, mul=left_assign, one=1.0)
-PLUS_SECOND = Semiring(add=PLUS, mul=right_assign, one=1.0)
 
 # (or, and) boolean reachability (knn.hpp:88-92)
 OR_AND = Semiring(add=LOR, mul=logical_and, one=True)
 
 # (min, plus) shortest path (examples/sp.cpp:104-107)
 MIN_PLUS = Semiring(add=MIN, mul=add, one=0.0)
-
-# Pregel broadcast rings (Op, left_assign_if) — the message value is copied
-# along each edge then ⊕-combined at the destination
-# (interfaces/pregel.hpp:714-721). With a pattern edge table the ⊗ is just
-# "take the message", so mul=left_assign.
-MAX_FIRST = Semiring(add=MAX, mul=left_assign, one=True)  # CC max-label ring
-MAX_FIRST_LONG = Semiring(add=MAX_LONG, mul=left_assign, one=True)
-MIN_FIRST_LONG = Semiring(add=MIN_LONG, mul=left_assign, one=True)
-PLUS_FIRST_D = PLUS_FIRST  # alias: Pregel PageRank ⊕=(add,0) ring

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from ..containers import DST, ID, SRC
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits
-from ..plans.partitions import range_partitions
+from ..plans.partitions import vertex_ids
 from .mis import PRIO_MOD, hash32
 
 #: golden-ratio salt so h(0) ≠ 0 for almost all ids (h == 0 is still
@@ -74,9 +74,7 @@ def fm_estimate_col(sketch: Column) -> Column:
 
 def _fm_init(spark: SparkSession, n: int) -> DataFrame:
     """(id, _s): every vertex's one-bit FM sketch."""
-    return spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), fm_init_col(F.col("id")).alias("_s")
-    )
+    return vertex_ids(spark, n).select(ID, fm_init_col(F.col(ID)).alias("_s"))
 
 
 def _fm_round(s: DataFrame, E: DataFrame, n: int) -> DataFrame:

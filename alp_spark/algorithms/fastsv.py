@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from ..containers import DST, ID, SRC
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits
-from ..plans.partitions import range_partitions
+from ..plans.partitions import vertex_ids
 
 
 @dataclass
@@ -90,7 +90,7 @@ def fastsv_components(
             base = (
                 vertices.select(F.col(vertices.columns[0]).alias("id"))
                 if vertices is not None
-                else spark.range(0, n, 1, range_partitions(spark, n))
+                else vertex_ids(spark, n)
             )
             f = base.select(F.col("id").alias(ID), F.col("id").alias("f"))
         # driver-known vector size gates STATIC broadcast plans for the

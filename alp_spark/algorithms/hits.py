@@ -44,7 +44,7 @@ from .. import algebra as alg
 from ..containers import ID, SRC, DST, VAL
 from ..loop import Loop
 from ..operators.blas2 import vxm
-from ..plans.partitions import range_partitions
+from ..plans.partitions import vertex_ids
 
 
 @dataclass
@@ -92,9 +92,7 @@ def hits(
         # round — empty-task overhead compounds, so partitions follow the
         # measured row count (conf-capped; unchanged at scale).
         E, _ = loop.cache(edges.select(SRC, DST))
-        h = spark.range(0, n, 1, range_partitions(spark, n)).select(
-            F.col("id").alias(ID), F.lit(1.0).alias(VAL)
-        )
+        h = vertex_ids(spark, n).select(ID, F.lit(1.0).alias(VAL))
         a = None
         for _ in range(iters):
             # frontier_nnz=n: the score vectors are ≤ n entries by

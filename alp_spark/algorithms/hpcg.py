@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..loop import Loop
+from ..plans.partitions import vertex_ids
 
 #: an eager checkpoint of the loop the V-cycle runs in (:meth:`Loop.checkpoint`)
 Checkpoint = Callable[[DataFrame], DataFrame]
@@ -134,6 +135,8 @@ def build_stencil_matrix(
             for o in offsets
         ]
     )
+    # layout: stencil rows (one per matrix row, each exploded to its
+    # halo's nonzeros), not a per-vertex state vector
     base = spark.range(n).select(
         F.col("id").alias("row"),
         *[c.alias(f"c{d}") for d, c in enumerate(_coords(F.col("id"), sizes))],
@@ -174,6 +177,8 @@ def build_coarse_map(
     for d, c in enumerate(coords):
         fid = fid + c * F.lit(steps[d]) * F.lit(stride)
         stride *= fine_sizes[d]
+    # layout: coarse-map rows (one per coarse point), not a per-vertex
+    # state vector
     return spark.range(nc).select(F.col("id").alias("cid"), fid.alias("fid"))
 
 
@@ -224,7 +229,7 @@ def build_hpcg_system(
 
 
 def _zeros(spark: SparkSession, n: int) -> DataFrame:
-    return spark.range(n).select("id", F.lit(0.0).alias("val"))
+    return vertex_ids(spark, n).select("id", F.lit(0.0).alias("val"))
 
 
 def _spmv(A: DataFrame, x: DataFrame, row_filter=None) -> DataFrame:

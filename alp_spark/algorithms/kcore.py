@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..containers import DST, ID, SRC
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits
-from ..plans.partitions import range_partitions
+from ..plans.partitions import vertex_ids
 
 #: minimum symmetric edge count before frontier mode engages (measured
 #: at its use in :func:`kcore_decomposition`)
@@ -89,8 +89,7 @@ def kcore_decomposition(
                 F.count("*").alias("h")
             )
             h = (
-                spark.range(0, n, 1, range_partitions(spark, n))
-                .select(F.col("id").alias(ID))
+                vertex_ids(spark, n)
                 .join(deg, on=ID, how="left")
                 .select(ID, F.coalesce("h", F.lit(0)).alias("h"))
             )

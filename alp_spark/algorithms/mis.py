@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from ..containers import DST, ID, SRC
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits
-from ..plans.partitions import range_partitions
+from ..plans.partitions import vertex_ids
 
 #: Knuth multiplicative hash constant; odd → bijective mod 2^32.
 PRIO_MULT = 2654435761
@@ -91,9 +91,9 @@ def maximal_independent_set(
         E, _ = loop.cache(sym_edges.select(SRC, DST), key=DST)
 
         st, _ = loop.checkpoint(
-            spark.range(0, n, 1, range_partitions(spark, n)).select(
-                F.col("id").alias(ID),
-                priority_col(F.col("id")).alias("_p"),
+            vertex_ids(spark, n).select(
+                ID,
+                priority_col(F.col(ID)).alias("_p"),
                 F.lit(UNDECIDED).alias("_st"),
             )
         )

@@ -35,6 +35,7 @@ from .. import algebra as alg
 from ..containers import DST, ID, SRC, VAL, set_dense
 from ..loop import Loop
 from ..operators.blas2 import broadcast_if_fits, vxm
+from ..plans.partitions import vertex_ids
 
 
 @dataclass
@@ -73,7 +74,7 @@ def ppr_multi(
         )
         seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
         base, _ = loop.cache(
-            seeds_df.crossJoin(spark.range(n).select(F.col("id").alias(ID))),
+            seeds_df.crossJoin(vertex_ids(spark, n)),
             resize=False,
         )
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..containers import DST, ID, SRC
 from ..loop import Loop, _release
+from ..plans.partitions import vertex_ids
 
 
 @dataclass
@@ -165,8 +166,7 @@ def bowtie_classes(
         fwd = reach_set(spark, edges, core, forward=True)
         bwd = reach_set(spark, edges, core, forward=False)
         classes, _ = loop.checkpoint(
-            spark.range(n)
-            .select(F.col("id").alias(ID))
+            vertex_ids(spark, n)
             .join(core.select(ID, F.lit(True).alias("_c")), on=ID, how="left")
             .join(bwd.select(ID, F.lit(True).alias("_in")), on=ID, how="left")
             .join(fwd.select(ID, F.lit(True).alias("_out")), on=ID, how="left")
@@ -208,7 +208,7 @@ def strongly_connected_components(
     with Loop(spark, "scc") as loop:
         Eact, _ = loop.cache(edges.select(SRC, DST), key=DST)
         active, stats = loop.checkpoint(
-            spark.range(n).select(F.col("id").alias(ID)), stage="active", n=count
+            vertex_ids(spark, n), stage="active", n=count
         )
 
         outer = 0
@@ -283,7 +283,11 @@ def strongly_connected_components(
 
         # one frame for the result: the assigned batches are released
         # with the loop
-        union = parts[0] if parts else spark.range(0).select(ID, F.col(ID).alias("scc"))
+        union = (
+            parts[0]
+            if parts
+            else vertex_ids(spark, 0).select(ID, F.col(ID).alias("scc"))
+        )
         for p in parts[1:]:
             union = union.unionByName(p)
         labels, _ = loop.checkpoint(union, stage="labels")

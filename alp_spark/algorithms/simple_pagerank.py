@@ -201,7 +201,6 @@ def simple_pagerank_csr(
     alpha: float = 0.85,
     conv: float = 1e-7,
     max_iter: int = 1000,
-    n_partitions: int | None = None,
     checkpointer=None,
     checkpoint_every: int = 5,
 ) -> PageRankResult:
@@ -229,7 +228,7 @@ def simple_pagerank_csr(
     if not 0 < alpha < 1 or max_iter <= 0:
         raise ValueError("alpha must be in (0,1), max_iter > 0")
 
-    csr = build_csr_blocks(spark, edges, n, n_partitions=n_partitions)
+    csr = build_csr_blocks(spark, edges, n)
     try:
         # out-degrees (row sums of the pattern matrix) in one aggregation
         deg_pdf = (

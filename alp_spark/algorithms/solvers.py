@@ -39,6 +39,7 @@ from .. import algebra as alg
 from ..containers import ID, VAL, set_dense
 from ..loop import Loop
 from ..operators import mxv
+from ..plans.partitions import vertex_ids
 
 
 @dataclass
@@ -314,7 +315,7 @@ def conjugate_gradient_complex(
     with Loop(spark, "conjugate_gradient_complex") as loop:
         A, _ = loop.cache(A, key="dst")
 
-        ids = spark.range(n).select(F.col("id").alias(ID))
+        ids = vertex_ids(spark, n)
         st = ids.join(
             b.select(ID, F.col("re").alias("_br"), F.col("im").alias("_bi")),
             on=ID, how="left",

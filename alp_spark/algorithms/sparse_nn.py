@@ -44,6 +44,7 @@ from .. import algebra as alg
 from ..containers import ID, VAL
 from ..loop import Loop
 from ..operators import vxm
+from ..plans.partitions import vertex_ids
 
 
 def sparse_nn_single_inference(
@@ -65,7 +66,7 @@ def sparse_nn_single_inference(
         # 1-layer call is out-of-bounds UB there — reject it loudly here
         raise ValueError("reference convention needs >= 2 layers")
 
-    ids = spark.range(n).select(F.col("id").alias(ID))
+    ids = vertex_ids(spark, n)
 
     def densify(vec: DataFrame, bias: float) -> DataFrame:
         return ids.join(vec, on=ID, how="left").select(

@@ -80,21 +80,9 @@ def set_dense(spark: SparkSession, n: int, value: object) -> DataFrame:
     entries. ``spark.range`` is a parallel, shuffle-free source; the
     partition count is size-derived (guide §2 — n rows of (id,val) need
     parallelism proportional to n, not the core count)."""
-    from .plans.partitions import range_partitions
+    from .plans.partitions import vertex_ids
 
-    return spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), F.lit(value).alias(VAL)
-    )
-
-
-def set_use_index(spark: SparkSession, n: int) -> DataFrame:
-    """set<use_index> (descriptors.hpp:167): value := own index — the
-    vertex-ID init of Pregel CC (pregel_connected_components.hpp:136)."""
-    from .plans.partitions import range_partitions
-
-    return spark.range(0, n, 1, range_partitions(spark, n)).select(
-        F.col("id").alias(ID), F.col("id").alias(VAL)
-    )
+    return vertex_ids(spark, n).select(ID, F.lit(value).alias(VAL))
 
 
 def set_masked(
@@ -137,7 +125,9 @@ def transpose(A: DataFrame) -> DataFrame:
 def add_identity(A: DataFrame, spark: SparkSession, n: int) -> DataFrame:
     """add_identity descriptor (descriptors.hpp:159, used by knn.hpp:129-135):
     treat A as A + I — union the diagonal onto the edge table."""
-    diag = spark.range(n).select(F.col("id").alias(SRC), F.col("id").alias(DST))
+    from .plans.partitions import vertex_ids
+
+    diag = vertex_ids(spark, n).select(F.col(ID).alias(SRC), F.col(ID).alias(DST))
     if VAL in A.columns:
         diag = diag.withColumn(VAL, F.lit(1).cast(A.schema[VAL].dataType))
     return A.unionByName(diag).dropDuplicates([SRC, DST])

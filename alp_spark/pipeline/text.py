@@ -187,12 +187,6 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return agg.select("doc_id", bits.alias("simhash"))
 
 
-def simhash_hamming(a: Column, b: Column, nbits: int = 32) -> Column:
-    """Hamming distance between two '0'/'1' simhash strings."""
-    pairs = F.arrays_zip(F.split(a, ""), F.split(b, ""))
-    return F.size(F.filter(pairs, lambda p: p["0"] != p["1"]))
-
-
 #: BPE-ish pre-tokenizer: letter runs, digit runs, punctuation runs —
 #: deliberately lookahead-free so the Java-regex plan and the RE2/DuckDB
 #: oracle match byte-for-byte (GPT-2's pre-tokenizer needs lookahead,

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..algorithms.mis import hash32
 from ..containers import DST, SRC
-from ..plans.partitions import cache_sized
+from ..plans.partitions import cache_sized, vertex_ids
 
 #: per-step salt (odd, coprime with the modulus).
 STEP_SALT = 40503
@@ -62,9 +62,10 @@ def random_walks(
     if length < 0:
         raise ValueError("length must be >= 0")
     w = Window.partitionBy(SRC).orderBy(DST)
-    # the window exec already hash-partitions by src, so no extra
-    # repartition(SRC) exchange (guide §2.4); the persisted layout is
-    # size-derived (guide §2) and conf-capped — unchanged at scale
+    # the window exec hash-partitions by src into the conf-sized count;
+    # cache_sized(key=SRC) then adds a second repartition(SRC) exchange
+    # to reach the size-derived, conf-capped layout (guide §2). Sizing
+    # the edges before the window would drop that exchange.
     nbr, _ = cache_sized(
         spark,
         edges.select(SRC, DST).select(
@@ -75,7 +76,7 @@ def random_walks(
     deg = nbr.groupBy(SRC).agg(F.count("*").alias("_d")).persist()
 
     if starts is None:
-        starts = spark.range(n).select(F.col("id"))
+        starts = vertex_ids(spark, n)
     state = starts.select(
         F.col("id").alias("start"), F.col("id").alias("cur")
     )

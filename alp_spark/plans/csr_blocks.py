@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..containers import DST, SRC
+from .partitions import partitions_for
 
 _META_SCHEMA = "pid int, chunk int, lo long, width int, n_rows long, path string"
 
@@ -124,12 +125,10 @@ def build_csr_blocks(
     # per-superstep collect volume stays ≈ n*8 bytes regardless of how
     # many chunks exist
     m = edges.count()
-    # default parallelism is size-derived (guide §2): small graphs get
-    # few, larger chunks (per-task overhead dominates below ~250k edges
-    # per chunk); large graphs keep the full configured parallelism
-    P = n_partitions or max(
-        1, min(spark.sparkContext.defaultParallelism, -(-m // 250_000))
-    )
+    # the partition count follows the packed chunk bytes (int32 src +
+    # int32 dstoff per edge) under the one sizing rule: small graphs get
+    # few, larger chunks; large graphs keep the configured parallelism
+    P = n_partitions or partitions_for(spark, 8 * m)
     n_pids = max(P, -(-m // DEFAULT_TARGET_EDGES))
     width = -(-n // n_pids)  # ceil
     src_dtype = "int32" if n < 2**31 else "int64"

@@ -67,7 +67,7 @@ from . import algebra as alg
 from .containers import DST, ID, SRC, VAL
 from .loop import Loop
 from .operators import vxm
-from .plans.partitions import range_partitions
+from .plans.partitions import vertex_ids
 
 
 @dataclass
@@ -114,8 +114,7 @@ def _degrees(spark: SparkSession, edges: DataFrame, n: int) -> DataFrame:
     out = edges.groupBy(F.col(SRC).alias(ID)).agg(F.count("*").alias("outdegree"))
     inn = edges.groupBy(F.col(DST).alias(ID)).agg(F.count("*").alias("indegree"))
     return (
-        spark.range(0, n, 1, range_partitions(spark, n))
-        .select(F.col("id").alias(ID))
+        vertex_ids(spark, n)
         .join(out, on=ID, how="left")
         .join(inn, on=ID, how="left")
         .select(

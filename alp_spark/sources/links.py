@@ -30,17 +30,11 @@ def extract_edges(pages: DataFrame) -> DataFrame:
     )
 
 
-def build_edge_table(
-    pages: DataFrame,
-    id_map: DataFrame | None = None,
-    n_buckets: int | None = None,
-    drop_self_loops: bool = True,
-) -> tuple[DataFrame, DataFrame]:
-    """Full ingest: returns (edges(src,dst), id_map(url,id))."""
-    if id_map is None:
-        id_map = assign_contiguous_ids(pages.select("url"))
-    id_map = id_map.persist()
-
+def build_edge_table(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Full ingest: returns (edges(src,dst), id_map(url,id)), self-loops
+    dropped. ``id_map`` is :func:`assign_contiguous_ids`' persisted
+    frame."""
+    id_map = assign_contiguous_ids(pages.select("url"))
     raw = extract_edges(pages)
     src_ids = id_map.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
     dst_ids = id_map.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
@@ -48,10 +42,7 @@ def build_edge_table(
         raw.join(src_ids, on="src_url")
         .join(dst_ids, on="dst_url")
         .select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
     )
-    if drop_self_loops:
-        edges = edges.where(F.col("src") != F.col("dst"))
-    edges = edges.dropDuplicates(["src", "dst"])
-    if n_buckets:
-        edges = edges.repartition(n_buckets, "src")
     return edges, id_map

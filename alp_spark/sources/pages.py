@@ -71,6 +71,8 @@ def synthesize_pages(
     links = edges.groupBy(F.col("src").alias("page_id")).agg(
         F.sort_array(F.collect_list("dst")).alias("out")
     )
+    # layout: Spark's default parallelism — the per-row html rendering
+    # below is CPU-bound and needs every core, not a size-derived count
     base = spark.range(n).select(F.col("id").alias("page_id"))
     if partitions:
         base = base.repartition(partitions, "page_id")

@@ -1,5 +1,5 @@
 """Scalar-operator / monoid semantics pinned by unit tests:
-argmin/argmax (ops.hpp:573/600 → struct least/greatest + min_by/max_by),
+argmin/argmax (ops.hpp:573/600 → struct least/greatest),
 the TIMES monoid product aggregate over zeros/negatives, and the
 vector⊙scalar eWiseApply overloads (base/blas1.hpp overload family)."""
 
@@ -33,16 +33,6 @@ def test_times_monoid_handles_zero_and_negative(spark):
 def test_times_monoid_identity_on_empty(spark):
     x = vec_df(spark, [(0, 5.0)]).where(F.col(ID) < 0)
     assert fold_scalar(x, alg.TIMES) == 1.0
-
-
-def test_argmin_argmax_aggregates(spark):
-    x = vec_df(spark, [(0, 3.0), (1, -1.0), (2, 7.0), (3, -1.0)])
-    row = x.agg(
-        alg.argmin_agg(F.col(ID), F.col(VAL)).alias("amin"),
-        alg.argmax_agg(F.col(ID), F.col(VAL)).alias("amax"),
-    ).collect()[0]
-    assert row["amin"] in (1, 3)  # min_by does not pin the tie
-    assert row["amax"] == 2
 
 
 def test_argmin_argmax_pair_monoid_deterministic_ties(spark):

@@ -8,7 +8,7 @@ import math
 import pytest
 
 from alp_spark import algebra as alg
-from alp_spark.containers import set_dense, set_use_index
+from alp_spark.containers import set_dense
 from alp_spark.operators import (
     apply_mask,
     dot,
@@ -19,6 +19,7 @@ from alp_spark.operators import (
     unzip_vector,
     zip_vectors,
 )
+from alp_spark.plans.partitions import partitions_for, vertex_ids
 
 from .fixtures import MASK10, V_DENSE10, V_SPARSE10, vec_df
 
@@ -87,8 +88,22 @@ def test_dot_standard_and_generalised(spark):
 def test_set_dense_and_use_index(spark):
     d = set_dense(spark, 5, 0.25)
     assert as_dict(d) == {i: 0.25 for i in range(5)}
-    u = set_use_index(spark, 4)
-    assert as_dict(u) == {i: i for i in range(4)}
+    # the use-index seed (descriptors.hpp:167): value := own index
+    assert [r.id for r in vertex_ids(spark, 4).collect()] == [0, 1, 2, 3]
+    # one rule: ⌈8n / 2 MiB⌉ partitions (262,144 ids each), capped at
+    # shuffle.partitions
+    # n = 0: the rule gives 1, but Spark runs an empty range as an RDD
+    # of 0 partitions whatever count it is given
+    assert partitions_for(spark, 0) == 1
+    for n, p in [(1, 1), (262_144, 1), (262_145, 2)]:
+        assert vertex_ids(spark, n).rdd.getNumPartitions() == p
+    conf = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        assert vertex_ids(spark, 10**6).rdd.getNumPartitions() == 2
+    finally:
+        spark.conf.set(conf, old)
 
 
 def test_fold_vector_union(spark):

@@ -132,3 +132,58 @@ def test_every_broadcast_hint_has_an_absolute_bound():
             if "F.broadcast(" in line and no not in gate and "# bound:" not in line:
                 unbounded.append(f"{path.relative_to(root)}:{no}")
     assert not unbounded
+
+
+def test_one_partition_sizing_rule():
+    # the parallelism settings are read only by the one sizing rule
+    # (plans/partitions.py; session.py may set them), and every
+    # spark.range outside vertex_ids states why it keeps another layout
+    # in a ``# layout:`` comment on its line or directly above it
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "alp_spark"
+    keys = ("spark.sql.shuffle.partitions", "spark.default.parallelism")
+    stray = []
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        src = path.read_text()
+        lines = src.splitlines()
+        nodes = list(ast.walk(ast.parse(src)))
+        seeds, sets = set(), set()
+        for node in nodes:
+            if isinstance(node, ast.FunctionDef) and node.name == "vertex_ids":
+                seeds.update(range(node.lineno, node.end_lineno + 1))
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("config", "set")
+                and node.args
+            ):
+                sets.add(id(node.args[0]))
+        if rel != "plans/partitions.py":
+            if "defaultParallelism" in src:
+                stray.append(f"{rel}: defaultParallelism")
+            stray += [
+                f"{rel}:{node.lineno}: {node.value}"
+                for node in nodes
+                if isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and any(k in node.value for k in keys)
+                and id(node) not in sets
+            ]
+        for node in nodes:
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "range"
+                and ast.unparse(node.func.value).endswith("spark")
+                and node.lineno not in seeds
+            ):
+                continue
+            top = node.lineno - 1
+            while top >= 1 and lines[top - 1].strip().startswith("#"):
+                top -= 1
+            if not any("# layout:" in line for line in lines[top : node.lineno]):
+                stray.append(f"{rel}:{node.lineno}: spark.range")
+    assert not stray
