@@ -504,7 +504,13 @@ def q_fastsv_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Masked SpGEMM triangles (degree-oriented wedge join)."""
+    from alp_spark.loop import _release
+
     res = triangle_count(_sym_edges(spark, sf_dir))
+    # only the total is read: drop the per-vertex checkpoint the result
+    # keeps for other callers (ROADMAP direction 3 folds this into the
+    # one release path for results)
+    _release(res.per_vertex)
     return spark.createDataFrame([(res.total,)], "triangles long")
 
 

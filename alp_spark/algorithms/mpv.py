@@ -16,7 +16,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import algebra as alg
-from ..containers import DST, ID, SRC, add_identity, vector_schema
+from ..containers import DST, ID, SRC, add_identity, set_element
 from ..loop import Loop
 from ..operators import mxv
 
@@ -66,7 +66,7 @@ def knn(
     """k-hop neighbourhood of ``source`` (knn.hpp:82): forward reachability
     within ≤ k hops, self included (add_identity); reference golden is the
     neighbourhood SIZE (smoketests.sh:129)."""
-    onehot = spark.createDataFrame([(source, True)], vector_schema("boolean"))
+    onehot = set_element(spark, source, True)
     # knn.hpp:129-135: mpv with transpose ⇒ u = (Mᵀ)ᵏ e_src, M = A+I
     u = mpv(
         spark, add_identity(A, spark, n), k, onehot, alg.OR_AND,

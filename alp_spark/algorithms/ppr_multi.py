@@ -72,7 +72,10 @@ def ppr_multi(
             .select(ID, (F.lit(alpha) / F.col(VAL)).alias("_inv")),
             resize=False,
         )
-        seeds_df = spark.createDataFrame([(int(s),) for s in seeds], "seed long")
+        seed_ids = F.array(*(F.lit(int(s)).cast("long") for s in seeds))
+        # layout: the seed ids as JVM literals in one partition (no
+        # Python-worker stage reads them), not a per-vertex state vector
+        seeds_df = spark.range(0, 1, 1, 1).select(F.explode(seed_ids).alias("seed"))
         base, _ = loop.cache(
             seeds_df.crossJoin(vertex_ids(spark, n)),
             resize=False,

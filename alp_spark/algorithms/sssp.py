@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import algebra as alg
-from ..containers import DST, ID, SRC, VAL, vector_schema
+from ..containers import DST, ID, SRC, VAL, set_element
 from ..loop import Loop
 from ..operators import mxv
 
@@ -69,7 +69,7 @@ def sssp(
     with Loop(spark, "sssp") as loop:
         B, _ = loop.cache(A.select(SRC, DST, F.col(VAL).cast("double")), resize=False)
 
-        x = spark.createDataFrame([(source, 0.0)], vector_schema("double"))
+        x = set_element(spark, source, 0.0)
         changed = x
         nch = 1
         inf = F.lit(float("inf"))

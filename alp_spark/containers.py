@@ -9,6 +9,7 @@ pattern matrix (grb::Matrix<void>, base/blas2.hpp:105-107).
 Container/IO primitives from base/io.hpp (SURVEY.md §2.3) map to the
 helpers below; ``clear`` ↔ :func:`empty_vector`, ``set`` (4 overloads,
 io.hpp:857-1059) ↔ :func:`set_dense` / :func:`set_masked`,
+``setElement`` (io.hpp:1128) ↔ :func:`set_element`,
 ``buildVector`` (io.hpp:1158) ↔ :func:`build_vector`,
 ``buildMatrixUnique`` (io.hpp:1336) ↔ :func:`build_matrix`.
 """
@@ -83,6 +84,14 @@ def set_dense(spark: SparkSession, n: int, value: object) -> DataFrame:
     from .plans.partitions import vertex_ids
 
     return vertex_ids(spark, n).select(ID, F.lit(value).alias(VAL))
+
+
+def set_element(spark: SparkSession, i: int, value: object) -> DataFrame:
+    """setElement (io.hpp:1128) on an empty vector: the one entry
+    ``{i: value}``, built on the JVM from ``spark.range``, so reading it
+    runs no Python-worker stage (``build_vector``'s local list does)."""
+    # layout: one row in one partition, not an n-row state vector
+    return spark.range(i, i + 1, 1, 1).select(ID, F.lit(value).alias(VAL))
 
 
 def set_masked(

@@ -4,9 +4,11 @@ pages --extract_links_udf--> (src_url, dst_url) --id dictionary join-->
 (src, dst) long ids, deduplicated, hash-partitioned by src (the analog of
 buildMatrixUnique's bucket ingest, reference/matrix.hpp:245-291).
 
-Scale notes: the two dictionary joins are plain shuffle hash joins on the
-url key (broadcast when the dictionary is small); dedup happens in the
-same shuffle as the final src partition. Dangling link targets (urls
+Scale notes: both dictionary joins go through the one broadcast gate
+(:func:`~alp_spark.operators.blas2.broadcast_if_fits`) with the
+dictionary's driver-known size ``n``: broadcast up to its bound, plain
+shuffle joins on the url key above it; dedup happens in the same
+shuffle as the final src partition. Dangling link targets (urls
 never crawled) are dropped by the inner join — matching the closed-world
 vertex set the reference requires.
 """
@@ -16,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.blas2 import broadcast_if_fits
 from .extract import extract_links_udf
 from .ids import assign_contiguous_ids
 
@@ -32,15 +35,14 @@ def extract_edges(pages: DataFrame) -> DataFrame:
 
 def build_edge_table(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Full ingest: returns (edges(src,dst), id_map(url,id)), self-loops
-    dropped. ``id_map`` is :func:`assign_contiguous_ids`' persisted
-    frame."""
-    id_map = assign_contiguous_ids(pages.select("url"))
+    dropped. ``id_map`` is :func:`assign_contiguous_ids`' map."""
+    id_map, n = assign_contiguous_ids(pages.select("url"))
     raw = extract_edges(pages)
     src_ids = id_map.select(F.col("url").alias("src_url"), F.col("id").alias("src"))
     dst_ids = id_map.select(F.col("url").alias("dst_url"), F.col("id").alias("dst"))
     edges = (
-        raw.join(src_ids, on="src_url")
-        .join(dst_ids, on="dst_url")
+        raw.join(broadcast_if_fits(src_ids, n), on="src_url")
+        .join(broadcast_if_fits(dst_ids, n), on="dst_url")
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
